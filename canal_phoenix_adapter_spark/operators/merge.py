@@ -102,13 +102,6 @@ def _key_changed_sql(
     return "(" + (" OR ".join(terms) or "false") + ")"
 
 
-def key_changed_expr(
-    columns: list[str], pk: list[str], old_prefix: str = "old_"
-) -> F.Column:
-    """Column form of _key_changed_sql (one definition — see _bq)."""
-    return F.expr(_key_changed_sql(columns, pk, old_prefix))
-
-
 def _key_entries_sql(
     columns: list[str], pk: list[str], op_col: str, old_prefix: str,
     field_prefix: str, with_create_flag: bool,
@@ -182,6 +175,20 @@ def touched_keys(
     return keys.dropDuplicates() if distinct else keys
 
 
+def applicable_changes(changes: DataFrame, op_col: str = "op") -> DataFrame:
+    """The rows of a change batch the merge applies: INSERT, UPDATE and
+    DELETE. Unrecognized event types are logged-and-ignored by the
+    reference (PhoenixSyncService.sync else-branch), never applied as
+    deletes; DDL rows travel the schema_sync channel, not the merge.
+    One combined filter: Catalyst merges them anyway, and the driver
+    pays one analysis instead of two per epoch (see _bq)."""
+    keep = (f"upper({_bq(op_col)}) IN "
+            f"('{OP_INSERT}', '{OP_UPDATE}', '{OP_DELETE}')")
+    if "is_ddl" in changes.columns:
+        keep += " AND NOT coalesce(`is_ddl`, false)"
+    return changes.where(keep)
+
+
 def last_truncate_seq(changes: DataFrame, seq_col: str = "seq", op_col: str = "op"):
     """Seq of the last TRUNCATE in the batch, or None. A TRUNCATE wipes
     state and all earlier events (C7, PhoenixSyncService.java:505-513
@@ -208,6 +215,37 @@ def _image_cols(
         c for c in columns
         if c not in (seq_col, op_col, "is_ddl") and c not in old_keys
     ]
+
+
+def image_schema(
+    changes: T.StructType, pk: list[str], seq_col: str = "seq",
+    op_col: str = "op", old_prefix: str = "old_",
+) -> T.StructType:
+    """Schema of the survivor rows merge_cdc builds from a change batch
+    of schema ``changes``: the pk columns, then the other image
+    columns, with the batch's types. Lets a caller that has not built
+    the collapse (the pruned state store) ask healed_schema whether a
+    batch would change the state schema."""
+    fields = {f.name: f for f in changes.fields}
+    image = _image_cols(changes.names, pk, seq_col, op_col, old_prefix)
+    return T.StructType(
+        [fields[k] for k in pk] + [fields[c] for c in image if c not in pk]
+    )
+
+
+def healed_schema(state: T.StructType, images: T.StructType) -> T.StructType:
+    """The state schema after merging row images of schema ``images``:
+    the UNION schema, never the batch's. Image types win for common
+    columns (the heal direction), image-only columns are added, and
+    STATE-ONLY columns SURVIVE — a batch whose image stopped carrying
+    a column must not wipe it from every untouched row (schema_sync
+    gates real drops behind its own flag). Names match
+    case-insensitively."""
+    names = {f.name.lower() for f in images.fields}
+    return T.StructType(
+        list(images.fields)
+        + [f for f in state.fields if f.name.lower() not in names]
+    )
 
 
 def collapse_changes(
@@ -349,16 +387,7 @@ def merge_cdc(
             # type (long, timestamp, ...) F.lit preserves exactly.
             changes = changes.where(F.col(seq_col) > F.lit(trunc_seq))
             state = None  # truncate wipes accumulated state (C7)
-    # Unrecognized event types are logged-and-ignored by the reference
-    # (PhoenixSyncService.sync else-branch), never applied as deletes;
-    # DDL rows travel the schema_sync channel, not the merge. One
-    # combined filter (Catalyst merges them anyway; the driver pays
-    # one analysis instead of two per epoch — see _bq).
-    keep = (f"upper({_bq(op_col)}) IN "
-            f"('{OP_INSERT}', '{OP_UPDATE}', '{OP_DELETE}')")
-    if "is_ddl" in changes.columns:
-        keep += " AND NOT coalesce(`is_ddl`, false)"
-    changes = changes.where(keep)
+    changes = applicable_changes(changes, op_col)
 
     last = collapse_changes(changes, pk, seq_col, op_col, old_prefix)
     image_cols = _image_cols(changes.columns, pk, seq_col, op_col, old_prefix)
@@ -373,41 +402,43 @@ def merge_cdc(
     if skip_missing:
         survivors = align_to_schema(survivors, state.schema)
     else:
-        # Heal to the UNION schema, never down to the batch's: batch
-        # types win for common columns (the heal direction), batch-new
-        # columns are added to state as NULLs, and STATE-ONLY columns
-        # SURVIVE — a batch whose image stopped carrying a column must
-        # not wipe it from every untouched row (schema_sync gates real
-        # drops behind its own flag). Survivor rows take NULL for
-        # state-only columns: these are full-row images (the Canal
-        # contract), not partial updates.
-        surv_names = {f.name.lower() for f in survivors.schema.fields}
-        union_schema = T.StructType(
-            list(survivors.schema.fields)
-            + [f for f in state.schema.fields if f.name.lower() not in surv_names]
-        )
+        # Heal to the union schema (healed_schema). Survivor rows take
+        # NULL for state-only columns: these are full-row images (the
+        # Canal contract), not partial updates.
+        union_schema = healed_schema(state.schema, survivors.schema)
         state = align_to_schema(state, union_schema)
         survivors = align_to_schema(survivors, union_schema)
     # Touched keys come from the PRE-collapse batch (touched_keys):
     # same key set as `last` by construction (shared death-row
     # predicate, pinned by test), but the broadcast-build job now runs
     # scan -> key project instead of re-executing the whole collapse
-    # (shuffle + max_by over the row images) a second time — r14,
-    # guide §2.3 "shuffle keys, not payloads". On the broadcast route
-    # the key MULTISET broadcasts as-is (distinct=False): LEFT ANTI
-    # probes existence only, duplicate build rows cannot change it,
+    # (shuffle + max_by over the row images) a second time: shuffle
+    # keys, not payloads. On the broadcast route the key MULTISET
+    # broadcasts as-is (distinct=False): LEFT ANTI probes existence
+    # only, duplicate build rows cannot change it,
     # and the memory envelope is already row-count-gated by the
     # caller's broadcast_changes heuristic — dropping the distinct
     # removes an Exchange + two HashAggregates (one whole AQE stage
-    # barrier) from every streaming epoch (r15). The shuffle route
+    # barrier) from every streaming epoch. The shuffle route
     # keeps the distinct: there the dedup shrinks the shuffled key
     # bytes by the batch's per-key churn factor.
     touched = touched_keys(changes, pk, op_col, old_prefix,
                            distinct=not broadcast_changes)
-    if broadcast_changes:
-        touched = F.broadcast(touched)
-    untouched = state.join(touched, on=pk, how="left_anti")
-    return untouched.unionByName(survivors)
+    return replace_keys(state, touched, survivors, pk, broadcast_changes)
+
+
+def replace_keys(
+    state: DataFrame, keys: DataFrame, rows: DataFrame, pk: list[str],
+    broadcast: bool = True,
+) -> DataFrame:
+    """``state`` minus every row whose key is in ``keys``, plus ``rows``
+    — the apply step shared by merge_cdc and the pruned state store's
+    merge-on-read of its delta. ``broadcast`` hints ``keys`` as the
+    build side of the LEFT ANTI join, so the state side is filtered in
+    place and never shuffled."""
+    if broadcast:
+        keys = F.broadcast(keys)
+    return state.join(keys, on=pk, how="left_anti").unionByName(rows)
 
 
 def keep_last(

@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 from contextlib import contextmanager
 from typing import NamedTuple
 
@@ -26,10 +27,16 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from canal_phoenix_adapter_spark.config import MappingConfig
+from canal_phoenix_adapter_spark.functions.hashing import bq as _bq
 from canal_phoenix_adapter_spark.operators.merge import (
     _NO_PRESCAN,
+    applicable_changes,
+    collapse_changes,
+    healed_schema,
+    image_schema,
     merge_cdc,
     old_key_exprs,
+    replace_keys,
     truncate_seq_expr,
 )
 from canal_phoenix_adapter_spark.sources.events import (
@@ -110,23 +117,21 @@ class _CommitPointer:
         pk: list[str],
         version: int,
         epoch_id: int,
-    ) -> tuple[DataFrame, set[str] | None]:
+    ) -> tuple[set[str] | None, set[str] | None]:
         """The store's epoch-commit strategy, called by
         apply_cdc_epoch UNDER the commit lock; owns the basis READ as
         well as the write (the pruned store must never pay a
-        full-state read for a bucket-local epoch). Default:
-        full-snapshot read-merge-rewrite. Returns (new state, prior
-        lowercase column set or None) for the schema-change hook — or
-        (None, None) for an empty batch: the store owns the emptiness
-        check because the pruned store learns it for free from its
-        pre-scan (a separate isEmpty() was one redundant job/epoch).
+        full-state read for a delta or fold epoch). Default:
+        full-snapshot read-merge-rewrite. Returns the lowercase column
+        sets (committed state, prior state or None) for the
+        schema-change hook — or (None, None) for an empty batch: the
+        store owns the emptiness check because the pruned store learns
+        it for free from its pre-scan.
 
         The plain store's pre-scan mirrors the pruned one at smaller
         width: ONE aggregation job yields both the emptiness check and
-        the TRUNCATE seq (r14 — previously isEmpty() + merge_cdc's
-        truncate re-scan cost two jobs per epoch over the same batch;
-        assumes apply_cdc_epoch's seq/op column contract, like
-        PrunedParquetStateStore._scan_batch)."""
+        the TRUNCATE seq (assumes apply_cdc_epoch's seq/op column
+        contract, like PrunedParquetStateStore._scan_batch)."""
         row = batch_df.agg(
             F.count(F.lit(1)).alias("n"),
             truncate_seq_expr("seq", "op").alias("tr"),
@@ -140,7 +145,7 @@ class _CommitPointer:
     def _merge_commit_nonempty(
         self, batch_df: DataFrame, pk: list[str], version: int, epoch_id: int,
         trunc_seq: object = _NO_PRESCAN, broadcast_changes: bool = True,
-    ) -> tuple[DataFrame, set[str] | None]:
+    ) -> tuple[set[str] | None, set[str] | None]:
         """Full-snapshot read-merge-rewrite for a batch the caller has
         PROVEN non-empty — the pruned store's TRUNCATE and heal/DDL
         fallbacks enter here so neither the pre-scan's count nor its
@@ -152,14 +157,14 @@ class _CommitPointer:
         documented operating envelope); the pruned store's fallback
         paths forward their measured heuristic so a backfill-sized
         TRUNCATE/heal epoch does not pin millions of touched keys in
-        every executor (r10 review)."""
+        every executor."""
         state = self.read()
         prev_cols = None if state is None else {c.lower() for c in state.columns}
         new_state = merge_cdc(state, batch_df, pk, old_prefix="old_",
                               known_trunc_seq=trunc_seq,
                               broadcast_changes=broadcast_changes)
         self._write_unlocked(new_state, version, epoch_id=epoch_id)
-        return new_state, prev_cols
+        return {c.lower() for c in new_state.columns}, prev_cols
 
 
 def _as_nullable(dt: T.DataType) -> T.DataType:
@@ -333,8 +338,6 @@ class ParquetStateStore(_CommitPointer):
         the pruned versions. Call it from foreachBatch cadence or a
         janitor cron; it only touches strictly-older snapshot dirs, so
         it is safe concurrent with readers of _CURRENT."""
-        import shutil
-
         cur = self.current_version()
         if cur is None:
             return []
@@ -349,38 +352,64 @@ class ParquetStateStore(_CommitPointer):
         return doomed
 
 
+def _crashpoint(name: str) -> None:
+    """Fault-injection seam at a durable step of a pruned-store commit
+    (``delta_written``, ``buckets_written``, ``manifest_written``). A
+    no-op in production; tests replace it with a function that raises
+    at a chosen step, then replay the epoch."""
+
+
+# A normal epoch folds its delta into the base buckets once (delta rows
+# + batch rows) would pass this fraction of the base's recorded rows (or
+# the store's broadcast_threshold_rows, whichever is smaller). Measured
+# with tools/epoch_smoke.py delta (SCALE.md): up to this size a delta
+# epoch stays 2-4x cheaper than a fold and the keyed read barely moves.
+DELTA_FOLD_FRACTION = 0.25
+
+
 class PrunedParquetStateStore(ParquetStateStore):
-    """ParquetStateStore variant whose epoch commit is O(touched
-    buckets), not O(state) — the r4 verdict's one remaining 100 TB
-    scale-killer (the reference's JDBC sink only ever writes changed
-    rows, support/BatchExecutor.java:60-75; the full-snapshot rewrite
-    per epoch had no analogue there). Cost model + measurements:
-    SCALE.md round-5 section / tools/epoch_smoke.py.
+    """ParquetStateStore variant whose normal epoch commit is O(batch),
+    not O(state): it writes only the rows the epochs changed, like the
+    reference's JDBC sink (support/BatchExecutor.java:60-75).
 
-    Layout: state hash-bucketed on the PK; a version dir holds
-    ``__bucket=K`` parquet dirs for ONLY the buckets its epoch
-    rewrote, plus ``_manifest.json`` mapping EVERY bucket to its
-    owning version (and the state schema). Reads assemble explicit
-    paths from the manifest (no partition discovery, no footer
-    inference); an epoch collects its touched buckets (≤ n_buckets
-    ints), merges only those dirs, writes them + a new manifest whose
-    untouched entries keep their old owners. With batch keys ≪ state
-    keys, per-epoch I/O is ~constant as state grows. (An earlier
-    hardlink-forward design paid O(n_buckets) links/epoch — dominant
-    past ~1k buckets — and has no object-store analogue; manifests
-    are the Delta/Iceberg move.)
+    Layout: the BASE is hash-bucketed on the PK into ``__bucket=K``
+    parquet dirs; ``v{N}/_manifest.json`` maps every bucket to the
+    version dir that owns it, records the state schema and each
+    bucket's row count, and may name one DELTA. The delta is one
+    parquet dir, ``v{N}/_delta``, holding the cumulative net effect of
+    the epochs since the last fold: one row per key with the state
+    columns, a create/delete flag (``__is_create``) and an epoch-major
+    ordering key (``__seq``). Reads apply it on the fly: base buckets
+    LEFT ANTI a broadcast of the delta keys, plus the delta's creates
+    (no shuffle; every path comes from the manifest, so no partition
+    discovery or footer inference).
 
-    TRUNCATE and schema-changing heal/DDL epochs fall back to the
-    full rewrite (they cannot be bucket-local; one schema per
-    manifest keeps reads merge-free). Crash-safety is the inherited
-    pointer contract: static overwrite clears a crashed attempt's
-    orphan (stale manifest included), the manifest lands before the
-    repoint, replayed committed epochs no-op on the watermark.
-    ``prune`` GCs bucket dirs by refcount across RETAINED manifests,
-    so time travel within retention survives dir sharing."""
+    Epoch paths (the one-job pre-scan picks one):
+      * normal: collapse (previous delta ∪ batch) into a new delta,
+        write it, then the manifest, then repoint. No bucket dir is
+        read or written.
+      * fold: once delta + batch rows would pass DELTA_FOLD_FRACTION of
+        the base rows or ``broadcast_threshold_rows`` (this also catches
+        backfill-sized batches), merge (delta ∪ batch) into only the
+        buckets they touch, write those, and publish a manifest without
+        a delta. The threshold also picks the fold's merge route, and
+        since no delta outgrows it, the read's broadcast of the delta
+        keys stays within it too.
+      * TRUNCATE and schema-changing heal/DDL epochs: full rewrite of
+        base plus delta (one schema per manifest).
+    ``erase_keys`` commits through the fold path, so an erased key can
+    survive in neither the base nor the delta.
+
+    Crash safety is the inherited pointer contract: an epoch writes
+    only into its own version dir, above _CURRENT, and clears a
+    crashed attempt's orphan there first; the manifest lands before
+    the repoint; replayed committed epochs no-op on the watermark.
+    ``prune`` GCs bucket and delta dirs by reference from RETAINED
+    manifests, so time travel within retention survives dir sharing."""
 
     BUCKET = "__bucket"
     MANIFEST = "_manifest.json"
+    DELTA = "_delta"
 
     def __init__(self, spark: SparkSession, path: str, pk: list[str],
                  n_buckets: int = 64,
@@ -388,13 +417,11 @@ class PrunedParquetStateStore(ParquetStateStore):
         super().__init__(spark, path)
         self.pk = list(pk)
         self.n_buckets = n_buckets
-        # Merge-route cutover: at or below the threshold the collapsed
-        # touched-key set is broadcast (state never shuffles — the
-        # normal CDC case); above it the merge runs broadcast-free —
-        # a backfill-sized epoch must not pin the key set in every
-        # executor (the reference's apply cost never depends on batch
-        # size beyond rows written, support/BatchExecutor.java:60-75).
-        # Rows, not distinct keys: the pre-scan yields it for free.
+        # Fold-route cutover: at or below the threshold the change
+        # set's key multiset is broadcast and state never shuffles;
+        # above it the merge runs broadcast-free, so a backfill-sized
+        # epoch does not pin its key set in every executor. Rows, not
+        # distinct keys: the pre-scan and the manifest yield them free.
         self.broadcast_threshold_rows = broadcast_threshold_rows
         self._manifest_cache: dict[int, dict] = {}
 
@@ -415,10 +442,11 @@ class PrunedParquetStateStore(ParquetStateStore):
         return os.path.join(self.path, f"v{version}", self.MANIFEST)
 
     def _manifest(self, version: int) -> dict:
-        """{"schema": StructType-json, "buckets": {bucket_id: owner
-        version}} for a COMMITTED version. Memoized: committed
-        manifests are immutable (orphan overwrite only targets
-        versions above _CURRENT)."""
+        """{"schema", "n_buckets", "buckets": {bucket: owner version},
+        "rows": {bucket: row count}, "delta": None or {"owner",
+        "schema", "rows", "buckets"}} for a COMMITTED version.
+        Memoized: committed manifests are immutable (orphan overwrite
+        only targets versions above _CURRENT)."""
         m = self._manifest_cache.get(version)
         if m is None:
             try:
@@ -441,6 +469,10 @@ class PrunedParquetStateStore(ParquetStateStore):
                 "schema": raw["schema"],
                 "n_buckets": int(raw.get("n_buckets", self.n_buckets)),
                 "buckets": {int(k): int(v) for k, v in raw["buckets"].items()},
+                # a manifest without counts reads as an empty base: its
+                # epochs fold, and each fold records the counts it wrote
+                "rows": {int(k): int(v) for k, v in raw.get("rows", {}).items()},
+                "delta": raw.get("delta"),
             }
             if len(self._manifest_cache) > 8:
                 self._manifest_cache.clear()
@@ -448,15 +480,15 @@ class PrunedParquetStateStore(ParquetStateStore):
         return m
 
     def _check_modulus(self, manifest: dict) -> None:
-        """Guard for BUCKET-LOCAL operations (pruned merge, pruned
-        erasure): a handle whose n_buckets differs from the manifest's
-        would compute touched-bucket ids that miss the on-disk dirs
-        entirely — keys would read as absent and epochs would
-        silently duplicate them. Reads and full-rewrite fallbacks are
+        """Guard for BUCKET-LOCAL operations (delta, fold, erasure): a
+        handle whose n_buckets differs from the manifest's would
+        compute touched-bucket ids that miss the on-disk dirs entirely
+        — keys would read as absent and epochs would silently
+        duplicate them. Reads and full-rewrite fallbacks are
         modulus-agnostic (dirs come from the manifest; a full rewrite
         re-buckets consistently and records its own modulus), so the
-        check lives only on the dangerous paths. ``rebucket``
-        migrates deliberately."""
+        check lives only on the dangerous paths. ``rebucket`` migrates
+        deliberately."""
         if manifest["n_buckets"] != self.n_buckets:
             raise ValueError(
                 f"store was written with n_buckets={manifest['n_buckets']} "
@@ -465,18 +497,21 @@ class PrunedParquetStateStore(ParquetStateStore):
             )
 
     def _write_manifest(
-        self, version: int, schema: T.StructType, buckets: dict[int, int]
+        self, version: int, schema: T.StructType, buckets: dict[int, int],
+        rows: dict[int, int], delta: dict | None = None,
     ) -> None:
         tmp = self._manifest_path(version) + ".tmp"
         os.makedirs(os.path.dirname(tmp), exist_ok=True)
+        body = {"schema": schema.jsonValue(),
+                "n_buckets": self.n_buckets,
+                "buckets": {str(k): v for k, v in buckets.items()},
+                "rows": {str(k): v for k, v in rows.items()}}
+        if delta is not None:
+            body["delta"] = delta
         with open(tmp, "w", encoding="utf-8") as f:
-            json.dump(
-                {"schema": schema.jsonValue(),
-                 "n_buckets": self.n_buckets,
-                 "buckets": {str(k): v for k, v in buckets.items()}},
-                f,
-            )
+            json.dump(body, f)
         os.replace(tmp, self._manifest_path(version))
+        _crashpoint("manifest_written")
 
     def rebucket(self, n_buckets: int) -> int:
         """Migrate the store to a new bucket count (state grew past
@@ -508,6 +543,9 @@ class PrunedParquetStateStore(ParquetStateStore):
     def _bucket_dir(self, owner: int, bucket: int) -> str:
         return os.path.join(self.path, f"v{owner}", f"{self.BUCKET}={bucket}")
 
+    def _delta_dir(self, owner: int) -> str:
+        return os.path.join(self.path, f"v{owner}", self.DELTA)
+
     def _owned_buckets(self, version: int) -> dict[int, int]:
         """Buckets whose data dir a version's own directory holds."""
         vdir = os.path.join(self.path, f"v{version}")
@@ -525,12 +563,24 @@ class PrunedParquetStateStore(ParquetStateStore):
                     continue
         return out
 
+    @staticmethod
+    def _dir_rows(path: str) -> int:
+        """Rows in a parquet dir this store just wrote, from the file
+        footers: driver-side metadata reads, no Spark job."""
+        import pyarrow.parquet as pq
+
+        return sum(
+            pq.read_metadata(os.path.join(path, f)).num_rows
+            for f in os.listdir(path) if f.endswith(".parquet")
+        )
+
     # -- reads ---------------------------------------------------------------
 
     def _read_buckets(self, manifest: dict, buckets=None) -> DataFrame:
         """Assemble a DataFrame from explicit bucket-dir paths (all
         buckets, or a subset) with the manifest's schema — never a
-        partition discovery over the version dir."""
+        partition discovery over the version dir. Base rows only: see
+        _with_delta."""
         entries = manifest["buckets"]
         if buckets is not None:
             entries = {b: o for b, o in entries.items() if b in buckets}
@@ -540,9 +590,36 @@ class PrunedParquetStateStore(ParquetStateStore):
             return self.spark.createDataFrame([], schema)
         return self.spark.read.schema(schema).parquet(*dirs)
 
+    def _with_delta(self, base: DataFrame, manifest: dict) -> DataFrame:
+        """Merge-on-read: ``base`` (every bucket, or any subset holding
+        all of the delta's buckets) with the manifest's delta applied —
+        base LEFT ANTI a broadcast of the delta keys, plus the delta's
+        creates. The delta is stored aligned to the manifest schema."""
+        d = manifest["delta"]
+        if d is None:
+            return base
+        delta = self._read_delta(d)
+        creates = delta.where("__is_create = 1").select(*base.columns)
+        # the fold bound keeps a delta at or below the threshold; the
+        # check covers a delta written by a handle with a larger one
+        return replace_keys(base, delta.select(*self.pk), creates, self.pk,
+                            broadcast=d["rows"] <= self.broadcast_threshold_rows)
+
+    def _read_delta(self, d: dict) -> DataFrame:
+        # the part files, not the dir: Spark treats a `_`-prefixed path
+        # as hidden and warns on every read that names one directly
+        path = self._delta_dir(d["owner"])
+        files = [os.path.join(path, f) for f in sorted(os.listdir(path))
+                 if f.endswith(".parquet")]
+        return self.spark.read.schema(T.StructType.fromJson(d["schema"])) \
+            .parquet(*files)
+
+    def _read_manifest(self, manifest: dict) -> DataFrame:
+        return self._with_delta(self._read_buckets(manifest), manifest)
+
     def read(self) -> DataFrame | None:
         v = self.current_version()
-        return None if v is None else self._read_buckets(self._manifest(v))
+        return None if v is None else self._read_manifest(self._manifest(v))
 
     def read_version(self, version: int) -> DataFrame:
         cur = self.current_version()
@@ -550,16 +627,16 @@ class PrunedParquetStateStore(ParquetStateStore):
             self._manifest_path(version)
         ):
             self._raise_not_retained(version, cur)
-        return self._read_buckets(self._manifest(version))
+        return self._read_manifest(self._manifest(version))
 
     # -- writes --------------------------------------------------------------
 
     def _write_unlocked(
         self, df: DataFrame, version: int, epoch_id: int | None = None
     ) -> None:
-        """Full rewrite — bootstrap, erasure, and the TRUNCATE/
+        """Full rewrite — bootstrap, rebucket, and the TRUNCATE/
         schema-change fallbacks land here: the new version owns every
-        surviving bucket."""
+        surviving bucket and carries no delta."""
         cur = self.current_version()
         if cur is not None:
             # publish-direction twin of the plain store's guard: over a
@@ -572,8 +649,15 @@ class PrunedParquetStateStore(ParquetStateStore):
         if self.BUCKET in df.columns:
             raise ValueError(f"state may not carry a {self.BUCKET} column")
         self._write_bucket_dirs(df, version)
-        self._write_manifest(version, df.schema, self._owned_buckets(version))
+        rows = self._owned_rows(version)
+        self._write_manifest(version, df.schema, dict.fromkeys(rows, version),
+                             rows)
         self._repoint(version, epoch_id)
+
+    def _owned_rows(self, version: int) -> dict[int, int]:
+        """Row count of each bucket dir a version's own directory holds."""
+        return {b: self._dir_rows(self._bucket_dir(version, b))
+                for b in self._owned_buckets(version)}
 
     def _write_bucket_dirs(
         self, df: DataFrame, version: int, n_parts: int | None = None
@@ -582,27 +666,19 @@ class PrunedParquetStateStore(ParquetStateStore):
         the version dir (static overwrite clears a crashed attempt's
         orphan first). The bucket-column repartition is load-bearing:
         without it every write task emits a file into every bucket dir
-        it holds rows for — O(tasks x buckets) tiny files per version,
-        measured 4-5x the whole epoch wall. ``n_parts`` sizes that
-        shuffle (the pruned merge passes |touched|: n_buckets tasks
-        for a 200-bucket epoch is pure scheduler overhead, and the
-        earlier 2x slack measurably bought nothing — SCALE.md r6).
-        The count stays PINNED (REPARTITION_BY_NUM): the r14
-        optimization pass measured the AQE-coalescible column-only
-        form at +20% per drive (interleaved A/B, bands 26.1-30.3s vs
-        21.7-24.4s) — the extra AQE stage round-trip per epoch costs
-        more than |touched| tiny parallel tasks save."""
+        it holds rows for — O(tasks x buckets) tiny files per version.
+        ``n_parts`` sizes that shuffle (a fold passes |touched|). The
+        count stays pinned (REPARTITION_BY_NUM): the AQE-coalescible
+        column-only form measured slower per drive (OPTIMIZATION_r14.md)."""
         target = os.path.join(self.path, f"v{version}")
         # Sort key is (__bucket, *pk), NOT bare pk: the V1 write path
         # requires its output ordered by the partition column and
         # inserts its own Sort(__bucket) when the child ordering does
-        # not satisfy it — under which the optimizer ELIMINATED a bare
-        # pk sort as redundant, so files were written in arbitrary pk
-        # order (verified on-disk, r15: 32/32 bucket dirs unsorted).
-        # Prefixing the bucket satisfies the writer's requirement (no
-        # second sort is inserted) and makes the pk-clustered layout —
-        # parquet min/max row-group skipping on key lookups — actually
-        # materialize. Same sort count, strictly better file layout.
+        # not satisfy it — under which the optimizer eliminates a bare
+        # pk sort as redundant and files land in arbitrary pk order.
+        # Prefixing the bucket satisfies the writer (no second sort)
+        # and makes the pk-clustered layout — parquet min/max
+        # row-group skipping on key lookups — actually materialize.
         (
             df.withColumn(self.BUCKET, self._bucket_of([F.col(k) for k in self.pk]))
             .repartition(n_parts or self.n_buckets, F.col(self.BUCKET))
@@ -612,6 +688,7 @@ class PrunedParquetStateStore(ParquetStateStore):
             .partitionBy(self.BUCKET)
             .parquet(target)
         )
+        _crashpoint("buckets_written")
 
     def _scan_batch(
         self, batch_df: DataFrame, pk: list[str]
@@ -622,13 +699,13 @@ class PrunedParquetStateStore(ParquetStateStore):
         rows' OLD key bucket (the death row lands there — same
         coalesce(old, new) key as collapse_changes). Folding the
         TRUNCATE pre-scan, the emptiness check (count == 0) and the
-        broadcast-heuristic row count into the same pass keeps the
+        fold/broadcast row count into the same pass keeps the
         pre-scan at one job/epoch; assumes apply_cdc_epoch's seq/op
         column contract."""
         # truncate_seq_expr / old_key_exprs come from merge.py — the
         # pre-scan is AUTHORITATIVE (check_truncate=False downstream),
         # so a hand-maintained copy drifting from collapse_changes
-        # would be unguarded (r10 review)
+        # would be unguarded
         aggs = [
             F.collect_set(
                 self._bucket_of([F.col(k) for k in pk])
@@ -643,13 +720,45 @@ class PrunedParquetStateStore(ParquetStateStore):
         touched = set(row["nb"]) | set(row["ob"] if "ob" in row.__fields__ else [])
         return sorted(touched), row["tr"], row["n"]
 
+    @staticmethod
+    def _heals(batch_df: DataFrame, pk: list[str], schema: T.StructType) -> bool:
+        """True iff merging the batch would change the state schema
+        (merge_cdc's healed_schema differs from the manifest's by name
+        or type; column order and nullability do not count)."""
+        def by_name(s: T.StructType) -> dict:
+            return {f.name.lower(): _as_nullable(f.dataType) for f in s.fields}
+
+        healed = healed_schema(schema, image_schema(batch_df.schema, pk))
+        return by_name(healed) != by_name(schema)
+
+    def _change_set(
+        self, batch_df: DataFrame, manifest: dict, epoch_id: int
+    ) -> DataFrame:
+        """(previous delta ∪ batch) as one change batch under an
+        epoch-major ``seq`` = struct(epoch, seq): every batch row
+        orders after every delta row, whatever the source's seq. Delta
+        rows replay as INSERT (create) or DELETE events."""
+        batch = applicable_changes(batch_df).withColumn("seq", F.expr(
+            f"named_struct('e', CAST({int(epoch_id)} AS BIGINT), 's', seq)"
+        ))
+        d = manifest["delta"]
+        if d is None:
+            return batch
+        seq_t = batch_df.schema["seq"].dataType.simpleString()
+        prev = self._read_delta(d).selectExpr(
+            f"named_struct('e', __seq.e, 's', try_cast(__seq.s AS {seq_t})) AS seq",
+            "CASE WHEN __is_create = 1 THEN 'INSERT' ELSE 'DELETE' END AS op",
+            *[_bq(f.name) for f in self._schema_of(manifest).fields],
+        )
+        return batch.unionByName(prev, allowMissingColumns=True)
+
     def _merge_commit_unlocked(
         self,
         batch_df: DataFrame,
         pk: list[str],
         version: int,
         epoch_id: int,
-    ) -> tuple[DataFrame, set[str] | None]:
+    ) -> tuple[set[str] | None, set[str] | None]:
         if [k.lower() for k in pk] != [k.lower() for k in self.pk]:
             raise ValueError(
                 f"epoch pk {pk} != store bucketing pk {self.pk}: a "
@@ -663,56 +772,95 @@ class PrunedParquetStateStore(ParquetStateStore):
         touched, trunc_seq, n_rows = self._scan_batch(batch_df, pk)
         if n_rows == 0:  # empty epoch: nothing to commit
             return None, None
-        if trunc_seq is not None:
-            # TRUNCATE: every bucket changes anyway; the pre-scan
-            # already proved the batch non-empty AND found the truncate
-            # seq, so skip both the isEmpty() job and the re-scan
+        manifest = self._manifest(cur)
+        schema = self._schema_of(manifest)
+        if trunc_seq is not None or self._heals(batch_df, pk, schema):
+            # TRUNCATE / heal / DDL: full rewrite. The pre-scan already
+            # proved the batch non-empty and found the truncate seq.
             return super()._merge_commit_nonempty(
                 batch_df, pk, version, epoch_id, trunc_seq=trunc_seq,
                 broadcast_changes=n_rows <= self.broadcast_threshold_rows,
             )
-        manifest = self._manifest(cur)
         self._check_modulus(manifest)
-        prev_schema = self._schema_of(manifest)
-        prev_cols = {f.name.lower() for f in prev_schema.fields}
-        touched_state = self._read_buckets(manifest, set(touched))
-        # check_truncate=False: the TRUNCATE pre-scan already ran above
-        # (it routed to the full-rewrite fallback) — re-scanning inside
-        # merge_cdc would cost one more job per epoch for nothing
-        merged = merge_cdc(
-            touched_state, batch_df, pk, old_prefix="old_",
-            check_truncate=False,
-            broadcast_changes=n_rows <= self.broadcast_threshold_rows,
-        )
-        prev_fields = {(f.name.lower(), f.dataType) for f in prev_schema.fields}
-        new_fields = {(f.name.lower(), f.dataType) for f in merged.schema.fields}
-        if prev_fields != new_fields:
-            # heal/DDL epoch: rewrite all buckets onto the new schema
-            # (non-empty and no-TRUNCATE already proven by the pre-scan)
-            return super()._merge_commit_nonempty(
-                batch_df, pk, version, epoch_id, trunc_seq=None,
-                broadcast_changes=n_rows <= self.broadcast_threshold_rows,
+        cols = {f.name.lower() for f in schema.fields}
+        d = manifest["delta"]
+        touched = set(touched) | set(d["buckets"] if d else ())
+        n_changes = n_rows + (d["rows"] if d else 0)
+        changes = self._change_set(batch_df, manifest, epoch_id)
+        if n_changes > self._fold_bound(manifest):
+            # check_truncate=False: the pre-scan proved no TRUNCATE
+            merged = merge_cdc(
+                self._read_buckets(manifest, touched), changes, pk,
+                check_truncate=False,
+                broadcast_changes=n_changes <= self.broadcast_threshold_rows,
             )
-        self._commit_touched(merged, version, manifest, set(touched),
-                             merged.schema, epoch_id)
-        return merged, prev_cols
+            self._commit_touched(merged, version, manifest, touched, epoch_id)
+        else:
+            # normal epoch: the new delta over the unchanged base buckets
+            delta = self._write_delta(changes, pk, version, manifest, touched)
+            self._write_manifest(version, schema, manifest["buckets"],
+                                 manifest["rows"], delta)
+            self._repoint(version, epoch_id)
+        return cols, cols
+
+    def _fold_bound(self, manifest: dict) -> float:
+        """Most change rows (delta + batch) a normal epoch may carry in
+        its delta: DELTA_FOLD_FRACTION of the base's recorded rows, and
+        never more than broadcast_threshold_rows — every read broadcasts
+        the delta's keys, and each delta epoch rewrites the delta."""
+        return min(DELTA_FOLD_FRACTION * sum(manifest["rows"].values()),
+                   self.broadcast_threshold_rows)
+
+    def _write_delta(self, changes: DataFrame, pk: list[str], version: int,
+                     manifest: dict, touched: set) -> dict | None:
+        """Collapse the change set into ``v{version}/_delta``, aligned to
+        the manifest schema; returns its manifest entry (None for a
+        delta with no rows)."""
+        keys = {k.lower(): k for k in pk}
+        have = {c.lower() for c in changes.columns}
+        cols = []
+        for f in self._schema_of(manifest).fields:
+            name = f.name.lower()
+            if name in keys:
+                src = _bq("__k_" + keys[name])
+            elif name in have:
+                src = _bq(f.name)
+            else:
+                src = f"CAST(NULL AS {f.dataType.simpleString()})"
+            cols.append(f"{src} AS {_bq(f.name)}")
+        delta = collapse_changes(changes, pk).selectExpr(
+            *cols, "__is_create", "__seq"
+        )
+        target = self._delta_dir(version)
+        # a version dir above _CURRENT is a crashed attempt's orphan
+        shutil.rmtree(os.path.dirname(target), ignore_errors=True)
+        delta.write.parquet(target)
+        _crashpoint("delta_written")
+        rows = self._dir_rows(target)
+        return {"owner": version,
+                "schema": _as_nullable(delta.schema).jsonValue(),
+                "rows": rows,
+                "buckets": sorted(touched)} if rows else None
 
     def _commit_touched(self, df: DataFrame, version: int, manifest: dict,
-                        touched: set, schema, epoch_id) -> None:
-        """Bucket-local commit shared by the pruned merge and the
-        pruned erasure: write only the touched buckets (write tasks
-        sized to |touched|), publish a manifest where touched buckets
-        that survived point at this version, touched buckets with no
-        survivors drop out, and untouched buckets keep their current
-        owner; then repoint."""
+                        touched: set, epoch_id) -> None:
+        """Fold commit shared by the fold epoch and the erasure: ``df``
+        is the new content of the ``touched`` buckets (delta applied).
+        Write only those buckets (write tasks sized to |touched|),
+        publish a manifest without a delta where touched buckets that
+        survived point at this version, touched buckets with no
+        survivors drop out, and untouched buckets keep their owner;
+        then repoint."""
         self._write_bucket_dirs(
             df, version, n_parts=min(self.n_buckets, max(1, len(touched)))
         )
-        buckets = {
-            b: o for b, o in manifest["buckets"].items() if b not in touched
-        }
-        buckets.update(self._owned_buckets(version))
-        self._write_manifest(version, schema, buckets)
+        owned = self._owned_rows(version)
+        buckets = {b: o for b, o in manifest["buckets"].items()
+                   if b not in touched}
+        buckets.update(dict.fromkeys(owned, version))
+        rows = {b: n for b, n in manifest["rows"].items() if b not in touched}
+        rows.update(owned)
+        self._write_manifest(version, self._schema_of(manifest), buckets, rows)
         self._repoint(version, epoch_id)
 
     # -- retention -----------------------------------------------------------
@@ -721,26 +869,22 @@ class PrunedParquetStateStore(ParquetStateStore):
         """SNAPSHOT versions = dirs carrying a manifest. A pruned
         version's data dirs can outlive its manifest while newer
         manifests still reference them — those dirs are storage, not
-        readable snapshots, and listing them as versions once made a
-        later prune() read a deleted manifest (crash) and retain
-        half-pruned versions."""
+        readable snapshots."""
         return [
             v for v in super().versions()
             if os.path.isfile(self._manifest_path(v))
         ]
 
     def prune(self, keep_last: int = 2) -> list[int]:
-        """Retention GC at bucket-dir granularity: keep every bucket
-        dir some RETAINED version's manifest references (versions
-        share dirs across epochs), plus everything belonging to
-        orphans above _CURRENT (a mid-crash replay target). A pruned
-        version loses its manifest immediately (reported in the
-        return, like the base store) and its data dirs as soon as the
-        last referencing manifest is itself pruned — possibly on a
-        LATER call, which is why GC candidates come from the disk
-        listing, not from versions()."""
-        import shutil
-
+        """Retention GC at dir granularity: keep every bucket dir and
+        delta dir some RETAINED version's manifest references (versions
+        share dirs across epochs), plus everything belonging to orphans
+        above _CURRENT (a mid-crash replay target). A pruned version
+        loses its manifest immediately (reported in the return, like
+        the base store) and its data dirs as soon as the last
+        referencing manifest is itself pruned — possibly on a LATER
+        call, which is why GC candidates come from the disk listing,
+        not from versions()."""
         cur = self.current_version()
         if cur is None:
             return []
@@ -754,9 +898,12 @@ class PrunedParquetStateStore(ParquetStateStore):
         committed = [v for v in self.versions() if v <= cur]
         retained = set(committed[-keep_last:])
         referenced: set[tuple[int, int]] = set()
+        deltas: set[int] = set()
         for v in retained:
-            for b, o in self._manifest(v)["buckets"].items():
-                referenced.add((o, b))
+            m = self._manifest(v)
+            referenced.update((o, b) for b, o in m["buckets"].items())
+            if m["delta"] is not None:
+                deltas.add(m["delta"]["owner"])
         doomed = []
         for v in (x for x in super().versions() if x <= cur):
             if v in retained:
@@ -765,13 +912,15 @@ class PrunedParquetStateStore(ParquetStateStore):
             for b in self._owned_buckets(v):
                 if (v, b) not in referenced:
                     shutil.rmtree(self._bucket_dir(v, b), ignore_errors=True)
+            if v not in deltas:
+                shutil.rmtree(self._delta_dir(v), ignore_errors=True)
             if v in committed:
                 try:
                     os.remove(self._manifest_path(v))
                 except FileNotFoundError:
                     pass
                 doomed.append(v)
-            if not self._owned_buckets(v):
+            if not self._owned_buckets(v) and v not in deltas:
                 shutil.rmtree(vdir, ignore_errors=True)
         self._manifest_cache.clear()
         return doomed
@@ -867,17 +1016,15 @@ def apply_cdc_epoch(
         # (operators/merge.py) — no pre-align here, which would
         # re-implement merge's image-column filter and drift from it
         # (it once did, and missed is_ddl). The store picks the READ
-        # and WRITE strategy: full-snapshot rewrite by default,
-        # O(touched buckets) for PrunedParquetStateStore.
-        new_state, prev_cols = store._merge_commit_unlocked(
+        # and WRITE strategy: full-snapshot rewrite by default, a
+        # delta commit for PrunedParquetStateStore.
+        new_cols, prev_cols = store._merge_commit_unlocked(
             batch_df, pk, version, epoch_id
         )
-    if new_state is None:  # empty batch — no version committed
+    if new_cols is None:  # empty batch — no version committed
         return False
-    if on_schema_change is not None:
-        new_cols = {c.lower() for c in new_state.columns}
-        if prev_cols is None or prev_cols != new_cols:
-            on_schema_change()
+    if on_schema_change is not None and prev_cols != new_cols:
+        on_schema_change()
     return True
 
 
@@ -932,10 +1079,11 @@ def run_cdc_stream(
     O(metadata) scan — off the per-epoch path by raising it).
 
     ``state_buckets``: when set, back the stream with the
-    PrunedParquetStateStore (N PK-hash buckets) so each epoch's commit
-    rewrites only the buckets its batch touches — O(batch) per-epoch
-    I/O instead of O(state), the setting a long-lived large-state
-    deployment wants. Default keeps the plain full-snapshot store."""
+    PrunedParquetStateStore (N PK-hash buckets) so each epoch commits
+    a collapsed delta of the keys it changed, folded into the touched
+    buckets only past a size bound — O(batch) per-epoch I/O instead of
+    O(state), the setting a long-lived large-state deployment wants.
+    Default keeps the plain full-snapshot store."""
     from canal_phoenix_adapter_spark.notify import make_notifier, notify_payload
 
     pk = cfg.db_mapping.pk_source_columns()
@@ -953,8 +1101,8 @@ def run_cdc_stream(
 
     # Prune cadence counts COMMITTING epochs, not epoch ids: empty
     # epochs never prune, so "epoch_id % N == 0" starves GC whenever
-    # committing epochs systematically miss the multiples (r10 review)
-    # — snapshots then accumulate unboundedly, the exact failure
+    # committing epochs systematically miss the multiples — snapshots
+    # then accumulate unboundedly, the exact failure
     # retain_versions exists to prevent. Per-run counter: a restart
     # resets it, which at worst prunes one epoch early.
     n_committed = 0
@@ -1366,9 +1514,8 @@ def erase_keys(
     compliance deletion whose report says "done" while a dtype or key
     mismatch silently erased nothing is the worst failure mode here,
     so the count comes from a LEFT SEMI join of the same basis against
-    the same cast keyset (on the pruned store that agg is bounded to
-    the touched buckets, like the erasure itself; erase-of-absent-key
-    commits a version and reports erased=0).
+    the same cast keyset (erase-of-absent-key commits a version and
+    reports erased=0).
 
     Safe concurrent with the CDC stream, on two mechanisms. (1) The
     whole basis-read -> anti-join -> commit runs under the store's
@@ -1384,11 +1531,12 @@ def erase_keys(
     a later epoch can never overwrite the erasure snapshot's
     directory either.
 
-    On a PrunedParquetStateStore the erasure itself is bucket-pruned:
-    only buckets holding an erased key are anti-joined and rewritten,
-    the rest carry over through the manifest — a full-state rewrite
-    for a handful of subjects' keys is exactly the O(state) cost that
-    store exists to avoid.
+    On a PrunedParquetStateStore the erasure commits through the fold
+    path: only the buckets holding an erased key or a delta key are
+    read (delta applied), anti-joined and rewritten, and the new
+    manifest drops the delta — so a key living only in the delta is
+    erased and counted, and no delta row can re-add an erased key.
+    The rest of the base carries over through the manifest.
 
     NOTE: erasure of rows the CDC stream may re-deliver needs the
     upstream retention/tombstone handled too — this erases the
@@ -1430,14 +1578,17 @@ def erase_keys(
                     store._bucket_of([F.col(k) for k in pk]).alias("b")
                 ).distinct().collect()
             }
-            basis = store._read_buckets(manifest, touched)
+            if manifest["delta"] is not None:
+                touched |= set(manifest["delta"]["buckets"])
+            basis = store._with_delta(
+                store._read_buckets(manifest, touched), manifest
+            )
             # audited post-condition, bounded to the touched buckets
             erased = basis.join(
                 F.broadcast(keyset), on=pk, how="left_semi"
             ).count()
             new_t = basis.join(F.broadcast(keyset), on=pk, how="left_anti")
             store._commit_touched(new_t, new_version, manifest, touched,
-                                  store._schema_of(manifest),
                                   store.last_epoch())
         else:
             state = store.read()

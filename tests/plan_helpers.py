@@ -118,3 +118,8 @@ def has_broadcast_join(df: DataFrame) -> bool:
 def shuffle_count(df: DataFrame) -> int:
     """Number of Exchange (shuffle) operators in the plan (pre-AQE)."""
     return len(re.findall(r"\(\d+\) Exchange", explain_str(df)))
+
+
+def broadcast_count(df: DataFrame) -> int:
+    """Number of BroadcastExchange operators in the plan (pre-AQE)."""
+    return len(re.findall(r"\(\d+\) BroadcastExchange", explain_str(df)))

@@ -55,7 +55,7 @@ def main() -> None:
         t0 = time.perf_counter()
         self._write_unlocked(new_state, version, epoch_id=epoch_id)
         PHASES["write_snapshot"].append(time.perf_counter() - t0)
-        return new_state, prev_cols
+        return {c.lower() for c in new_state.columns}, prev_cols
 
     orig_unlocked = S._CommitPointer._merge_commit_unlocked
 
@@ -81,12 +81,12 @@ def main() -> None:
     S._CommitPointer._merge_commit_nonempty = nonempty
     S.PrunedParquetStateStore._scan_batch = timed(
         "pruned_prescan", S.PrunedParquetStateStore._scan_batch)
-    orig_commit_touched = S.PrunedParquetStateStore._commit_touched
-    S.PrunedParquetStateStore._commit_touched = timed(
-        "pruned_commit_touched", orig_commit_touched)
-    orig_read_buckets = S.PrunedParquetStateStore._read_buckets
-    S.PrunedParquetStateStore._read_buckets = timed(
-        "pruned_read_buckets", orig_read_buckets)
+    for name, attr in (("pruned_write_delta", "_write_delta"),
+                       ("pruned_fold_commit", "_commit_touched"),
+                       ("pruned_read_buckets", "_read_buckets"),
+                       ("pruned_manifest", "_write_manifest")):
+        setattr(S.PrunedParquetStateStore, attr,
+                timed(name, getattr(S.PrunedParquetStateStore, attr)))
 
     orig_apply = S.apply_cdc_epoch
 

@@ -22,16 +22,19 @@ KEYS = st.integers(min_value=1, max_value=4)
 VALS = st.integers(min_value=0, max_value=99)
 
 
+OPS = ["INSERT", "UPDATE", "UPDATE", "DELETE", "TRUNCATE"]
+# the store properties draw TRUNCATE rarely: a TRUNCATE epoch takes the
+# full-rewrite path, so the default mix would leave few delta epochs
+STORE_OPS = ["INSERT", "INSERT", "UPDATE", "UPDATE", "UPDATE", "DELETE",
+             "DELETE", "INSERT", "UPDATE", "DELETE", "UPDATE", "TRUNCATE"]
+
+
 @st.composite
-def events(draw):
+def events(draw, ops=tuple(OPS)):
     n = draw(st.integers(min_value=1, max_value=18))
     out = []
     for seq in range(n):
-        op = draw(
-            st.sampled_from(
-                ["INSERT", "UPDATE", "UPDATE", "DELETE", "TRUNCATE"]
-            )
-        )
+        op = draw(st.sampled_from(ops))
         if op == "TRUNCATE":
             out.append((seq, op, None, None, None))
             continue
@@ -377,12 +380,37 @@ def test_asof_join_mixed_temporal_matches_pandas(spark, tables):
     assert got == expect
 
 
+# Fold bounds the pruned-store properties draw from: 0 folds every
+# epoch, 1e9 never folds, 3 (the states hold at most 5 keys) mixes
+# delta and fold epochs in one run.
+FOLD_FRACTIONS = [0.0, 3.0, 1e9]
+
+
+def _epoch_frame(spark, ep, heal):
+    """One epoch's batch; a ``heal`` epoch's image carries an extra
+    ``tag`` column, so the stores take their schema-heal path."""
+    schema = "seq long, op string, id long, val long, old_id long"
+    if not heal:
+        return spark.createDataFrame(ep, schema)
+    rows = [(*r, None if r[3] is None else f"t{r[3]}") for r in ep]
+    return spark.createDataFrame(rows, schema + ", tag string")
+
+
+def _store_state(store):
+    df = store.read()
+    if df is None:
+        return None
+    cols = sorted(df.columns)
+    return sorted((tuple(r[c] for c in cols) for r in df.collect()),
+                  key=repr)
+
+
 @settings(
-    max_examples=6,
+    max_examples=8,
     deadline=None,
     suppress_health_check=[HealthCheck.too_slow],
 )
-@given(evts=events(), data=st.data())
+@given(evts=events(tuple(STORE_OPS)), data=st.data())
 def test_pruned_store_epochs_equal_full_store(spark, evts, data, tmp_path_factory):
     """Store-equivalence under RANDOM epoch sequences (r5): any event
     log (insert/update/PK-change/delete/truncate), split at any epoch
@@ -392,10 +420,15 @@ def test_pruned_store_epochs_equal_full_store(spark, evts, data, tmp_path_factor
     last epoch (crash-after-commit) and a pointer-rollback replay
     (crash-before-commit). The drawn broadcast threshold forces the
     pruned store onto either merge route — key-set broadcast or the
-    broadcast-free huge-batch path (r6 task 5): both must land the
-    same state as the full store, replays included. The
-    fixed-scenario twins live in test_streaming.py; this closes the
-    input-shape gap."""
+    broadcast-free huge-batch path: both must land the same state as
+    the full store, replays included. The drawn fold bound sends the
+    pruned epochs down the delta path, the fold path or a mix, and a
+    drawn epoch carries an extra column (heal path); TRUNCATE events
+    take the full-rewrite path. The fixed-scenario twins live in
+    test_streaming.py; this closes the input-shape gap."""
+    from unittest import mock
+
+    from canal_phoenix_adapter_spark.streaming import stream as stream_mod
     from canal_phoenix_adapter_spark.streaming.stream import (
         ParquetStateStore,
         PrunedParquetStateStore,
@@ -405,62 +438,54 @@ def test_pruned_store_epochs_equal_full_store(spark, evts, data, tmp_path_factor
     cuts = data.draw(
         st.lists(
             st.integers(min_value=1, max_value=max(1, len(evts) - 1)),
-            max_size=2, unique=True,
+            max_size=3, unique=True,
         ).map(sorted)
     )
     bounds = [0, *cuts, len(evts)]
     epochs = [evts[a:b] for a, b in zip(bounds, bounds[1:]) if b > a]
-    schema = "seq long, op string, id long, val long, old_id long"
+    heal_at = data.draw(st.sampled_from([None, *range(1, len(epochs))]),
+                        label="heal_at")
+    frames = [_epoch_frame(spark, ep, i == heal_at)
+              for i, ep in enumerate(epochs)]
 
     base = tmp_path_factory.mktemp("prop_store")
-    # 0 routes EVERY epoch through the no-broadcast merge; the huge
-    # value keeps every epoch on the broadcast route
+    # 0 routes EVERY fold through the no-broadcast merge; the huge
+    # value keeps every fold on the broadcast route
     thr = data.draw(st.sampled_from([0, 1 << 30]))
+    frac = data.draw(st.sampled_from(FOLD_FRACTIONS), label="fold_fraction")
     pruned = PrunedParquetStateStore(
         spark, str(base / "p"), ["id"], n_buckets=4,
         broadcast_threshold_rows=thr,
     )
     full = ParquetStateStore(spark, str(base / "f"))
-    for store in (pruned, full):
-        committed = []
-        for i, ep in enumerate(epochs):
-            batch = spark.createDataFrame(ep, schema)
-            committed.append(apply_cdc_epoch(store, batch, i, ["id"]))
-        # crash-after-commit: replaying the last committed epoch no-ops
-        if committed and committed[-1]:
-            last = len(epochs) - 1
-            assert apply_cdc_epoch(
-                store, spark.createDataFrame(epochs[last], schema), last, ["id"]
-            ) is False
+    with mock.patch.object(stream_mod, "DELTA_FOLD_FRACTION", frac):
+        for store in (pruned, full):
+            committed = []
+            for i, batch in enumerate(frames):
+                committed.append(apply_cdc_epoch(store, batch, i, ["id"]))
+            # crash-after-commit: replaying the last committed epoch no-ops
+            if committed and committed[-1]:
+                last = len(epochs) - 1
+                assert apply_cdc_epoch(store, frames[last], last, ["id"]) is False
 
-    def state(store):
-        df = store.read()
-        return (None if df is None
-                else sorted((r["id"], r["val"]) for r in df.collect()))
+        assert _store_state(pruned) == _store_state(full)
 
-    assert state(pruned) == state(full)
-
-    # crash-before-commit on the pruned side: roll the pointer back and
-    # replay the final epoch over its own orphan dir
-    if len(epochs) >= 2 and pruned.current_version() == len(epochs) - 1:
-        prev = len(epochs) - 2
-        pruned._repoint(prev, prev)
-        pruned._manifest_cache.clear()
-        assert apply_cdc_epoch(
-            pruned,
-            spark.createDataFrame(epochs[-1], schema),
-            len(epochs) - 1,
-            ["id"],
-        )
-        assert state(pruned) == state(full)
+        # crash-before-commit on the pruned side: roll the pointer back
+        # and replay the final epoch over its own orphan dir
+        if len(epochs) >= 2 and pruned.current_version() == len(epochs) - 1:
+            prev = len(epochs) - 2
+            pruned._repoint(prev, prev)
+            pruned._manifest_cache.clear()
+            assert apply_cdc_epoch(pruned, frames[-1], len(epochs) - 1, ["id"])
+            assert _store_state(pruned) == _store_state(full)
 
 
 @settings(
-    max_examples=5,
+    max_examples=7,
     deadline=None,
     suppress_health_check=[HealthCheck.too_slow],
 )
-@given(evts=events(), data=st.data())
+@given(evts=events(tuple(STORE_OPS)), data=st.data())
 def test_pruned_store_interleaved_lifecycle_equals_full_store(
     spark, evts, data, tmp_path_factory
 ):
@@ -472,7 +497,12 @@ def test_pruned_store_interleaved_lifecycle_equals_full_store(
     pin each operation alone; this pins their COMPOSITION — every
     interleaving must land the plain full-rewrite store and the
     manifest/bucket pruned store on identical state, with the epoch
-    watermark still replay-correct afterwards."""
+    watermark still replay-correct afterwards. The drawn fold bound and
+    heal epoch reach the delta, fold, TRUNCATE and heal paths, so
+    erasure, prune and rebucket also meet a store holding a delta."""
+    from unittest import mock
+
+    from canal_phoenix_adapter_spark.streaming import stream as stream_mod
     from canal_phoenix_adapter_spark.streaming.stream import (
         ParquetStateStore,
         PrunedParquetStateStore,
@@ -483,12 +513,15 @@ def test_pruned_store_interleaved_lifecycle_equals_full_store(
     cuts = data.draw(
         st.lists(
             st.integers(min_value=1, max_value=max(1, len(evts) - 1)),
-            max_size=2, unique=True,
+            max_size=3, unique=True,
         ).map(sorted)
     )
     bounds = [0, *cuts, len(evts)]
     epochs = [evts[a:b] for a, b in zip(bounds, bounds[1:]) if b > a]
     schema = "seq long, op string, id long, val long, old_id long"
+    heal_at = data.draw(st.sampled_from([None, *range(1, len(epochs))]),
+                        label="heal_at")
+    frac = data.draw(st.sampled_from(FOLD_FRACTIONS), label="fold_fraction")
 
     # one action drawn per epoch boundary: applied to BOTH stores
     # (erase/prune) or to the pruned store only (rebucket — a layout
@@ -514,45 +547,46 @@ def test_pruned_store_interleaved_lifecycle_equals_full_store(
                                      n_buckets=3)
     full = ParquetStateStore(spark, str(base / "f"))
 
-    for i, ep in enumerate(epochs):
-        for store in (pruned, full):
-            apply_cdc_epoch(
-                store, spark.createDataFrame(ep, schema), i, ["id"]
-            )
-        act = actions[i]
-        if act == "erase":
-            keys = spark.createDataFrame(
-                [(k,) for k in erase_ids], f"id {keyset_type}"
-            )
-            for store in (pruned, full):
-                if store.current_version() is not None:
-                    erase_keys(store, keys, ["id"])
-        elif act == "prune":
-            for store in (pruned, full):
-                store.prune(keep_last=1)
-        elif act == "rebucket":
-            if pruned.current_version() is not None:
-                pruned.rebucket(5 if pruned.n_buckets == 3 else 3)
-
     def state(store):
         df = store.read()
         return (None if df is None
                 else sorted((r["id"], r["val"]) for r in df.collect()))
 
-    assert state(pruned) == state(full)
+    with mock.patch.object(stream_mod, "DELTA_FOLD_FRACTION", frac):
+        for i, ep in enumerate(epochs):
+            for store in (pruned, full):
+                apply_cdc_epoch(
+                    store, _epoch_frame(spark, ep, i == heal_at), i, ["id"]
+                )
+            act = actions[i]
+            if act == "erase":
+                keys = spark.createDataFrame(
+                    [(k,) for k in erase_ids], f"id {keyset_type}"
+                )
+                for store in (pruned, full):
+                    if store.current_version() is not None:
+                        erase_keys(store, keys, ["id"])
+            elif act == "prune":
+                for store in (pruned, full):
+                    store.prune(keep_last=1)
+            elif act == "rebucket":
+                if pruned.current_version() is not None:
+                    pruned.rebucket(5 if pruned.n_buckets == 3 else 3)
 
-    # the watermark survived every non-epoch commit: replaying the last
-    # epoch still no-ops, and the NEXT epoch still applies
-    if epochs and full.last_epoch() == len(epochs) - 1:
-        last = len(epochs) - 1
-        nxt = [(10_000, "UPDATE", 1, 7, None)]
-        for store in (pruned, full):
-            assert apply_cdc_epoch(
-                store, spark.createDataFrame(epochs[last], schema),
-                last, ["id"],
-            ) is False
-            assert apply_cdc_epoch(
-                store, spark.createDataFrame(nxt, schema), last + 1, ["id"]
-            )
-        assert state(pruned) == state(full)
-        assert state(full) is not None and (1, 7) in state(full)
+        assert _store_state(pruned) == _store_state(full)
+
+        # the watermark survived every non-epoch commit: replaying the
+        # last epoch still no-ops, and the NEXT epoch still applies
+        if epochs and full.last_epoch() == len(epochs) - 1:
+            last = len(epochs) - 1
+            nxt = [(10_000, "UPDATE", 1, 7, None)]
+            for store in (pruned, full):
+                assert apply_cdc_epoch(
+                    store, _epoch_frame(spark, epochs[last], last == heal_at),
+                    last, ["id"],
+                ) is False
+                assert apply_cdc_epoch(
+                    store, spark.createDataFrame(nxt, schema), last + 1, ["id"]
+                )
+            assert _store_state(pruned) == _store_state(full)
+            assert state(full) is not None and (1, 7) in state(full)

@@ -9,6 +9,7 @@ from __future__ import annotations
 import datetime
 import json
 import os
+import shutil
 
 import pytest
 from pyspark.sql import types as T
@@ -1207,11 +1208,12 @@ def test_max_files_per_trigger_bounds_epochs(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# PrunedParquetStateStore: O(touched-bucket) epoch commits (r5 task 1/3).
+# PrunedParquetStateStore: delta epochs, folds and full rewrites.
 # The contract under test: state equality with the full-rewrite store
 # over every epoch shape (insert/update/delete/PK-change/truncate/
-# heal), across crash-replay; a normal epoch's version dir holds ONLY
-# the touched buckets (the O(touched) evidence) with the manifest
+# heal), across crash-replay at every durable step; a normal epoch's
+# version dir holds ONLY its delta and manifest; a fold epoch's holds
+# only the buckets the delta and batch touch, with the manifest
 # pointing untouched buckets at older versions; fallback epochs own
 # every bucket.
 # ---------------------------------------------------------------------------
@@ -1255,11 +1257,17 @@ def _owned(store, version):
             if n.startswith("__bucket=")}
 
 
-def test_pruned_store_matches_full_and_rewrites_only_touched(spark, tmp_path):
+def test_pruned_store_matches_full_and_rewrites_only_touched(
+    spark, tmp_path, monkeypatch
+):
     """A normal epoch over a pruned store must (a) produce the exact
-    state the full-rewrite store produces and (b) materialize ONLY the
-    buckets the batch touches in its version dir — every other bucket
-    served through the manifest from the previous version's dirs."""
+    state the full-rewrite store produces and (b) write ONLY a delta:
+    its version dir holds `_delta` and the manifest, no bucket dir is
+    read, and the manifest serves every bucket from the previous
+    version. A fold epoch materializes ONLY the buckets the delta and
+    the batch touch, reading exactly those, with every other bucket
+    served from the older version."""
+    from canal_phoenix_adapter_spark.streaming import stream as stream_mod
     from canal_phoenix_adapter_spark.streaming.stream import apply_cdc_epoch
 
     n_buckets = 8
@@ -1272,35 +1280,45 @@ def test_pruned_store_matches_full_and_rewrites_only_touched(spark, tmp_path):
         (301, "DELETE", 9, None, None, None),
         (302, "UPDATE", 901, "moved", 17.0, 17),
     ])
+    reads = []
+    orig_read = pruned._read_buckets
+    monkeypatch.setattr(pruned, "_read_buckets",
+                        lambda m, b=None: (reads.append(b), orig_read(m, b))[1])
     for store in (pruned, full):
         assert apply_cdc_epoch(store, b0, 0, ["id"])
         assert apply_cdc_epoch(store, b1, 1, ["id"])
+    # delta path: no bucket dir read, none written
+    assert reads == []
+    assert sorted(os.listdir(os.path.join(pruned.path, "v1"))) == [
+        "_delta", "_manifest.json"]
+    touched = _bucket_of_ids(spark, [5, 9, 901, 17], n_buckets)
+    assert len(touched) < n_buckets  # the test must exercise both kinds
+    m1 = pruned._manifest(1)
+    assert m1["buckets"] == pruned._manifest(0)["buckets"]
+    assert set(m1["delta"]["buckets"]) == touched
+    assert m1["delta"]["owner"] == 1 and m1["delta"]["rows"] == 4
     assert _state_dict(pruned) == _state_dict(full)
     got = _state_dict(pruned)
     assert got[5] == (5.5, "five") and 9 not in got
     assert got[901] == (17.0, "moved") and 17 not in got
 
-    # O(touched) evidence, write side: v1 holds exactly the touched
-    # buckets; the manifest serves every other bucket from v0
-    touched = _bucket_of_ids(spark, [5, 9, 901, 17], n_buckets)
-    assert len(touched) < n_buckets  # the test must exercise both kinds
-    assert _owned(pruned, 1) == touched
-    # ...and read side: a bucket-local epoch must never issue a
-    # full-state read (buckets=None) — only the touched subset
-    reads = []
-    orig_read = pruned._read_buckets
-    pruned._read_buckets = lambda m, b=None: (reads.append(b), orig_read(m, b))[1]
-    try:
-        b2 = _batch(spark, [(400, "UPDATE", 5, "five2", 5.6, None)])
-        assert apply_cdc_epoch(pruned, b2, 2, ["id"])
-    finally:
-        pruned._read_buckets = orig_read
-    assert reads == [_bucket_of_ids(spark, [5], n_buckets)]
+    # fold path: (delta ∪ batch) merged into exactly their buckets
+    monkeypatch.setattr(stream_mod, "DELTA_FOLD_FRACTION", 0.0)
+    b2 = _batch(spark, [(400, "UPDATE", 5, "five2", 5.6, None)])
+    reads.clear()
+    for store in (pruned, full):
+        assert apply_cdc_epoch(store, b2, 2, ["id"])
+    assert reads == [touched]
+    assert _owned(pruned, 2) == touched
+    assert not os.path.exists(os.path.join(pruned.path, "v2", "_delta"))
+    m2 = pruned._manifest(2)
+    assert m2["delta"] is None
+    assert set(m2["buckets"]) == set(range(n_buckets))  # 200 keys cover all 8
+    for b, owner in m2["buckets"].items():
+        assert owner == (2 if b in touched else 0), (b, owner)
+    assert sum(m2["rows"].values()) == 199
+    assert _state_dict(pruned) == _state_dict(full)
     assert _state_dict(pruned)[5] == (5.6, "five2")
-    m1 = pruned._manifest(1)["buckets"]
-    assert set(m1) == set(range(n_buckets))  # 200 keys cover all 8
-    for b, owner in m1.items():
-        assert owner == (1 if b in touched else 0), (b, owner)
 
 
 def test_pruned_store_crash_replay_converges_with_full(spark, tmp_path):
@@ -1332,6 +1350,223 @@ def test_pruned_store_crash_replay_converges_with_full(spark, tmp_path):
     assert apply_cdc_epoch(pruned, b1, 1, ["id"])
     assert pruned.current_version() == 1 and pruned.last_epoch() == 1
     assert _state_dict(pruned) == _state_dict(full)
+
+
+def _crash_at(point, damage=None):
+    """A _crashpoint stand-in that raises at ``point`` (after running
+    ``damage``, which models a write the crash cut short)."""
+    def hook(name):
+        if name == point:
+            if damage is not None:
+                damage()
+            raise RuntimeError(f"crash at {name}")
+    return hook
+
+
+@pytest.mark.parametrize("point,fold", [
+    ("delta_written", False),
+    ("manifest_written", False),
+    ("buckets_written", True),
+    ("manifest_written", True),
+])
+def test_pruned_store_crashpoints_replay_to_full_state(
+    spark, tmp_path, monkeypatch, point, fold
+):
+    """Crash a pruned-store epoch at each durable step of its commit
+    path — delta written but no manifest, manifest written but no
+    repoint, a fold part-way through its bucket writes — then replay
+    the epoch: the store must equal the plain store, and the next
+    epoch must still apply."""
+    from canal_phoenix_adapter_spark.streaming import stream as stream_mod
+    from canal_phoenix_adapter_spark.streaming.stream import apply_cdc_epoch
+
+    pruned, full = _pruned_and_full(spark, tmp_path)
+    epochs = [
+        _batch(spark, [(i, "INSERT", i, f"n{i}", float(i), None)
+                       for i in range(1, 101)]),
+        _batch(spark, [(200, "UPDATE", 7, "seven", 0.7, None),
+                       (201, "DELETE", 8, None, None, None)]),
+        _batch(spark, [(300, "UPDATE", 7, "seven2", 0.8, None),
+                       (301, "INSERT", 8, "eight", 8.0, None),
+                       (302, "UPDATE", 950, "moved", 3.0, 3)]),
+        _batch(spark, [(400, "DELETE", 950, None, None, None)]),
+    ]
+    for e in range(2):
+        for store in (pruned, full):
+            assert apply_cdc_epoch(store, epochs[e], e, ["id"])
+    assert pruned._manifest(1)["delta"] is not None  # crash over a delta
+    if fold:
+        monkeypatch.setattr(stream_mod, "DELTA_FOLD_FRACTION", 0.0)
+
+    def half_written():
+        vdir = os.path.join(pruned.path, "v2")
+        dirs = sorted(n for n in os.listdir(vdir) if n.startswith("__bucket="))
+        assert dirs
+        for n in dirs[: len(dirs) // 2 + 1]:
+            shutil.rmtree(os.path.join(vdir, n))
+
+    damage = half_written if point == "buckets_written" else None
+    monkeypatch.setattr(stream_mod, "_crashpoint", _crash_at(point, damage))
+    with pytest.raises(RuntimeError, match=f"crash at {point}"):
+        apply_cdc_epoch(pruned, epochs[2], 2, ["id"])
+    assert pruned.current_version() == 1 and pruned.last_epoch() == 1
+    assert os.path.isdir(os.path.join(pruned.path, "v2"))  # the orphan
+    monkeypatch.setattr(stream_mod, "_crashpoint", lambda name: None)
+    for e in (2, 3):
+        for store in (pruned, full):
+            assert apply_cdc_epoch(store, epochs[e], e, ["id"])
+        assert _state_dict(pruned) == _state_dict(full)
+    assert (pruned._manifest(2)["delta"] is None) == fold
+
+
+def test_pruned_erase_crash_part_way_then_rerun(spark, tmp_path, monkeypatch):
+    """An erasure commits through the fold path: a crash part-way
+    through its bucket writes leaves the pointer (and the delta) in
+    place, and re-running the erasure lands the plain store's state."""
+    from canal_phoenix_adapter_spark.streaming import stream as stream_mod
+    from canal_phoenix_adapter_spark.streaming.stream import (
+        apply_cdc_epoch,
+        erase_keys,
+    )
+
+    pruned, full = _pruned_and_full(spark, tmp_path)
+    b0 = _batch(spark, [(i, "INSERT", i, f"n{i}", float(i), None)
+                        for i in range(1, 41)])
+    b1 = _batch(spark, [(100, "INSERT", 77, "new", 7.7, None)])
+    for store in (pruned, full):
+        assert apply_cdc_epoch(store, b0, 0, ["id"])
+        assert apply_cdc_epoch(store, b1, 1, ["id"])
+    keys = spark.createDataFrame([(77,), (3,)], "id long")
+
+    def drop_all():
+        shutil.rmtree(os.path.join(pruned.path, "v2"))
+
+    monkeypatch.setattr(stream_mod, "_crashpoint",
+                        _crash_at("buckets_written", drop_all))
+    with pytest.raises(RuntimeError):
+        erase_keys(pruned, keys, ["id"])
+    assert pruned.current_version() == 1
+    assert 77 in _state_dict(pruned)
+    monkeypatch.setattr(stream_mod, "_crashpoint", lambda name: None)
+    assert erase_keys(pruned, keys, ["id"]) == erase_keys(full, keys, ["id"])
+    assert _state_dict(pruned) == _state_dict(full)
+
+
+def test_pruned_erase_reaches_delta_keys(spark, tmp_path):
+    """erase_keys on a store with a delta: a key living only in the
+    delta is erased and counted, a base key the delta updated cannot
+    come back through the delta, a key the delta deleted counts as
+    absent — same receipt and state as the plain store."""
+    from canal_phoenix_adapter_spark.streaming.stream import (
+        apply_cdc_epoch,
+        erase_keys,
+    )
+
+    pruned, full = _pruned_and_full(spark, tmp_path)
+    b0 = _batch(spark, [(i, "INSERT", i, f"n{i}", float(i), None)
+                        for i in range(1, 51)])
+    b1 = _batch(spark, [(100, "INSERT", 100, "delta-only", 1.0, None),
+                        (101, "UPDATE", 7, "updated", 7.7, None),
+                        (102, "DELETE", 8, None, None, None)])
+    for store in (pruned, full):
+        assert apply_cdc_epoch(store, b0, 0, ["id"])
+        assert apply_cdc_epoch(store, b1, 1, ["id"])
+    assert pruned._manifest(1)["delta"]["rows"] == 3
+    keys = spark.createDataFrame([(100,), (7,), (8,), (999,)], "id long")
+    got = erase_keys(pruned, keys, ["id"])
+    assert got == erase_keys(full, keys, ["id"]) and got.erased == 2
+    assert pruned._manifest(got.version)["delta"] is None
+    state = _state_dict(pruned)
+    assert state == _state_dict(full) and len(state) == 48
+    assert not {7, 8, 100} & set(state)
+    # the next epoch starts a fresh delta over the erased base
+    b2 = _batch(spark, [(200, "UPDATE", 9, "nine", 9.9, None)])
+    for store in (pruned, full):
+        assert apply_cdc_epoch(store, b2, 2, ["id"])
+    assert _state_dict(pruned) == _state_dict(full)
+    assert 7 not in _state_dict(pruned)
+
+
+def test_pruned_keyed_read_merges_delta_without_shuffle(spark, tmp_path):
+    """Merge-on-read plan pin: a keyed read over base plus delta has
+    exactly one BroadcastExchange (the delta keys) and no shuffle
+    Exchange, and scans only the manifest's bucket dirs plus that
+    version's _delta."""
+    from pyspark.sql import functions as F
+    from plan_helpers import broadcast_count, shuffle_count
+
+    from canal_phoenix_adapter_spark.streaming.stream import apply_cdc_epoch
+
+    pruned, _ = _pruned_and_full(spark, tmp_path)
+    b0 = _batch(spark, [(i, "INSERT", i, f"n{i}", float(i), None)
+                        for i in range(1, 101)])
+    b1 = _batch(spark, [(200, "UPDATE", 7, "seven", 0.7, None),
+                        (201, "DELETE", 8, None, None, None)])
+    assert apply_cdc_epoch(pruned, b0, 0, ["id"])
+    assert apply_cdc_epoch(pruned, b1, 1, ["id"])
+    state = pruned.read()
+    keyed = state.where(F.col("id").isin(7, 8, 9))
+    assert broadcast_count(keyed) == 1
+    assert shuffle_count(keyed) == 0
+    assert sorted((r["id"], r["name"]) for r in keyed.collect()) == [
+        (7, "seven"), (9, "n9")]
+    m = pruned._manifest(1)
+    allowed = {os.path.realpath(pruned._bucket_dir(o, b))
+               for b, o in m["buckets"].items()}
+    allowed.add(os.path.realpath(pruned._delta_dir(1)))
+    scanned = {os.path.dirname(f.split(":", 1)[1]) for f in state.inputFiles()}
+    assert {os.path.realpath(d) for d in scanned} == allowed
+
+
+def test_pruned_delta_folds_past_broadcast_threshold(spark, tmp_path):
+    """The fold bound is capped by broadcast_threshold_rows: a delta
+    that would pass the threshold folds even far below
+    DELTA_FOLD_FRACTION of the base, so no committed delta holds more
+    rows than the read path's broadcast of its keys may carry. A handle
+    whose threshold is below a committed delta's size reads it without
+    the broadcast hint."""
+    from pyspark.sql import functions as F
+    from plan_helpers import broadcast_count
+
+    from canal_phoenix_adapter_spark.streaming.stream import (
+        PrunedParquetStateStore,
+        apply_cdc_epoch,
+    )
+
+    pruned, full = _pruned_and_full(spark, tmp_path)
+    pruned.broadcast_threshold_rows = 4
+    b0 = _batch(spark, [(i, "INSERT", i, f"n{i}", float(i), None)
+                        for i in range(1, 101)])
+    b1 = _batch(spark, [(200, "UPDATE", 1, "one", 1.5, None),
+                        (201, "UPDATE", 2, "two", 2.5, None),
+                        (202, "DELETE", 3, None, None, None)])
+    b2 = _batch(spark, [(300, "UPDATE", 4, "four", 4.5, None),
+                        (301, "INSERT", 500, "new", 5.0, None)])
+    for store in (pruned, full):
+        for e, b in enumerate((b0, b1, b2)):
+            assert apply_cdc_epoch(store, b, e, ["id"])
+    # 3 rows stay a delta; 3 + 2 > 4 folds (the fraction bound is 25)
+    assert pruned._manifest(1)["delta"]["rows"] == 3
+    assert pruned._manifest(2)["delta"] is None
+    assert _owned(pruned, 2)
+    assert _state_dict(pruned) == _state_dict(full)
+
+    b3 = _batch(spark, [(400, "UPDATE", 5, "five", 5.5, None),
+                        (401, "UPDATE", 6, "six", 6.5, None),
+                        (402, "UPDATE", 7, "seven", 7.5, None)])
+    assert apply_cdc_epoch(pruned, b3, 3, ["id"])
+    assert pruned._manifest(3)["delta"]["rows"] == 3
+    small = PrunedParquetStateStore(spark, pruned.path, ["id"], n_buckets=8,
+                                    broadcast_threshold_rows=2)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "-1")  # only the store's hint may broadcast
+    try:
+        assert broadcast_count(pruned.read().where(F.col("id") < 10)) == 1
+        assert broadcast_count(small.read().where(F.col("id") < 10)) == 0
+    finally:
+        spark.conf.set(key, saved)
+    assert _state_dict(small) == _state_dict(pruned)
 
 
 def test_pruned_store_schema_heal_rewrites_all_buckets(spark, tmp_path):
@@ -1443,10 +1678,10 @@ def test_pruned_store_truncate_erase_prune_timetravel(spark, tmp_path):
 
 
 def test_pruned_store_prune_keeps_shared_buckets_readable(spark, tmp_path):
-    """The GC hazard specific to shared bucket dirs: pruning an OLD
-    version must not delete bucket dirs a retained manifest still
-    references (most of the state after a small epoch), and must
-    delete the stale copies nothing references."""
+    """The GC hazard specific to shared dirs: pruning an OLD version
+    must not delete bucket or delta dirs a retained manifest still
+    references (after delta epochs, every bucket), and must delete the
+    stale copies nothing references — including unreferenced deltas."""
     from canal_phoenix_adapter_spark.streaming.stream import apply_cdc_epoch
 
     pruned, _ = _pruned_and_full(spark, tmp_path)
@@ -1458,11 +1693,19 @@ def test_pruned_store_prune_keeps_shared_buckets_readable(spark, tmp_path):
     assert apply_cdc_epoch(pruned, b1, 1, ["id"])
     assert apply_cdc_epoch(pruned, b2, 2, ["id"])
     before = _state_dict(pruned)
-    assert pruned.prune(keep_last=1) == [0, 1]
+    # epochs 1 and 2 committed deltas; time travel to a retained
+    # version with a delta reads that version's delta, not the latest
+    assert pruned._manifest(1)["delta"] is not None
+    assert pruned.prune(keep_last=2) == [0]
+    v1 = {r["id"]: (r["balance"], r["name"])
+          for r in pruned.read_version(1).collect()}
+    assert v1[5] == (5.5, "five") and v1[6] == (6.0, "n6") and len(v1) == 200
+    assert pruned.prune(keep_last=1) == [1]
+    # v1's delta is unreferenced now: its dir is gone; v2's survives
+    assert not os.path.exists(os.path.join(pruned.path, "v1"))
+    assert os.path.isdir(os.path.join(pruned.path, "v2", "_delta"))
     # v0's dirs survive where v2's manifest references them
     assert os.path.isdir(os.path.join(pruned.path, "v0"))
-    # v1's rewritten copy of bucket(5) is referenced unless epoch 2
-    # also touched it; either way the CURRENT state is intact
     assert _state_dict(pruned) == before
     assert pruned.read().count() == 200
     # pruned versions stop being snapshots immediately...
@@ -1471,8 +1714,9 @@ def test_pruned_store_prune_keeps_shared_buckets_readable(spark, tmp_path):
     # their deleted manifests while their data dirs remain referenced
     assert pruned.prune(keep_last=1) == []
     assert _state_dict(pruned) == before
-    # delayed dereference: once later epochs rewrite every bucket the
-    # old versions' leftover data dirs are collected on the next prune
+    # delayed dereference: once later epochs (folds: 100 rows each
+    # pass the bound) rewrite every bucket the old versions' leftover
+    # data dirs are collected on the next prune
     e = 3
     for ids in (range(1, 101), range(101, 201)):
         rows = [(1000 + e * 500 + i, "UPDATE", i, f"r{i}", float(i), None)
@@ -1733,12 +1977,13 @@ def test_rebucket_failure_restores_modulus(spark, tmp_path):
 
 
 def test_pruned_store_huge_batch_routes_no_broadcast(spark, tmp_path, monkeypatch):
-    """r6 task 1: the pruned store's merge strategy must route on the
-    batch-size heuristic — at or below broadcast_threshold_rows the
-    collapsed key set is broadcast (state never shuffles, the normal
-    CDC regime); above it merge_cdc runs broadcast-free (a backfill-
-    sized epoch must not pin the whole key set in every executor's
-    memory). Both routes must land the identical state."""
+    """The pruned store's fold must route on the change-set size — at
+    or below broadcast_threshold_rows the key set is broadcast (state
+    never shuffles, the normal CDC regime); above it merge_cdc runs
+    broadcast-free (a backfill-sized epoch must not pin the whole key
+    set in every executor's memory). Both routes must land the
+    identical state. The fold bound is lowered to 0 so the small
+    epoch takes the fold path, where the routing applies."""
     from canal_phoenix_adapter_spark.streaming import stream as stream_mod
     from canal_phoenix_adapter_spark.streaming.stream import (
         PrunedParquetStateStore,
@@ -1753,6 +1998,7 @@ def test_pruned_store_huge_batch_routes_no_broadcast(spark, tmp_path, monkeypatc
         return orig(*a, **kw)
 
     monkeypatch.setattr(stream_mod, "merge_cdc", recording)
+    monkeypatch.setattr(stream_mod, "DELTA_FOLD_FRACTION", 0.0)
 
     b0 = _batch(spark, [(i, "INSERT", i, f"n{i}", float(i), None)
                         for i in range(1, 101)])

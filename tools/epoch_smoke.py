@@ -5,8 +5,10 @@ machinery, so the split is clean) against a bootstrap state of S rows,
 then applies K fixed-size change batches; reports MEDIAN per-epoch
 wall (robust to the multi-second host-steal craters that wreck means)
 plus the mean phase split: touched (the pruned store's batch-scan job), write
-(the snapshot write job — the lazy merge materializes here), manifest,
-repoint, gc (inline retention prune), other (basis/bookkeeping, lock).
+(the snapshot, delta or fold write job — the lazy merge materializes
+here), read (building the pruned store's bucket-dir basis; 0 on delta
+epochs), manifest, repoint, gc (inline retention prune), other
+(bookkeeping, lock).
 
 The question (VERDICT r4 tasks 1/5): does per-epoch wall stay ~flat as
 STATE grows with batch size fixed? Full-rewrite is O(state) per epoch
@@ -15,6 +17,16 @@ by construction; pruned should be ~O(batch). One JSON line per
 
 Usage: python tools/epoch_smoke.py [factor ...]   (default: 1 4 16)
        python tools/epoch_smoke.py crossover [factor]   (default: 64)
+       python tools/epoch_smoke.py delta [fraction ...]
+                                        (default: 0 0.02 0.1 0.25)
+
+The delta mode measures what the pruned store's delta costs as it
+grows toward the fold bound: per delta fraction (delta rows / base
+rows), a fresh 150k-row store whose delta is pre-grown to that size by
+one untimed epoch, then the median wall of delta epochs, of the
+benchmark's keyed read (point lookups plus a count) and of one fold
+epoch. Fraction 0 is a delta-free store, whose fold epoch is the
+touched-bucket rewrite every epoch paid before deltas.
 
 The crossover mode (VERDICT r6 task 3) measures what crossing
 broadcast_threshold_rows costs: ONE store at a large fixed state,
@@ -40,6 +52,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 from canal_phoenix_adapter_spark.session import get_spark  # noqa: E402
+from canal_phoenix_adapter_spark.streaming import stream  # noqa: E402
 from canal_phoenix_adapter_spark.streaming.stream import (  # noqa: E402
     ParquetStateStore,
     PrunedParquetStateStore,
@@ -82,6 +95,8 @@ def instrument(store, times: dict):
     if isinstance(store, PrunedParquetStateStore):
         store._scan_batch = _timed(times, "touched")(store._scan_batch)
         store._write_bucket_dirs = _timed(times, "write")(store._write_bucket_dirs)
+        store._write_delta = _timed(times, "write")(store._write_delta)
+        store._read_buckets = _timed(times, "read")(store._read_buckets)
         store._write_manifest = _timed(times, "manifest")(store._write_manifest)
     else:
         store._write_unlocked = _timed(times, "write")(store._write_unlocked)
@@ -190,11 +205,85 @@ def crossover(factor: int = 64) -> None:
     shutil.rmtree(base, ignore_errors=True)
 
 
+def delta_sweep(fractions: list[float]) -> None:
+    """Delta epoch, keyed read and fold walls against delta size on a
+    fixed-size pruned store (DELTA_STATE_ROWS, 5k rows per bucket).
+    The fold bound is lifted while the delta grows and dropped to 0 for
+    the one fold epoch."""
+    import tempfile
+
+    spark = get_spark("epoch-smoke-delta")
+    rows = int(os.environ.get("EPOCH_SMOKE_DELTA_STATE_ROWS", "150000"))
+    reps = int(os.environ.get("EPOCH_SMOKE_DELTA_REPS", "5"))
+    keys = list(range(0, rows, rows // 20))[:20]
+    saved = stream.DELTA_FOLD_FRACTION
+    try:
+        for frac in fractions:
+            base = tempfile.mkdtemp(prefix="epoch_smoke_delta_")
+            store = PrunedParquetStateStore(
+                spark, os.path.join(base, "s"), ["id"],
+                n_buckets=max(1, rows // ROWS_PER_BUCKET),
+            )
+            store.write(state_df(spark, rows), version=-1)
+            stream.DELTA_FOLD_FRACTION = 1.0
+            epoch = 0
+
+            def run_epoch(n_rows):
+                nonlocal epoch
+                t0 = time.perf_counter()
+                committed = apply_cdc_epoch(
+                    store, batch_df(spark, epoch, rows, n_rows=n_rows),
+                    epoch, ["id"])
+                wall = time.perf_counter() - t0
+                if not committed:  # not assert: -O would skip the merge
+                    raise RuntimeError(f"epoch {epoch} did not commit")
+                store.prune(keep_last=2)
+                epoch += 1
+                return wall
+
+            def keyed_read():
+                t0 = time.perf_counter()
+                df = store.read()
+                df.where(F.col("id").isin(keys)).collect()
+                df.count()
+                return time.perf_counter() - t0
+
+            # untimed: grows the delta (distinct keys per batch) and
+            # pays the session's plan compilation
+            run_epoch(int(frac * rows) or BATCH_ROWS)
+            keyed_read()
+            if frac == 0:
+                stream.DELTA_FOLD_FRACTION = 0.0
+                run_epoch(BATCH_ROWS)  # clears the warmup delta
+                stream.DELTA_FOLD_FRACTION = 1.0
+            delta_rows = (store._manifest(store.current_version())["delta"]
+                          or {}).get("rows", 0)
+            epochs = [] if frac == 0 else [
+                run_epoch(BATCH_ROWS) for _ in range(reps)]
+            reads = [keyed_read() for _ in range(reps)]
+            stream.DELTA_FOLD_FRACTION = 0.0
+            fold = run_epoch(BATCH_ROWS)
+            print(json.dumps(
+                {"delta_smoke": frac, "state_rows": rows,
+                 "delta_rows": delta_rows, "batch_rows": BATCH_ROWS,
+                 "delta_epoch_median": (round(statistics.median(epochs), 3)
+                                        if epochs else None),
+                 "keyed_read_median": round(statistics.median(reads), 3),
+                 "fold_epoch": round(fold, 3),
+                 "session": spark.sparkContext.applicationId}), flush=True)
+            shutil.rmtree(base, ignore_errors=True)
+    finally:
+        stream.DELTA_FOLD_FRACTION = saved
+
+
 def main() -> None:
     import tempfile
 
     if sys.argv[1:2] == ["crossover"]:
         crossover(int(sys.argv[2]) if len(sys.argv) > 2 else 64)
+        return
+    if sys.argv[1:2] == ["delta"]:
+        delta_sweep([float(a) for a in sys.argv[2:]] or [0, 0.02, 0.1, 0.25])
         return
     factors = [int(a) for a in sys.argv[1:]] or [1, 4, 16]
     spark = get_spark("epoch-smoke")

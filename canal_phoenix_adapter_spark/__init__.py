@@ -8,7 +8,6 @@ similarity search, text analysis, multimodal plumbing).
 
 Layout (SURVEY.md §7.0; scale design ledger in SCALE.md):
     config        MappingConfig dataclass + YAML loader     (~ config/*)
-    monitor       config hot reload (poll watcher)
     notify        HTTP notify hook on schema change
     functions/    column-expression builders: coercion, enums, hashing, skew salting
     sources/      table loaders, Canal event envelope/explode, JDBC options
@@ -16,8 +15,7 @@ Layout (SURVEY.md §7.0; scale design ledger in SCALE.md):
                   dedup, similarity, text, sampling, multimodal, analytics
     sinks/        executor-side Phoenix write loop, lake-layout parquet sink
     streaming/    Structured Streaming glue, versioned state store
-                  (time travel, change feed, erasure), interval join
-    plans/        physical-plan inspection helpers
+                  (time travel, erasure)
 """
 
 __version__ = "0.1.0"

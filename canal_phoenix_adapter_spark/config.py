@@ -153,9 +153,10 @@ def config_from_dict(d: dict[str, Any]) -> MappingConfig:
 
 
 def load_config(path: str) -> MappingConfig:
-    """Load one mapping YAML (ConfigLoader.java:24-46). Hot-reload
-    (monitor/PhoenixConfigMonitor.java) is intentionally out of scope:
-    config is static per Spark job run (SURVEY.md §1.1)."""
+    """Load one mapping YAML (ConfigLoader.java:24-46). Hot reload
+    (the reference's 3 s config-dir poll, SURVEY.md S10) is
+    intentionally out of scope: config is static per Spark job run
+    (SURVEY.md §1.1, §7.5)."""
     if yaml is None:  # pragma: no cover
         raise ImportError("PyYAML is required to load mapping configs")
     with open(path, encoding="utf-8") as f:

@@ -90,7 +90,7 @@ def cdc_merge_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     updates, deletes, PK-changes — folded to the final state table."""
     changes = ev.synthetic_changes(load_table(spark, sf_dir, "events"))
     return merge_cdc(None, changes, ["user_id"], old_prefix="old_",
-                     check_truncate=False)  # derivation emits no TRUNCATE
+                     trunc_seq=None)  # derivation emits no TRUNCATE
 
 
 @register(
@@ -101,7 +101,7 @@ def cdc_merge_upsert_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C3/C4/C6 without PK-changes: upsert + delete + last-writer-wins."""
     changes = ev.synthetic_changes(load_table(spark, sf_dir, "events"), with_pk_change=False)
     return merge_cdc(None, changes, ["user_id"], old_prefix="old_",
-                     check_truncate=False)
+                     trunc_seq=None)
 
 
 @register(
@@ -168,7 +168,7 @@ def cdc_merge_into_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         events.where(F.col("event_id") % 3 == 0), with_pk_change=False
     )
     return merge_cdc(state, changes, ["user_id"], old_prefix="old_",
-                     check_truncate=False)
+                     trunc_seq=None)
 
 
 # ---------------------------------------------------------------------------
@@ -933,7 +933,7 @@ def cdc_truncate_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         [(1, "INSERT", -1, None, 1.0, 0)], schema=changes.schema
     )
     return merge_cdc(None, changes.unionByName(witness), ["user_id"],
-                     old_prefix="old_", check_truncate=True)
+                     old_prefix="old_")
 
 
 @register(
@@ -990,7 +990,7 @@ def cdc_serial_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "events"), with_pk_change=False
     ).coalesce(1)
     return merge_cdc(None, changes, ["user_id"], old_prefix="old_",
-                     check_truncate=False)
+                     trunc_seq=None)
 
 
 _DDL_SQL = (
@@ -1016,7 +1016,7 @@ def schema_ddl_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "events"), with_pk_change=False
     )
     state = merge_cdc(None, changes, ["user_id"], old_prefix="old_",
-                      check_truncate=False)
+                      trunc_seq=None)
     return apply_ddl(state, _DDL_SQL, allow_drop=True)
 
 

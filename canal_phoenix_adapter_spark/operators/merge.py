@@ -55,7 +55,8 @@ def truncate_seq_expr(seq_col: str = "seq", op_col: str = "op") -> F.Column:
     shared by last_truncate_seq and the pruned store's single-pass
     pre-scan — two hand-maintained copies of this predicate would
     silently desynchronize the pre-scan from the merge it feeds
-    (known_trunc_seq makes the pre-scan authoritative; r10 review)."""
+    (merge_cdc's trunc_seq makes the pre-scan authoritative; r10
+    review)."""
     return F.max(F.when(F.upper(F.col(op_col)) == OP_TRUNCATE, F.col(seq_col)))
 
 
@@ -349,9 +350,8 @@ def merge_cdc(
     op_col: str = "op",
     old_prefix: str = "old_",
     broadcast_changes: bool = True,
-    check_truncate: bool = True,
     skip_missing: bool = False,
-    known_trunc_seq: object = _NO_PRESCAN,
+    trunc_seq: object = _NO_PRESCAN,
 ) -> DataFrame:
     """Apply a CDC change batch to a keyed state table; returns the new
     state (C3-C9 + C7 truncate). Pure DataFrame algebra — the same
@@ -362,12 +362,13 @@ def merge_cdc(
     merged without shuffling the state. Disable when a single batch
     touches more keys than fit in executor memory.
 
-    ``check_truncate=False`` skips the truncate-seq pre-scan (one full
-    pass over the batch) when the caller knows the stream carries no
-    TRUNCATE events — e.g. a source whose DDL channel is separate.
-    ``known_trunc_seq``: a caller that already scanned the batch (the
-    pruned store's single-pass _scan_batch) passes its result here so
-    the truncate SEMANTICS still apply without re-paying the scan job.
+    ``trunc_seq``: seq of the batch's last TRUNCATE. By default the
+    merge scans the batch for it (one full pass). ``None`` says the
+    caller knows the batch carries no TRUNCATE — e.g. a source whose
+    DDL channel is separate — and skips the scan. Any other value is
+    a caller's own pre-scan result (the pruned store's single-pass
+    _scan_batch), so the truncate SEMANTICS still apply without
+    re-paying the scan job.
 
     ``skip_missing`` (config/MappingConfig.java:107, honored at
     PhoenixSyncService.java:399-411): batch columns the existing state
@@ -376,17 +377,13 @@ def merge_cdc(
     reference's skip-the-column-with-a-warning behavior, expressed at
     batch granularity.
     """
-    if known_trunc_seq is not _NO_PRESCAN and not check_truncate:
-        raise ValueError("known_trunc_seq requires check_truncate=True "
-                         "(a forwarded seq the merge ignores is a bug)")
-    if check_truncate:
-        trunc_seq = (last_truncate_seq(changes, seq_col, op_col)
-                     if known_trunc_seq is _NO_PRESCAN else known_trunc_seq)
-        if trunc_seq is not None:
-            # Column form, not text: trunc_seq is a runtime VALUE whose
-            # type (long, timestamp, ...) F.lit preserves exactly.
-            changes = changes.where(F.col(seq_col) > F.lit(trunc_seq))
-            state = None  # truncate wipes accumulated state (C7)
+    if trunc_seq is _NO_PRESCAN:
+        trunc_seq = last_truncate_seq(changes, seq_col, op_col)
+    if trunc_seq is not None:
+        # Column form, not text: trunc_seq is a runtime VALUE whose
+        # type (long, timestamp, ...) F.lit preserves exactly.
+        changes = changes.where(F.col(seq_col) > F.lit(trunc_seq))
+        state = None  # truncate wipes accumulated state (C7)
     changes = applicable_changes(changes, op_col)
 
     last = collapse_changes(changes, pk, seq_col, op_col, old_prefix)

@@ -33,7 +33,7 @@ def get_spark(app_name: str = "canal-phoenix-adapter-spark",
     """
     # getActiveSession() is THREAD-scoped; getOrCreate()'s fallback is
     # the process-global instantiated session, so a call from another
-    # thread (streaming listener, config-monitor poll) would slip past
+    # thread (e.g. a streaming listener) would slip past
     # an active-only check and still mutate the external session
     existing = SparkSession.getActiveSession() or getattr(
         SparkSession, "_instantiatedSession", None

@@ -152,11 +152,11 @@ def route(df: DataFrame, cfg: MappingConfig) -> DataFrame:
     )
     if cfg.destination:
         # destination/groupId match LOWERCASED, like database/table:
-        # the repo's own dispatch key (MappingConfig.routing_key,
-        # ConfigMonitor.configs_for) lowercases the whole key per the
-        # reference (PhoenixAdapter.java:88-95) — a case-sensitive
-        # filter here silently applied zero rows for envelopes
-        # configs_for had already matched (r10 review). DELIBERATE
+        # the repo's own dispatch key (MappingConfig.routing_key)
+        # lowercases the whole key per the reference
+        # (PhoenixAdapter.java:88-95) — a case-sensitive filter here
+        # silently applied zero rows for envelopes the routing key
+        # had already matched (r10 review). DELIBERATE
         # parity deviation: the reference compares destination
         # case-SENSITIVELY (PhoenixAdapter.java:180 .equals), so an
         # envelope whose destination differs only in case syncs here
@@ -313,8 +313,5 @@ def route_all(
     same parsed envelope DataFrame — one source scan, N filtered
     branches (Catalyst collapses the shared prefix; with the file/
     kafka source cached or streaming, the envelope parse runs once
-    per micro-batch).
-
-    Pairs with monitor.ConfigMonitor: ``route_all(df, mon.configs)``
-    re-evaluated per batch sees hot-reloaded configs."""
+    per micro-batch)."""
     return {name: route(df, cfg) for name, cfg in configs.items()}

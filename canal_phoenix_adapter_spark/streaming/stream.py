@@ -29,7 +29,6 @@ from pyspark.sql import types as T
 from canal_phoenix_adapter_spark.config import MappingConfig
 from canal_phoenix_adapter_spark.functions.hashing import bq as _bq
 from canal_phoenix_adapter_spark.operators.merge import (
-    _NO_PRESCAN,
     applicable_changes,
     collapse_changes,
     healed_schema,
@@ -47,18 +46,51 @@ from canal_phoenix_adapter_spark.sources.events import (
 )
 
 
-class _CommitPointer:
-    """The commit-marker contract shared by the state stores: a
-    ``_CURRENT`` pointer file ({"version": int, "epoch": int|None}
-    json, swapped into place with an atomic os.replace) plus a
-    ``_COMMITLOCK`` advisory lock serializing commits.
+def _as_nullable(dt: T.DataType) -> T.DataType:
+    """Schema with every field/element marked nullable — what parquet
+    footer inference would report (footers carry no non-null
+    guarantee), so a write-plan schema can seed the read-path memo
+    without leaking a false non-null promise from literals/counts."""
+    if isinstance(dt, T.StructType):
+        return T.StructType([
+            T.StructField(f.name, _as_nullable(f.dataType), True, f.metadata)
+            for f in dt.fields
+        ])
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(_as_nullable(dt.keyType), _as_nullable(dt.valueType),
+                         True)
+    return dt
 
-    The lock is an ``fcntl.flock``: owned by the open file
-    description, so it auto-releases when the holder's process dies
-    (no stale-lock janitor), and it excludes both other threads of
-    this process and other processes on the same host filesystem.
-    It is NOT reentrant — ``write()`` takes it, so code that already
-    holds ``commit_lock()`` must call ``_write_unlocked()``.
+
+class ParquetStateStore:
+    """Versioned keyed-state table on parquet: each epoch writes a new
+    snapshot dir and repoints _CURRENT, so readers never see a
+    half-written snapshot.
+
+    _CURRENT is a small pointer file ({"version": int, "epoch":
+    int|None} json, swapped into place with an atomic os.replace), and
+    the repoint IS the epoch's commit marker (C10 atomicity):
+      * crash before the repoint -> _CURRENT still names the previous
+        version; the replayed epoch reads it and overwrites the
+        orphaned v{N} dir (a different path than the one being read).
+      * crash after the repoint but before the streaming checkpoint
+        commits -> the replayed epoch sees last_epoch() == its
+        epoch_id and must SKIP the merge (apply_cdc_epoch does);
+        re-merging would both double-apply and self-overwrite the
+        v{N} dir it is lazily reading from, which Spark rejects
+        ("Cannot overwrite a path that is also being read from").
+    write() therefore must never target the version its input was read
+    from — callers route through apply_cdc_epoch, which guarantees it.
+
+    Commits serialize under ``commit_lock()``: an ``fcntl.flock`` on
+    ``_COMMITLOCK``, owned by the open file description, so it
+    auto-releases when the holder's process dies (no stale-lock
+    janitor), and it excludes both other threads of this process and
+    other processes on the same host filesystem. It is NOT reentrant —
+    ``write()`` takes it, so code that already holds ``commit_lock()``
+    must call ``_write_unlocked()``.
 
     Why commits must serialize: every writer's snapshot is derived
     from the version it read (its BASIS). Two concurrent commits —
@@ -67,10 +99,34 @@ class _CommitPointer:
     computed WITHOUT the first commit's changes, silently undoing a
     committed epoch (or the erasure). Holding the lock across
     [basis read -> snapshot write -> pointer swap] makes the basis
-    valid at publish time by construction. Requires ``self._meta_dir``
-    (directory holding the pointer and lock files)."""
+    valid at publish time by construction, so a concurrent admin
+    commit can never publish over — or be published over by — an
+    epoch it did not observe.
 
-    _meta_dir: str
+    Snapshot VERSION and CDC EPOCH are separate counters: the pointer
+    records both. A non-CDC commit (erase_keys compliance deletion)
+    bumps only the version and carries the epoch watermark forward —
+    so it can neither shadow a future epoch in the replay check nor
+    collide with a future epoch's snapshot dir (apply_cdc_epoch writes
+    version max(cur+1, epoch_id)). Old-layout pointers without the
+    "epoch" key fall back to epoch == version (those stores were only
+    ever written by apply_cdc_epoch, where the two coincided)."""
+
+    def __init__(self, spark: SparkSession, path: str):
+        self.spark = spark
+        self.path = path
+        self._meta_dir = path
+        # (version, all-nullable schema) of the last snapshot this
+        # handle wrote or inferred — committed snapshots are immutable
+        # (orphan overwrite only targets versions above _CURRENT), so
+        # the next epoch's basis read can skip parquet footer
+        # inference (one driver-side FS round-trip per epoch; r14).
+        # All-nullable mirrors what inference would return — parquet
+        # footers carry no non-null guarantee — so a write-plan schema
+        # with non-nullable fields (literals, count()s) can never leak
+        # a false non-null promise into the read path.
+        self._schema_memo: tuple[int, T.StructType] | None = None
+        os.makedirs(path, exist_ok=True)
 
     def _pointer(self) -> str:
         return os.path.join(self._meta_dir, "_CURRENT")
@@ -110,128 +166,6 @@ class _CommitPointer:
         with open(tmp, "w", encoding="utf-8") as f:
             json.dump({"version": version, "epoch": epoch_id}, f)
         os.replace(tmp, self._pointer())
-
-    def _merge_commit_unlocked(
-        self,
-        batch_df: DataFrame,
-        pk: list[str],
-        version: int,
-        epoch_id: int,
-    ) -> tuple[set[str] | None, set[str] | None]:
-        """The store's epoch-commit strategy, called by
-        apply_cdc_epoch UNDER the commit lock; owns the basis READ as
-        well as the write (the pruned store must never pay a
-        full-state read for a delta or fold epoch). Default:
-        full-snapshot read-merge-rewrite. Returns the lowercase column
-        sets (committed state, prior state or None) for the
-        schema-change hook — or (None, None) for an empty batch: the
-        store owns the emptiness check because the pruned store learns
-        it for free from its pre-scan.
-
-        The plain store's pre-scan mirrors the pruned one at smaller
-        width: ONE aggregation job yields both the emptiness check and
-        the TRUNCATE seq (assumes apply_cdc_epoch's seq/op column
-        contract, like PrunedParquetStateStore._scan_batch)."""
-        row = batch_df.agg(
-            F.count(F.lit(1)).alias("n"),
-            truncate_seq_expr("seq", "op").alias("tr"),
-        ).first()
-        if row["n"] == 0:
-            return None, None
-        return self._merge_commit_nonempty(
-            batch_df, pk, version, epoch_id, trunc_seq=row["tr"]
-        )
-
-    def _merge_commit_nonempty(
-        self, batch_df: DataFrame, pk: list[str], version: int, epoch_id: int,
-        trunc_seq: object = _NO_PRESCAN, broadcast_changes: bool = True,
-    ) -> tuple[set[str] | None, set[str] | None]:
-        """Full-snapshot read-merge-rewrite for a batch the caller has
-        PROVEN non-empty — the pruned store's TRUNCATE and heal/DDL
-        fallbacks enter here so neither the pre-scan's count nor its
-        truncate seq is re-derived with extra jobs per fallback epoch
-        (``trunc_seq`` forwards the pre-scan result to merge_cdc).
-
-        ``broadcast_changes`` default True: the PLAIN store has no
-        pre-scan row count and assumes micro-batch-sized changes (its
-        documented operating envelope); the pruned store's fallback
-        paths forward their measured heuristic so a backfill-sized
-        TRUNCATE/heal epoch does not pin millions of touched keys in
-        every executor."""
-        state = self.read()
-        prev_cols = None if state is None else {c.lower() for c in state.columns}
-        new_state = merge_cdc(state, batch_df, pk, old_prefix="old_",
-                              known_trunc_seq=trunc_seq,
-                              broadcast_changes=broadcast_changes)
-        self._write_unlocked(new_state, version, epoch_id=epoch_id)
-        return {c.lower() for c in new_state.columns}, prev_cols
-
-
-def _as_nullable(dt: T.DataType) -> T.DataType:
-    """Schema with every field/element marked nullable — what parquet
-    footer inference would report (footers carry no non-null
-    guarantee), so a write-plan schema can seed the read-path memo
-    without leaking a false non-null promise from literals/counts."""
-    if isinstance(dt, T.StructType):
-        return T.StructType([
-            T.StructField(f.name, _as_nullable(f.dataType), True, f.metadata)
-            for f in dt.fields
-        ])
-    if isinstance(dt, T.ArrayType):
-        return T.ArrayType(_as_nullable(dt.elementType), True)
-    if isinstance(dt, T.MapType):
-        return T.MapType(_as_nullable(dt.keyType), _as_nullable(dt.valueType),
-                         True)
-    return dt
-
-
-class ParquetStateStore(_CommitPointer):
-    """Versioned keyed-state table on parquet: each epoch writes a new
-    snapshot dir and repoints _CURRENT (atomic rename of a small
-    pointer file), so readers never see a half-written snapshot.
-
-    The _CURRENT repoint IS the epoch's commit marker (C10 atomicity):
-      * crash before the repoint -> _CURRENT still names the previous
-        version; the replayed epoch reads it and overwrites the
-        orphaned v{N} dir (a different path than the one being read).
-      * crash after the repoint but before the streaming checkpoint
-        commits -> the replayed epoch sees last_epoch() == its
-        epoch_id and must SKIP the merge (apply_cdc_epoch does);
-        re-merging would both double-apply and self-overwrite the
-        v{N} dir it is lazily reading from, which Spark rejects
-        ("Cannot overwrite a path that is also being read from").
-    write() therefore must never target the version its input was read
-    from — callers route through apply_cdc_epoch, which guarantees it.
-
-    Commits are serialized under the inherited commit lock (see
-    _CommitPointer: flock held across basis read -> snapshot write ->
-    pointer swap), so a concurrent admin commit can never publish
-    over — or be published over by — an epoch it did not observe.
-
-    Snapshot VERSION and CDC EPOCH are separate counters: the pointer
-    records both. A non-CDC commit (erase_keys compliance deletion)
-    bumps only the version and carries the epoch watermark forward —
-    so it can neither shadow a future epoch in the replay check nor
-    collide with a future epoch's snapshot dir (apply_cdc_epoch writes
-    version max(cur+1, epoch_id)). Old-layout pointers without the
-    "epoch" key fall back to epoch == version (those stores were only
-    ever written by apply_cdc_epoch, where the two coincided)."""
-
-    def __init__(self, spark: SparkSession, path: str):
-        self.spark = spark
-        self.path = path
-        self._meta_dir = path
-        # (version, all-nullable schema) of the last snapshot this
-        # handle wrote or inferred — committed snapshots are immutable
-        # (orphan overwrite only targets versions above _CURRENT), so
-        # the next epoch's basis read can skip parquet footer
-        # inference (one driver-side FS round-trip per epoch; r14).
-        # All-nullable mirrors what inference would return — parquet
-        # footers carry no non-null guarantee — so a write-plan schema
-        # with non-nullable fields (literals, count()s) can never leak
-        # a false non-null promise into the read path.
-        self._schema_memo: tuple[int, T.StructType] | None = None
-        os.makedirs(path, exist_ok=True)
 
     def _refuse_pruned_layout(self, version: int) -> None:
         """A plain handle over a pruned-store path would read ONLY the
@@ -334,7 +268,7 @@ class ParquetStateStore(_CommitPointer):
         one snapshot per epoch — without pruning, state size x epochs
         accumulates forever). Never drops the _CURRENT version or
         anything newer than it (an orphan from a mid-crash epoch is
-        the replay's write target, stream.py:37-54 contract). Returns
+        the replay's write target; see the class docstring). Returns
         the pruned versions. Call it from foreachBatch cadence or a
         janitor cron; it only touches strictly-older snapshot dirs, so
         it is safe concurrent with readers of _CURRENT."""
@@ -350,6 +284,61 @@ class ParquetStateStore(_CommitPointer):
         for v in doomed:
             shutil.rmtree(os.path.join(self.path, f"v{v}"), ignore_errors=True)
         return doomed
+
+    def _merge_commit_unlocked(
+        self,
+        batch_df: DataFrame,
+        pk: list[str],
+        version: int,
+        epoch_id: int,
+    ) -> tuple[set[str] | None, set[str] | None]:
+        """The store's epoch-commit strategy, called by
+        apply_cdc_epoch UNDER the commit lock; owns the basis READ as
+        well as the write (the pruned store must never pay a
+        full-state read for a delta or fold epoch). Default:
+        full-snapshot read-merge-rewrite. Returns the lowercase column
+        sets (committed state, prior state or None) for the
+        schema-change hook — or (None, None) for an empty batch: the
+        store owns the emptiness check because the pruned store learns
+        it for free from its pre-scan.
+
+        The plain store's pre-scan mirrors the pruned one at smaller
+        width: ONE aggregation job yields both the emptiness check and
+        the TRUNCATE seq (assumes apply_cdc_epoch's seq/op column
+        contract, like PrunedParquetStateStore._scan_batch)."""
+        row = batch_df.agg(
+            F.count(F.lit(1)).alias("n"),
+            truncate_seq_expr("seq", "op").alias("tr"),
+        ).first()
+        if row["n"] == 0:
+            return None, None
+        return self._merge_commit_nonempty(
+            batch_df, pk, version, epoch_id, trunc_seq=row["tr"]
+        )
+
+    def _merge_commit_nonempty(
+        self, batch_df: DataFrame, pk: list[str], version: int, epoch_id: int,
+        trunc_seq: object, broadcast_changes: bool = True,
+    ) -> tuple[set[str] | None, set[str] | None]:
+        """Full-snapshot read-merge-rewrite for a batch the caller has
+        PROVEN non-empty — the pruned store's TRUNCATE and heal/DDL
+        fallbacks enter here so neither the pre-scan's count nor its
+        truncate seq is re-derived with extra jobs per fallback epoch
+        (``trunc_seq`` forwards the pre-scan result to merge_cdc).
+
+        ``broadcast_changes`` default True: the PLAIN store has no
+        pre-scan row count and assumes micro-batch-sized changes (its
+        documented operating envelope); the pruned store's fallback
+        paths forward their measured heuristic so a backfill-sized
+        TRUNCATE/heal epoch does not pin millions of touched keys in
+        every executor."""
+        state = self.read()
+        prev_cols = None if state is None else {c.lower() for c in state.columns}
+        new_state = merge_cdc(state, batch_df, pk, old_prefix="old_",
+                              trunc_seq=trunc_seq,
+                              broadcast_changes=broadcast_changes)
+        self._write_unlocked(new_state, version, epoch_id=epoch_id)
+        return {c.lower() for c in new_state.columns}, prev_cols
 
 
 def _crashpoint(name: str) -> None:
@@ -703,7 +692,7 @@ class PrunedParquetStateStore(ParquetStateStore):
         pre-scan at one job/epoch; assumes apply_cdc_epoch's seq/op
         column contract."""
         # truncate_seq_expr / old_key_exprs come from merge.py — the
-        # pre-scan is AUTHORITATIVE (check_truncate=False downstream),
+        # pre-scan is AUTHORITATIVE (trunc_seq is forwarded downstream),
         # so a hand-maintained copy drifting from collapse_changes
         # would be unguarded
         aggs = [
@@ -788,10 +777,10 @@ class PrunedParquetStateStore(ParquetStateStore):
         n_changes = n_rows + (d["rows"] if d else 0)
         changes = self._change_set(batch_df, manifest, epoch_id)
         if n_changes > self._fold_bound(manifest):
-            # check_truncate=False: the pre-scan proved no TRUNCATE
+            # trunc_seq=None: the pre-scan proved no TRUNCATE
             merged = merge_cdc(
                 self._read_buckets(manifest, touched), changes, pk,
-                check_truncate=False,
+                trunc_seq=None,
                 broadcast_changes=n_changes <= self.broadcast_threshold_rows,
             )
             self._commit_touched(merged, version, manifest, touched, epoch_id)
@@ -1053,7 +1042,6 @@ def run_cdc_stream(
     retain_versions: int | None = None,
     max_files_per_trigger: int | None = None,
     state_buckets: int | None = None,
-    prune_every: int = 1,
     state_broadcast_threshold_rows: int = 2_000_000,
 ):
     """Wire the full pipeline: file stream -> typed changes ->
@@ -1071,12 +1059,9 @@ def run_cdc_stream(
     to the HTTP notifier when ``cfg.notify_url`` is set (S9,
     PhoenixEtlService.java:174-215), else no-op.
 
-    ``retain_versions``: when set, prune committed snapshots older
-    than the newest N (the long-running deployment needs this or
-    state size x epochs accumulates). ``prune_every`` sets the GC
-    cadence: prune after every Nth committing epoch (default every
-    epoch; a deployment with large n_buckets moves GC — an
-    O(metadata) scan — off the per-epoch path by raising it).
+    ``retain_versions``: when set, every committing epoch prunes
+    committed snapshots older than the newest N (the long-running
+    deployment needs this or state size x epochs accumulates).
 
     ``state_buckets``: when set, back the stream with the
     PrunedParquetStateStore (N PK-hash buckets) so each epoch commits
@@ -1099,150 +1084,16 @@ def run_cdc_stream(
     hook = notify_hook if notify_hook is not None else make_notifier(cfg)
     on_change = (lambda: hook(notify_payload(cfg))) if hook is not None else None
 
-    # Prune cadence counts COMMITTING epochs, not epoch ids: empty
-    # epochs never prune, so "epoch_id % N == 0" starves GC whenever
-    # committing epochs systematically miss the multiples — snapshots
-    # then accumulate unboundedly, the exact failure
-    # retain_versions exists to prevent. Per-run counter: a restart
-    # resets it, which at worst prunes one epoch early.
-    n_committed = 0
-
     def apply_epoch(batch_df: DataFrame, epoch_id: int) -> None:
-        nonlocal n_committed
         committed = apply_cdc_epoch(
             store, batch_df, epoch_id, pk, on_schema_change=on_change
         )
         if committed and retain_versions is not None:
-            n_committed += 1
-            if n_committed % max(1, prune_every) == 0:
-                store.prune(keep_last=retain_versions)
+            store.prune(keep_last=retain_versions)
 
     stream = read_canal_stream(spark, source_path, max_files_per_trigger)
     changes = typed_changes(stream, cfg, value_schema)
     return _start_foreach(changes, apply_epoch, checkpoint_path, available_now)
-
-
-def windowed_rollup_stream(
-    events: DataFrame,
-    bucket: str = "1 day",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Event-time tumbling-window rollup with late-data handling: the
-    streaming twin of analytics.time_window_rollup (same grouping, same
-    aggregates). The watermark bounds state: windows older than
-    max(event_time) - watermark finalize and evict; events later than
-    that are dropped — the knob the reference lacks entirely (its
-    ordering is transaction-log position, SURVEY §2e note).
-
-    Input must carry an event-time `ts` timestamp column; works on a
-    readStream DataFrame (append mode output) and on a batch DataFrame
-    (watermark is a no-op there, same results as the batch rollup).
-    """
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", bucket).alias("win"), F.col("event_type"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.approx_count_distinct("user_id").alias("approx_users"),
-            # try_cast per the engine invariant (session.py): under ANSI a
-            # plain cast of one out-of-range value would wedge the stream
-            # (the failed epoch replays forever)
-            F.sum(F.col("value").try_cast("decimal(18,4)")).alias("sum_value"),
-        )
-        .select(
-            F.unix_micros(F.col("win.start")).alias("win_start_us"),
-            "event_type", "n_events", "approx_users", "sum_value",
-        )
-    )
-
-
-def stateful_running_totals(
-    events: DataFrame,
-    timeout_ms: int | None = 1_800_000,
-) -> DataFrame:
-    """Custom stateful streaming operator via applyInPandasWithState:
-    per-user running event count + value sum, emitted per micro-batch,
-    state evicted on processing-time timeout (timeout_ms). This is the extension
-    point for operators Spark's built-ins can't express (the
-    reference has no analogue; SURVEY §7.4 scale path for per-entity
-    accumulators over unbounded streams).
-
-    State is one (count, sum) pair per user — O(active keys), bounded
-    by the timeout eviction. ``timeout_ms=None`` disables eviction
-    (NoTimeout) — REQUIRED for Trigger.AvailableNow drain runs: with a
-    processing-time timeout pending, the availableNow query keeps
-    scheduling timeout-evaluation micro-batches and NEVER terminates
-    (observed: 50+ empty batches on a one-file source; the old test
-    masked it by ignoring awaitTermination's False).
-    """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    out_schema = T.StructType(
-        [
-            T.StructField("user_id", T.LongType()),
-            T.StructField("n_events", T.LongType()),
-            T.StructField("sum_value", T.DoubleType()),
-        ]
-    )
-    state_schema = T.StructType(
-        [
-            T.StructField("n", T.LongType()),
-            T.StructField("s", T.DoubleType()),
-        ]
-    )
-
-    def update(key, pdfs, state: GroupState):
-        import pandas as pd
-
-        if state.hasTimedOut:
-            state.remove()
-            return
-        n, s = state.get if state.exists else (0, 0.0)
-        for pdf in pdfs:
-            n += int(len(pdf))
-            s += float(pdf["value"].sum())
-        state.update((n, s))
-        if timeout_ms is not None:
-            state.setTimeoutDuration(timeout_ms)
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "n_events": [n], "sum_value": [s]}
-        )
-
-    return (
-        events.select("user_id", "value")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            update,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="update",
-            timeoutConf=(GroupStateTimeout.ProcessingTimeTimeout
-                         if timeout_ms is not None
-                         else GroupStateTimeout.NoTimeout),
-        )
-    )
-
-
-def dedup_stream(
-    events: DataFrame,
-    key_cols: list[str],
-    ts_col: str = "ts",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Streaming exact dedup: drop events whose key was already seen,
-    with state bounded by the watermark (dropDuplicatesWithinWatermark
-    evicts keys older than max(event_time) - watermark; a duplicate
-    arriving inside the horizon is dropped, one arriving later is the
-    stream's responsibility to avoid — the standard at-least-once ->
-    effectively-once trick for CDC/event feeds at 100 TB/day, where
-    unbounded dedup state is impossible).
-
-    The batch twin is exact_dedup / dropDuplicates; same key columns,
-    same result on a replayed bounded input.
-    """
-    return events.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
-        key_cols
-    )
 
 
 def run_cdc_stream_to_sink(
@@ -1285,51 +1136,6 @@ def run_cdc_stream_to_sink(
     stream = read_canal_stream(spark, source_path)
     changes = typed_changes(stream, cfg, value_schema)
     return _start_foreach(changes, apply_epoch, checkpoint_path, available_now)
-
-
-def interval_join_streams(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    left_ts: str,
-    right_ts: str,
-    lookback: str = "10 minutes",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Stream-stream interval join: each left event paired with the
-    same-key right events whose event time falls within
-    [left_ts - lookback, left_ts] — the streaming counterpart of the
-    batch as-of join (operators/asof.py). True asof (exactly the
-    latest match) is not expressible in Structured Streaming's
-    append-mode join; the bounded-interval join IS, and the range
-    condition is what lets Spark evict state.
-
-    Scale notes: both sides carry a watermark, and the range
-    condition gives the state store a per-key eviction bound — right
-    rows older than (watermark + lookback) below the left watermark
-    are dropped from state, so state size is O(events within the
-    lookback window), not O(stream length). Without the range
-    condition Spark would keep the entire right stream in state.
-
-    ``left_ts``/``right_ts`` must be distinct column names (rename
-    before calling when joining a stream to itself) — the condition
-    references them unqualified so the joined output carries both.
-    """
-    if left_ts == right_ts:
-        raise ValueError(
-            "left_ts and right_ts must differ (rename one side) so the "
-            "joined output is unambiguous"
-        )
-    l = left.withWatermark(left_ts, watermark)
-    r = right.withWatermark(right_ts, watermark)
-    right_on = f"__r_{on}"
-    r = r.withColumnRenamed(on, right_on)
-    cond = (
-        (F.col(on) == F.col(right_on))
-        & (F.col(right_ts) <= F.col(left_ts))
-        & (F.col(right_ts) >= F.col(left_ts) - F.expr(f"INTERVAL {lookback}"))
-    )
-    return l.join(r, cond, "inner").drop(right_on)
 
 
 def kafka_source_options(
@@ -1376,116 +1182,6 @@ def read_canal_kafka(
     for k, v in kafka_source_options(bootstrap_servers, topic, **kwargs).items():
         reader = reader.option(k, v)
     return parse_dml_json(reader.load(), json_col="value")
-
-
-def state_changes(
-    store: ParquetStateStore,
-    from_version: int,
-    to_version: int,
-    pk: list[str],
-) -> DataFrame:
-    """Change data feed between two committed state snapshots: the
-    row-level (op, before, after) diff a downstream consumer replays
-    to follow this store without reprocessing the source stream —
-    the engine's own output expressed as CDC.
-
-    Output: pk columns + ``op`` in {INSERT, UPDATE, DELETE} + every
-    non-pk column twice (``<col>__before``, ``<col>__after``).
-    Unchanged rows are excluded (full-row comparison, null-safe).
-    Schema-straddling diffs (a DDL/heal epoch between the versions
-    added or dropped columns) work: the value-column set is the UNION
-    of both snapshots' columns, null-padded on the side that lacks a
-    column — an added column surfaces as before=NULL, a dropped one
-    as after=NULL.
-
-    One full-outer shuffle join on the pk; snapshots written
-    pk-partitioned (sorted/bucketed layout) let AQE elide the
-    exchange."""
-    old = store.read_version(from_version)
-    new = store.read_version(to_version)
-    # Column identity is CASE-INSENSITIVE (the engine's reference
-    # identifier semantics, COVERAGE.md §2c note): merge_cdc heals
-    # common columns toward the batch's casing, so a heal epoch can
-    # re-case a state column between two snapshots — a case-sensitive
-    # union then emitted BOTH casings and the diff died with
-    # AMBIGUOUS_REFERENCE (r10 review, reproduced). Canonical spelling
-    # = the NEW snapshot's.
-    old_types = {f.name.lower(): f.dataType for f in old.schema.fields}
-    new_types = {f.name.lower(): f.dataType for f in new.schema.fields}
-    types = dict(old_types)
-    types.update(new_types)
-    pk_l = {p.lower() for p in pk}
-    val_cols = [c for c in new.columns if c.lower() not in pk_l] + [
-        c for c in old.columns
-        if c.lower() not in new_types and c.lower() not in pk_l
-    ]
-
-    def side(df: DataFrame, tag: str, flag: str) -> DataFrame:
-        have = {c2.lower(): c2 for c2 in df.columns}
-        cols = []
-        for c in val_cols:
-            src = (F.col(have[c.lower()]) if c.lower() in have
-                   else F.lit(None).cast(types[c.lower()]))
-            cols.append(src.alias(f"{c}__{tag}"))
-        return df.select(*pk, *cols, F.lit(1).alias(flag))
-
-    o = side(old, "before", "__in_old")
-    n = side(new, "after", "__in_new")
-    j = o.join(n, on=pk, how="full_outer")
-    changed = F.lit(False)
-    for c in val_cols:
-        b, a = F.col(f"{c}__before"), F.col(f"{c}__after")
-        cl = c.lower()
-        if (
-            cl in old_types
-            and cl in new_types
-            and old_types[cl] != new_types[cl]
-        ):
-            # A heal/DDL epoch changed the column's TYPE between the
-            # snapshots: a raw null-safe compare would either raise or
-            # implicitly coerce. Forward leg: the row is CHANGED when
-            # try_cast(old -> new) differs from the after-value (or
-            # the new type cannot represent the old value) — a pure
-            # widening (int 2 -> double 2.0, string "2" -> int 2) is
-            # representation-only and emits no row, never an UPDATE
-            # storm over the whole table. Reverse leg, NON-STRING old
-            # types only: a lossy narrowing (double 2.5 healed to
-            # int 2) passes the forward leg, but casting the after-
-            # value back to the old type (2 -> 2.0 != 2.5) exposes
-            # it — that compare is value-based and exact for numeric/
-            # temporal old types. For a STRING old type the reverse
-            # leg is skipped: casting numerics back to string compares
-            # RENDERINGS, and '2' vs '2.0' would flag every non-
-            # canonically-spelled row — a full-table UPDATE storm over
-            # a semantically lossless heal. Output keeps each side's
-            # own type.
-            bc = b.try_cast(new_types[cl])
-            changed = (
-                changed
-                | ~bc.eqNullSafe(a)
-                | (b.isNotNull() & bc.isNull())
-            )
-            if not isinstance(old_types[cl], T.StringType):
-                ac = a.try_cast(old_types[cl])
-                changed = (
-                    changed
-                    | ~ac.eqNullSafe(b)
-                    | (a.isNotNull() & ac.isNull())
-                )
-        else:
-            changed = changed | ~b.eqNullSafe(a)
-    op = (
-        F.when(F.col("__in_old").isNull(), F.lit("INSERT"))
-        .when(F.col("__in_new").isNull(), F.lit("DELETE"))
-        .when(changed, F.lit("UPDATE"))
-    )
-    return (
-        j.withColumn("op", op)
-        .where(F.col("op").isNotNull())
-        .select(*pk, "op",
-                *[F.col(f"{c}__before") for c in val_cols],
-                *[F.col(f"{c}__after") for c in val_cols])
-    )
 
 
 class EraseResult(NamedTuple):

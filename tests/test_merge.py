@@ -216,8 +216,8 @@ def test_merge_cdc_nobroadcast_agrees_with_broadcast(spark):
          for i in range(60)],
         "seq long, op string, id long, name string, balance double",
     )
-    a = merge_cdc(state, changes, ["id"], check_truncate=False)
-    b = merge_cdc(state, changes, ["id"], check_truncate=False,
+    a = merge_cdc(state, changes, ["id"], trunc_seq=None)
+    b = merge_cdc(state, changes, ["id"], trunc_seq=None,
                   broadcast_changes=False)
     rows_a = sorted(map(tuple, a.collect()))
     rows_b = sorted(map(tuple, b.collect()))
@@ -230,11 +230,11 @@ def test_merge_cdc_nobroadcast_agrees_with_broadcast(spark):
         or "LeftAnti" in text, text
 
 
-def test_merge_cdc_known_trunc_seq_matches_rescan(spark):
+def test_merge_cdc_forwarded_trunc_seq_matches_rescan(spark):
     """A caller that already pre-scanned the batch (the pruned store's
-    _scan_batch) forwards its truncate seq via known_trunc_seq; the
-    result must be identical to letting merge_cdc re-scan — same
-    semantics, one fewer job (r8 review)."""
+    _scan_batch) forwards its truncate seq via trunc_seq; the result
+    must be identical to letting merge_cdc re-scan — same semantics,
+    one fewer job (r8 review)."""
     state = spark.createDataFrame([(1, "old"), (2, "old")], "id long, v string")
     batch = spark.createDataFrame(
         [(1, "UPDATE", 1, "pre"), (5, "TRUNCATE", 0, None),
@@ -242,14 +242,14 @@ def test_merge_cdc_known_trunc_seq_matches_rescan(spark):
         "seq long, op string, id long, v string",
     )
     scanned = merge_cdc(state, batch, ["id"])
-    forwarded = merge_cdc(state, batch, ["id"], known_trunc_seq=5)
+    forwarded = merge_cdc(state, batch, ["id"], trunc_seq=5)
     assert sorted(map(tuple, scanned.collect())) \
         == sorted(map(tuple, forwarded.collect())) == [(3, "post")]
-    # known None == "pre-scan found no TRUNCATE": skips the scan job
+    # None == "pre-scan found no TRUNCATE": skips the scan job
     # but must not change a truncate-free merge
     no_tr = batch.where("op <> 'TRUNCATE'")
     assert sorted(map(tuple, merge_cdc(state, no_tr, ["id"],
-                                       known_trunc_seq=None).collect())) \
+                                       trunc_seq=None).collect())) \
         == sorted(map(tuple, merge_cdc(state, no_tr, ["id"]).collect()))
 
 

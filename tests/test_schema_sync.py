@@ -204,7 +204,7 @@ def test_align_to_schema_malformed_value_nulls_not_crashes(spark):
     changes = spark.createDataFrame(
         [(10, "UPDATE", 3, 5)], "seq long, op string, id long, value long"
     )
-    out = merge_cdc(state, changes, ["id"], check_truncate=False)
+    out = merge_cdc(state, changes, ["id"], trunc_seq=None)
     got = {r["id"]: r["value"] for r in out.collect()}
     assert got == {1: None, 2: 7, 3: 5}
 

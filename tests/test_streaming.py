@@ -288,7 +288,7 @@ def test_same_second_envelopes_order_by_delivery_ts(spark):
         F.element_at("data", "id").cast("long").alias("id"),
         F.element_at("data", "name").alias("name"),
     )
-    final = merge_cdc(None, typed, ["id"], check_truncate=False).collect()
+    final = merge_cdc(None, typed, ["id"], trunc_seq=None).collect()
     assert [(r["id"], r["name"]) for r in final] == [(1, "second")]
 
 
@@ -307,166 +307,6 @@ def test_merge_ignores_unknown_and_ddl_ops(spark):
     )
     got = {r["id"]: r["name"] for r in merge_cdc(None, changes, ["id"]).collect()}
     assert got == {1: "a"}
-
-
-def test_windowed_rollup_stream_watermark_drops_late(spark, tmp_path):
-    """Event-time tumbling window + watermark: in-window events
-    aggregate; an event later than watermark behind the max event time
-    is dropped once the window has finalized."""
-    import datetime as dt
-
-    from canal_phoenix_adapter_spark.streaming.stream import windowed_rollup_stream
-
-    src = str(tmp_path / "wsrc")
-    os.makedirs(src)
-
-    def ev(eid, day, hour, utype, val):
-        return {
-            "event_id": eid,
-            "user_id": utype,
-            "event_type": "view",
-            "value": val,
-            "ts": f"2024-03-{day:02d}T{hour:02d}:00:00.000Z",
-        }
-
-    # batch 1: two events day 1, one event day 3 (advances watermark
-    # past day 1 + 1h) -- day-1 window can finalize
-    with open(os.path.join(src, "b1.json"), "w", encoding="utf-8") as f:
-        for e in [ev(1, 1, 1, 10, 1.0), ev(2, 1, 2, 11, 2.0), ev(3, 3, 12, 12, 4.0)]:
-            f.write(json.dumps(e) + "\n")
-
-    schema = "event_id long, user_id long, event_type string, value double, ts timestamp"
-    stream = spark.readStream.schema(schema).json(src)
-    rolled = windowed_rollup_stream(stream, bucket="1 day", watermark="1 hour")
-    # One shared FILE sink + checkpoint across both runs: the
-    # watermark state must CARRY so run 2's day-1 event is genuinely
-    # behind it (a fresh checkpoint would reprocess b1+b2 together and
-    # the event would legitimately not be late; the memory sink cannot
-    # recover from a checkpoint at all).
-    ckpt = str(tmp_path / "wckpt")
-    out = str(tmp_path / "wout")
-
-    def run_once():
-        q = (
-            rolled.writeStream.format("parquet")
-            .outputMode("append")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(120)
-        collected = spark.read.parquet(out).collect()
-        rows = {r["win_start_us"]: r for r in collected}
-        # one row per window — a re-emitted window would collide in
-        # the dict and silently shadow its first emission
-        assert len(collected) == len(rows), collected
-        return rows
-
-    rows = run_once()
-    # append mode emits only FINALIZED windows: day 1 (watermark moved
-    # past its end), not day 3 (still open)
-    day1_us = int(dt.datetime(2024, 3, 1, tzinfo=dt.timezone.utc).timestamp() * 1_000_000)
-    assert list(rows) == [day1_us]
-    assert rows[day1_us]["n_events"] == 2
-    assert float(rows[day1_us]["sum_value"]) == 3.0
-
-    # batch 2: a LATE day-1 event (behind the carried watermark) + a
-    # day-4 event that finalizes the day-3 window. Resume from the
-    # SAME checkpoint: run 2 processes only b2.
-    with open(os.path.join(src, "b2.json"), "w", encoding="utf-8") as f:
-        for e in [ev(4, 1, 3, 13, 100.0), ev(5, 4, 1, 14, 8.0)]:
-            f.write(json.dumps(e) + "\n")
-    rows2 = run_once()
-    day3_us = int(dt.datetime(2024, 3, 3, tzinfo=dt.timezone.utc).timestamp() * 1_000_000)
-    # Run 2 adds ONLY the finalized day-3 window. If the watermark
-    # stopped dropping late data, the day-1 window would RE-OPEN for
-    # the late event and re-emit (sum 100.0) once the day-4 event
-    # re-finalized it — so day-1 keeping its run-1 values IS the
-    # late-drop assertion.
-    assert sorted(rows2) == [day1_us, day3_us], rows2
-    assert rows2[day1_us]["n_events"] == 2
-    assert float(rows2[day1_us]["sum_value"]) == 3.0
-    assert rows2[day3_us]["n_events"] == 1
-    assert float(rows2[day3_us]["sum_value"]) == 4.0
-
-
-def test_stateful_running_totals(spark, tmp_path):
-    """applyInPandasWithState: per-user totals accumulate across
-    micro-batches within one run."""
-    from canal_phoenix_adapter_spark.streaming.stream import stateful_running_totals
-
-    src = str(tmp_path / "ssrc")
-    os.makedirs(src)
-    with open(os.path.join(src, "s1.json"), "w", encoding="utf-8") as f:
-        for uid, val in [(1, 1.0), (1, 2.0), (2, 5.0)]:
-            f.write(json.dumps({"user_id": uid, "value": val}) + "\n")
-
-    stream = spark.readStream.schema("user_id long, value double").json(src)
-    # timeout_ms=None: a pending processing-time timeout makes the
-    # availableNow drive loop timeout batches forever (never
-    # terminates) — the operator docstring documents the trap
-    totals = stateful_running_totals(stream, timeout_ms=None)
-    q = (
-        totals.writeStream.format("memory")
-        .queryName("totals")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "sckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(120)
-    got = {r["user_id"]: (r["n_events"], r["sum_value"]) for r in
-           spark.sql("SELECT * FROM totals").collect()}
-    assert got == {1: (2, 3.0), 2: (1, 5.0)}
-
-
-def test_stateful_totals_timed_variant_documented_unsupported_for_drain():
-    """Regression pin for the r8 availableNow hang (db2eb34): a pending
-    processing-time timeout makes Trigger.AvailableNow schedule empty
-    timeout-evaluation batches forever. The operator cannot see the
-    trigger at declaration time, so the contract is documentation: the
-    docstring must keep stating that timeout_ms=None is REQUIRED for
-    availableNow drains, and the timed default must stay non-None so
-    long-running streams keep state eviction. If either half drifts,
-    this fails before the hang can silently return."""
-    import inspect
-
-    from canal_phoenix_adapter_spark.streaming.stream import (
-        stateful_running_totals,
-    )
-
-    doc = inspect.getdoc(stateful_running_totals) or ""
-    assert "timeout_ms=None" in doc and "AvailableNow" in doc
-    assert "NEVER terminates" in doc  # the hazard, stated, not implied
-    sig = inspect.signature(stateful_running_totals)
-    assert sig.parameters["timeout_ms"].default == 1_800_000
-
-
-def test_dedup_stream_within_watermark(spark, tmp_path):
-    """dropDuplicatesWithinWatermark: duplicate event_ids within the
-    watermark horizon collapse to one row."""
-    from canal_phoenix_adapter_spark.streaming.stream import dedup_stream
-
-    src = str(tmp_path / "dsrc")
-    os.makedirs(src)
-    with open(os.path.join(src, "d1.json"), "w", encoding="utf-8") as f:
-        for eid, t in [(1, "01:00"), (1, "01:05"), (2, "01:10"), (2, "01:10"), (3, "02:00")]:
-            f.write(json.dumps({"event_id": eid, "ts": f"2024-03-01T{t}:00.000Z"}) + "\n")
-
-    stream = spark.readStream.schema("event_id long, ts timestamp").json(src)
-    q = (
-        dedup_stream(stream, ["event_id"], watermark="30 minutes")
-        .writeStream.format("memory")
-        .queryName("dedup1")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "dckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(120)
-    ids = sorted(r["event_id"] for r in spark.sql("SELECT * FROM dedup1").collect())
-    assert ids == [1, 2, 3]
 
 
 def test_notify_hook_fires_on_schema_changing_epochs(spark, tmp_path):
@@ -700,68 +540,6 @@ def test_sink_topology_checkpoint_loss_is_effectively_once(spark, tmp_path):
                                 ((k, (n, b)) for k, (n, b) in EXPECTED.items())}
 
 
-def test_interval_join_streams(spark, tmp_path):
-    """Stream-stream interval join: purchases pick up same-user clicks
-    within the lookback window; clicks outside it (or other users')
-    don't join. Watermark + range condition bound the join state."""
-    from canal_phoenix_adapter_spark.streaming.stream import interval_join_streams
-
-    csrc, psrc = str(tmp_path / "clicks"), str(tmp_path / "purch")
-    os.makedirs(csrc)
-    os.makedirs(psrc)
-
-    def ev(eid, user, minute):
-        return {"event_id": eid, "user_id": user,
-                "ts": f"2024-03-01T10:{minute:02d}:00.000Z"}
-
-    with open(os.path.join(csrc, "c.json"), "w", encoding="utf-8") as f:
-        for e in [ev(1, 7, 0), ev(2, 7, 25), ev(3, 8, 29), ev(4, 9, 30)]:
-            f.write(json.dumps(e) + "\n")
-    with open(os.path.join(psrc, "p.json"), "w", encoding="utf-8") as f:
-        for e in [ev(100, 7, 30), ev(101, 8, 30)]:
-            f.write(json.dumps(e) + "\n")
-
-    schema = "event_id long, user_id long, ts timestamp"
-    clicks = (
-        spark.readStream.schema(schema).json(csrc)
-        .withColumnRenamed("ts", "click_ts")
-        .withColumnRenamed("event_id", "click_id")
-    )
-    purch = spark.readStream.schema(schema).json(psrc)
-    joined = interval_join_streams(
-        purch, clicks, on="user_id", left_ts="ts", right_ts="click_ts",
-        lookback="10 minutes", watermark="1 hour",
-    )
-    q = (
-        joined.writeStream.format("memory")
-        .queryName("ij1")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(120)
-    rows = {
-        (r["event_id"], r["click_id"])
-        for r in spark.sql("SELECT event_id, click_id FROM ij1").collect()
-    }
-    # purchase 100 (user 7, 10:30): click 2 at 10:25 is within 10 min;
-    # click 1 at 10:00 is not. purchase 101 (user 8, 10:30): click 3 at
-    # 10:29 joins. click 4 belongs to user 9 -> never joins.
-    assert rows == {(100, 2), (101, 3)}
-
-
-def test_interval_join_rejects_same_ts_name(spark):
-    import pytest as _pytest
-    from pyspark.sql import functions as F
-
-    from canal_phoenix_adapter_spark.streaming.stream import interval_join_streams
-
-    df = spark.range(1).select(F.col("id").alias("user_id"),
-                               F.current_timestamp().alias("ts"))
-    with _pytest.raises(ValueError):
-        interval_join_streams(df, df, on="user_id", left_ts="ts", right_ts="ts")
-
-
 def test_state_store_read_version_time_travel(spark, tmp_path):
     import pytest as _pytest
 
@@ -881,33 +659,6 @@ def test_session_window_streaming_with_watermark(spark, tmp_path):
     assert not any(u == 8 for u, _ in rows)
 
 
-def test_state_changes_diff_between_versions(spark, tmp_path):
-    from canal_phoenix_adapter_spark.streaming.stream import state_changes
-
-    store = ParquetStateStore(spark, str(tmp_path / "cdf"))
-    v0 = spark.createDataFrame(
-        [(1, "a", 1.0), (2, "b", 2.0), (3, "c", 3.0)],
-        "id long, name string, bal double",
-    )
-    v1 = spark.createDataFrame(
-        [(1, "a", 1.0),        # unchanged -> excluded
-         (2, "b2", 2.0),       # update
-         (4, "d", 4.0)],       # insert; 3 deleted
-        "id long, name string, bal double",
-    )
-    store.write(v0, 0)
-    store.write(v1, 1)
-    got = {
-        r["id"]: (r["op"], r["name__before"], r["name__after"])
-        for r in state_changes(store, 0, 1, ["id"]).collect()
-    }
-    assert got == {
-        2: ("UPDATE", "b", "b2"),
-        3: ("DELETE", "c", None),
-        4: ("INSERT", None, "d"),
-    }
-
-
 @pytest.mark.parametrize("buckets", [None, 4])
 def test_bootstrap_then_stream(spark, tmp_path, buckets):
     """The reference's real deployment pattern (etl THEN sync,
@@ -948,44 +699,6 @@ def test_bootstrap_then_stream(spark, tmp_path, buckets):
     }
     # streamed expectations PLUS the untouched bootstrap row
     assert got == {**EXPECTED, 50: ("seed-only", 9.0)}
-
-
-def test_state_changes_across_column_recasing(spark, tmp_path):
-    """merge_cdc heals common columns toward the batch's casing, so a
-    heal epoch can RE-CASE a state column between snapshots; the diff
-    must treat 'Val' and 'val' as one column (r10 review: the case-
-    sensitive union emitted both and died with AMBIGUOUS_REFERENCE)."""
-    from canal_phoenix_adapter_spark.streaming.stream import state_changes
-
-    store = ParquetStateStore(spark, str(tmp_path / "cdfcase"))
-    v0 = spark.createDataFrame([(1, "a"), (2, "b")], "id long, Val string")
-    v1 = spark.createDataFrame([(1, "a"), (2, "b2")], "id long, val string")
-    store.write(v0, 0)
-    store.write(v1, 1)
-    got = {r["id"]: (r["op"], r["val__before"], r["val__after"])
-           for r in state_changes(store, 0, 1, ["id"]).collect()}
-    assert got == {2: ("UPDATE", "b", "b2")}  # row 1 unchanged, excluded
-
-
-def test_state_changes_across_schema_change(spark, tmp_path):
-    """A heal/DDL epoch between the two versions: added column shows
-    before=NULL, dropped column shows after=NULL, diff still runs."""
-    from canal_phoenix_adapter_spark.streaming.stream import state_changes
-
-    store = ParquetStateStore(spark, str(tmp_path / "cdf2"))
-    v0 = spark.createDataFrame(
-        [(1, "a", "legacy")], "id long, name string, old_col string"
-    )
-    v1 = spark.createDataFrame(
-        [(1, "a", 7)], "id long, name string, level int"
-    )
-    store.write(v0, 0)
-    store.write(v1, 1)
-    row = state_changes(store, 0, 1, ["id"]).collect()[0]
-    assert row["op"] == "UPDATE"
-    assert row["level__before"] is None and row["level__after"] == 7
-    assert row["old_col__before"] == "legacy" and row["old_col__after"] is None
-    assert row["name__before"] == "a" and row["name__after"] == "a"
 
 
 def test_versions_and_prune_see_negative_bootstrap_snapshot(spark, tmp_path):
@@ -1053,98 +766,6 @@ def test_erasure_does_not_shadow_future_epoch(spark, tmp_path):
 
     # replay of epoch 1 after the erasure interleave still no-ops
     assert apply_cdc_epoch(store, b1, 1, ["id"]) is False
-
-
-def test_state_changes_across_type_change(spark, tmp_path):
-    """A heal epoch changed a column's TYPE between snapshots: the
-    diff compares values under try_cast-to-the-new-type instead of
-    raising/coercing; each side keeps its own type in the output."""
-    from canal_phoenix_adapter_spark.streaming.stream import state_changes
-
-    store = ParquetStateStore(spark, str(tmp_path / "cdf3"))
-    v0 = spark.createDataFrame(
-        [(1, "2"), (2, "3"), (3, "9"), (4, "abc")],
-        "id long, bal string",
-    )
-    v1 = spark.createDataFrame(
-        [(1, 2), (2, 4), (3, 9), (4, 7)], "id long, bal int"
-    )
-    store.write(v0, 0)
-    store.write(v1, 1)
-    got = {
-        r["id"]: (r["op"], r["bal__before"], r["bal__after"])
-        for r in state_changes(store, 0, 1, ["id"]).collect()
-    }
-    # "2" -> 2 and "9" -> 9 under the type migration -> unchanged;
-    # "abc" is unrepresentable as int -> conservatively CHANGED
-    assert got == {2: ("UPDATE", "3", 4), 4: ("UPDATE", "abc", 7)}
-
-
-def test_state_changes_widening_heal_no_update_storm(spark, tmp_path):
-    """A pure numeric widening (int -> double) with unchanged values
-    must emit NO rows: a downstream CDF consumer must not replay a
-    full-table update storm after a representation-only heal."""
-    from canal_phoenix_adapter_spark.streaming.stream import state_changes
-
-    store = ParquetStateStore(spark, str(tmp_path / "cdf4"))
-    v0 = spark.createDataFrame([(1, 2), (2, 3)], "id long, bal int")
-    v1 = spark.createDataFrame(
-        [(1, 2.0), (2, 3.5)], "id long, bal double"
-    )
-    store.write(v0, 0)
-    store.write(v1, 1)
-    got = {
-        r["id"]: (r["op"], r["bal__before"], r["bal__after"])
-        for r in state_changes(store, 0, 1, ["id"]).collect()
-    }
-    # 2 -> 2.0 is representation-only; 3 -> 3.5 is a real change
-    assert got == {2: ("UPDATE", 3, 3.5)}
-
-
-def test_state_changes_lossy_narrowing_not_suppressed(spark, tmp_path):
-    """A LOSSY heal (double -> int) must still report rows whose
-    stored value actually changed: comparing only old-cast-to-new
-    would see try_cast(2.5 AS int) == 2 and silently emit nothing —
-    the reverse-direction cast (2 -> 2.0 != 2.5) catches it. A value
-    that survives the round-trip (4.0 -> 4 -> 4.0) stays unchanged."""
-    from canal_phoenix_adapter_spark.streaming.stream import state_changes
-
-    store = ParquetStateStore(spark, str(tmp_path / "cdf5"))
-    v0 = spark.createDataFrame([(1, 2.5), (2, 4.0)], "id long, bal double")
-    v1 = spark.createDataFrame([(1, 2), (2, 4)], "id long, bal int")
-    store.write(v0, 0)
-    store.write(v1, 1)
-    got = {
-        r["id"]: (r["op"], r["bal__before"], r["bal__after"])
-        for r in state_changes(store, 0, 1, ["id"]).collect()
-    }
-    assert got == {1: ("UPDATE", 2.5, 2)}
-
-
-def test_state_changes_string_to_double_heal_no_rendering_storm(spark, tmp_path):
-    """A string -> double heal with numerically-equal values must emit
-    NOTHING: a reverse-leg compare through string RENDERINGS would
-    flag '2' vs '2.0' on every non-canonically-spelled row — a
-    full-table UPDATE storm over a lossless migration. Only genuinely
-    different values (and unparseable ones) emit."""
-    from canal_phoenix_adapter_spark.streaming.stream import state_changes
-
-    store = ParquetStateStore(spark, str(tmp_path / "cdf6"))
-    v0 = spark.createDataFrame(
-        [(1, "2"), (2, "0.5"), (3, "3"), (4, "xyz")], "id long, bal string"
-    )
-    v1 = spark.createDataFrame(
-        [(1, 2.0), (2, 0.5), (3, 99.0), (4, 7.0)], "id long, bal double"
-    )
-    store.write(v0, 0)
-    store.write(v1, 1)
-    got = {
-        r["id"]: (r["op"], r["bal__before"], r["bal__after"])
-        for r in state_changes(store, 0, 1, ["id"]).collect()
-    }
-    # '2'->2.0 and '0.5'->0.5 are lossless: no row; '3'->99.0 is a
-    # real change; 'xyz' is unrepresentable -> conservatively changed
-    assert got == {3: ("UPDATE", "3", 99.0), 4: ("UPDATE", "xyz", 7.0)}
 
 
 def test_commit_lock_serializes_writers(spark, tmp_path):
@@ -1641,7 +1262,6 @@ def test_pruned_store_truncate_erase_prune_timetravel(spark, tmp_path):
     from canal_phoenix_adapter_spark.streaming.stream import (
         apply_cdc_epoch,
         erase_keys,
-        state_changes,
     )
 
     pruned, full = _pruned_and_full(spark, tmp_path)
@@ -1653,11 +1273,15 @@ def test_pruned_store_truncate_erase_prune_timetravel(spark, tmp_path):
     for store in (pruned, full):
         assert apply_cdc_epoch(store, b0, 0, ["id"])
         assert apply_cdc_epoch(store, b1, 1, ["id"])
-    # CDF between pruned versions (bucket bookkeeping must never surface)
-    diff = state_changes(pruned, 0, 1, ["id"]).collect()
-    assert [(r["id"], r["op"]) for r in diff] == [(2, "UPDATE")]
-    # time travel: v0 still shows the pre-update row via its manifest
-    assert {r["id"]: r["balance"] for r in pruned.read_version(0).collect()}[2] == 2.0
+    # time travel: v0 still shows the pre-update row via its manifest,
+    # only id 2 differs from v1, and bucket bookkeeping never surfaces
+    v0, v1 = pruned.read_version(0), pruned.read_version(1)
+    assert pruned.BUCKET not in v0.columns and pruned.BUCKET not in v1.columns
+    rows0 = {r["id"]: r.asDict() for r in v0.collect()}
+    rows1 = {r["id"]: r.asDict() for r in v1.collect()}
+    assert rows0.keys() == rows1.keys()
+    assert [k for k in rows0 if rows0[k] != rows1[k]] == [2]
+    assert rows0[2]["balance"] == 2.0 and rows1[2]["balance"] == 2.2
     for store in (pruned, full):
         assert apply_cdc_epoch(store, b2, 2, ["id"])
     assert _state_dict(pruned) == _state_dict(full) == {5: (5.0, "reborn")}
@@ -2046,9 +1670,9 @@ def test_pruned_nobroadcast_merge_plan_reads_only_touched(spark, tmp_path):
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")  # no auto rescue
     try:
-        m_no = merge_cdc(touched_state, b1, ["id"], check_truncate=False,
+        m_no = merge_cdc(touched_state, b1, ["id"], trunc_seq=None,
                          broadcast_changes=False)
-        m_b = merge_cdc(touched_state, b1, ["id"], check_truncate=False,
+        m_b = merge_cdc(touched_state, b1, ["id"], trunc_seq=None,
                         broadcast_changes=True)
         assert "BroadcastExchange" not in explain_str(m_no)
         assert "BroadcastExchange" in explain_str(m_b)
@@ -2075,10 +1699,7 @@ def test_commit_lock_excludes_other_processes(tmp_path):
     import sys
     import time
 
-    from canal_phoenix_adapter_spark.streaming.stream import _CommitPointer
-
-    holder = _CommitPointer()
-    holder._meta_dir = str(tmp_path)
+    holder = ParquetStateStore(None, str(tmp_path))
     child = subprocess.Popen(
         [sys.executable, "-c", (
             "import fcntl, sys, time\n"

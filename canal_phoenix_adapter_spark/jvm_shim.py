@@ -1,25 +1,46 @@
-"""The package's ONE private-API seam, isolated and Connect-guarded
-(r10 verdict task 3 — everything else speaks public DataFrame API).
+"""The package's private-API seam, isolated and Connect-guarded
+(everything else speaks public DataFrame API). It holds the two things
+PySpark offers no public way to do:
 
-Why it exists: PySpark has no public way to release localCheckpoint
-storage. ``DataFrame.unpersist()`` goes through the cache manager,
-which does not track checkpoint RDDs, so an iterative operator
-(``dup_clusters``) that localCheckpoints per iteration would leak
-every iteration's blocks until driver GC in a long-lived driver. The
-only JVM handle is ``SparkContext.getPersistentRDDs`` — reachable from
-Python solely via the private ``sc._jsc`` accessor, so that access
-lives HERE and nowhere else (enforced by test_no_private_jvm_api).
+* ask Catalyst for a plan's size estimate (``fits_one_split``), which
+  the pruned state store uses to run a small epoch as one task;
+* release localCheckpoint storage. ``DataFrame.unpersist()`` goes
+  through the cache manager, which does not track checkpoint RDDs, so
+  an iterative operator (``dup_clusters``) that localCheckpoints per
+  iteration would leak every iteration's blocks until driver GC in a
+  long-lived driver. The only JVM handle is
+  ``SparkContext.getPersistentRDDs`` — reachable from Python solely via
+  the private ``sc._jsc`` accessor.
+
+Those accesses live HERE and nowhere else (enforced by
+test_no_private_jvm_api).
 
 Connect guard: under Spark Connect there is no driver-side
-SparkContext, so both functions degrade to a documented no-op
+SparkContext, so the checkpoint functions degrade to a documented no-op
 (``persistent_rdd_ids`` -> empty set, ``release_rdds`` -> pass):
 correctness is unaffected — block release falls back to session GC,
-the behavior every Spark program gets by default.
+the behavior every Spark program gets by default. ``fits_one_split``
+answers False there, the answer that keeps a batch parallel.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+
+
+def fits_one_split(df: DataFrame, extra_bytes: int = 0) -> bool:
+    """True iff Catalyst's size estimate for ``df``'s optimized plan,
+    plus ``extra_bytes``, is at most ``spark.sql.files.maxPartitionBytes``:
+    the input one scan task would read. Planning only, no Spark job. A
+    plan whose size is unknown reports ``spark.sql.defaultSizeInBytes``
+    (an RDD-built frame does) and so does not fit; False under Connect."""
+    try:
+        jdf = df._jdf  # the seam
+    except AttributeError:  # Connect: no py4j-backed Dataset
+        return False
+    conf = df.sparkSession._jsparkSession.sessionState().conf()
+    size = jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    return int(size) + extra_bytes <= conf.filesMaxPartitionBytes()
 
 
 def _jsc(spark: SparkSession):

@@ -42,7 +42,7 @@ _NO_PRESCAN = object()  # "did not pre-scan"; None means "no TRUNCATE"
 # The merge kernel builds its per-epoch expression tree as SQL text
 # (selectExpr / F.expr, identifiers quoted with _bq) instead of
 # composed Column objects: the Column form cost ~270 ms of py4j
-# round-trips PER merge_cdc call (profiled r14) — paid twice per
+# round-trips PER merge_cdc call — paid twice per
 # streaming epoch and in every merge-family bench gate — where the
 # text form is a handful of calls. Semantics are unchanged (same
 # functions, same aliases); each shared fragment below has ONE
@@ -55,8 +55,7 @@ def truncate_seq_expr(seq_col: str = "seq", op_col: str = "op") -> F.Column:
     shared by last_truncate_seq and the pruned store's single-pass
     pre-scan — two hand-maintained copies of this predicate would
     silently desynchronize the pre-scan from the merge it feeds
-    (merge_cdc's trunc_seq makes the pre-scan authoritative; r10
-    review)."""
+    (merge_cdc's trunc_seq makes the pre-scan authoritative)."""
     return F.max(F.when(F.upper(F.col(op_col)) == OP_TRUNCATE, F.col(seq_col)))
 
 
@@ -153,7 +152,7 @@ def touched_keys(
     consumer only probes key existence, so the dedup buys it nothing —
     and on the broadcast route the distinct's Exchange + two
     HashAggregates were a whole extra AQE stage barrier per streaming
-    epoch (r15). Keep the default for the shuffle route, where the
+    epoch. Keep the default for the shuffle route, where the
     distinct shrinks the shuffled key bytes by the batch's churn
     factor.
 
@@ -366,9 +365,9 @@ def merge_cdc(
     merge scans the batch for it (one full pass). ``None`` says the
     caller knows the batch carries no TRUNCATE — e.g. a source whose
     DDL channel is separate — and skips the scan. Any other value is
-    a caller's own pre-scan result (the pruned store's single-pass
-    _scan_batch), so the truncate SEMANTICS still apply without
-    re-paying the scan job.
+    a caller's own pre-scan result (the pruned store's, observed on
+    its delta write or run as one aggregate job), so the truncate
+    SEMANTICS still apply without re-paying the scan job.
 
     ``skip_missing`` (config/MappingConfig.java:107, honored at
     PhoenixSyncService.java:399-411): batch columns the existing state

@@ -22,12 +22,13 @@ import shutil
 from contextlib import contextmanager
 from typing import NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from canal_phoenix_adapter_spark.config import MappingConfig
 from canal_phoenix_adapter_spark.functions.hashing import bq as _bq
+from canal_phoenix_adapter_spark.jvm_shim import fits_one_split
 from canal_phoenix_adapter_spark.operators.merge import (
     applicable_changes,
     collapse_changes,
@@ -120,7 +121,7 @@ class ParquetStateStore:
         # handle wrote or inferred — committed snapshots are immutable
         # (orphan overwrite only targets versions above _CURRENT), so
         # the next epoch's basis read can skip parquet footer
-        # inference (one driver-side FS round-trip per epoch; r14).
+        # inference (one driver-side FS round-trip per epoch).
         # All-nullable mirrors what inference would return — parquet
         # footers carry no non-null guarantee — so a write-plan schema
         # with non-nullable fields (literals, count()s) can never leak
@@ -305,7 +306,7 @@ class ParquetStateStore:
         The plain store's pre-scan mirrors the pruned one at smaller
         width: ONE aggregation job yields both the emptiness check and
         the TRUNCATE seq (assumes apply_cdc_epoch's seq/op column
-        contract, like PrunedParquetStateStore._scan_batch)."""
+        contract, like PrunedParquetStateStore._scan_aggs)."""
         row = batch_df.agg(
             F.count(F.lit(1)).alias("n"),
             truncate_seq_expr("seq", "op").alias("tr"),
@@ -373,7 +374,13 @@ class PrunedParquetStateStore(ParquetStateStore):
     (no shuffle; every path comes from the manifest, so no partition
     discovery or footer inference).
 
-    Epoch paths (the one-job pre-scan picks one):
+    Epoch paths, picked by a pre-scan of the batch (touched buckets,
+    TRUNCATE seq, row count). Every epoch that keeps the schema first
+    writes the new delta, and the pre-scan is observed on that write;
+    the other paths discard the delta. When (previous delta ∪ batch)
+    fits one scan task the write is one single-task job, so a normal
+    epoch is ONE Spark job. A heal epoch runs the pre-scan as its own
+    job.
       * normal: collapse (previous delta ∪ batch) into a new delta,
         write it, then the manifest, then repoint. No bucket dir is
         read or written.
@@ -594,14 +601,16 @@ class PrunedParquetStateStore(ParquetStateStore):
         return replace_keys(base, delta.select(*self.pk), creates, self.pk,
                             broadcast=d["rows"] <= self.broadcast_threshold_rows)
 
+    def _delta_files(self, d: dict) -> list[str]:
+        path = self._delta_dir(d["owner"])
+        return [os.path.join(path, f) for f in sorted(os.listdir(path))
+                if f.endswith(".parquet")]
+
     def _read_delta(self, d: dict) -> DataFrame:
         # the part files, not the dir: Spark treats a `_`-prefixed path
         # as hidden and warns on every read that names one directly
-        path = self._delta_dir(d["owner"])
-        files = [os.path.join(path, f) for f in sorted(os.listdir(path))
-                 if f.endswith(".parquet")]
         return self.spark.read.schema(T.StructType.fromJson(d["schema"])) \
-            .parquet(*files)
+            .parquet(*self._delta_files(d))
 
     def _read_manifest(self, manifest: dict) -> DataFrame:
         return self._with_delta(self._read_buckets(manifest), manifest)
@@ -658,7 +667,7 @@ class PrunedParquetStateStore(ParquetStateStore):
         it holds rows for — O(tasks x buckets) tiny files per version.
         ``n_parts`` sizes that shuffle (a fold passes |touched|). The
         count stays pinned (REPARTITION_BY_NUM): the AQE-coalescible
-        column-only form measured slower per drive (OPTIMIZATION_r14.md)."""
+        column-only form measured slower per drive."""
         target = os.path.join(self.path, f"v{version}")
         # Sort key is (__bucket, *pk), NOT bare pk: the V1 write path
         # requires its output ordered by the partition column and
@@ -679,22 +688,18 @@ class PrunedParquetStateStore(ParquetStateStore):
         )
         _crashpoint("buckets_written")
 
-    def _scan_batch(
-        self, batch_df: DataFrame, pk: list[str]
-    ) -> tuple[list[int], int | None, int]:
-        """ONE aggregation job over the change batch returning
-        (touched buckets, last TRUNCATE seq or None, batch row
-        count). Touched = every row's NEW key bucket plus PK-change
-        rows' OLD key bucket (the death row lands there — same
-        coalesce(old, new) key as collapse_changes). Folding the
-        TRUNCATE pre-scan, the emptiness check (count == 0) and the
-        fold/broadcast row count into the same pass keeps the
-        pre-scan at one job/epoch; assumes apply_cdc_epoch's seq/op
-        column contract."""
-        # truncate_seq_expr / old_key_exprs come from merge.py — the
-        # pre-scan is AUTHORITATIVE (trunc_seq is forwarded downstream),
-        # so a hand-maintained copy drifting from collapse_changes
-        # would be unguarded
+    def _scan_aggs(self, batch_df: DataFrame, pk: list[str]) -> list[F.Column]:
+        """The pre-scan's aggregates over the change batch, one list
+        for both ways of running it (an ``agg`` job, or ``observe`` on
+        the delta write): touched buckets — every row's NEW key bucket
+        (``nb``) plus PK-change rows' OLD key bucket (``ob``, where the
+        death row lands: same coalesce(old, new) key as
+        collapse_changes) — the last TRUNCATE seq (``tr``) and the row
+        count (``n``). Assumes apply_cdc_epoch's seq/op column
+        contract. truncate_seq_expr and old_key_exprs come from
+        merge.py: the pre-scan is AUTHORITATIVE (its truncate seq is
+        forwarded to merge_cdc), so a copy drifting from the merge's
+        would be unguarded."""
         aggs = [
             F.collect_set(
                 self._bucket_of([F.col(k) for k in pk])
@@ -705,9 +710,22 @@ class PrunedParquetStateStore(ParquetStateStore):
         if any(f"old_{k}" in batch_df.columns for k in pk):
             old_key = old_key_exprs(batch_df.columns, pk, "old_")
             aggs.append(F.collect_set(self._bucket_of(old_key)).alias("ob"))
-        row = batch_df.agg(*aggs).first()
-        touched = set(row["nb"]) | set(row["ob"] if "ob" in row.__fields__ else [])
+        return aggs
+
+    @staticmethod
+    def _scan_result(row: dict) -> tuple[list[int], object, int]:
+        """(touched buckets, last TRUNCATE seq or None, batch row
+        count) from the values of _scan_aggs."""
+        touched = set(row["nb"]) | set(row.get("ob") or ())
         return sorted(touched), row["tr"], row["n"]
+
+    def _scan_batch(
+        self, batch_df: DataFrame, pk: list[str]
+    ) -> tuple[list[int], object, int]:
+        """The pre-scan as its own aggregation job, for heal epochs,
+        which write no delta (see _merge_commit_unlocked)."""
+        row = batch_df.agg(*self._scan_aggs(batch_df, pk)).first()
+        return self._scan_result(row.asDict())
 
     @staticmethod
     def _heals(batch_df: DataFrame, pk: list[str], schema: T.StructType) -> bool:
@@ -758,14 +776,28 @@ class PrunedParquetStateStore(ParquetStateStore):
             return super()._merge_commit_unlocked(
                 batch_df, pk, version, epoch_id
             )
-        touched, trunc_seq, n_rows = self._scan_batch(batch_df, pk)
-        if n_rows == 0:  # empty epoch: nothing to commit
-            return None, None
         manifest = self._manifest(cur)
         schema = self._schema_of(manifest)
-        if trunc_seq is not None or self._heals(batch_df, pk, schema):
-            # TRUNCATE / heal / DDL: full rewrite. The pre-scan already
-            # proved the batch non-empty and found the truncate seq.
+        heals = self._heals(batch_df, pk, schema)
+        if heals:
+            # the pre-scan as its own job: a delta is aligned to the
+            # manifest schema, which this batch changes
+            delta, scan = None, self._scan_batch(batch_df, pk)
+        else:
+            delta, scan = self._write_delta(
+                batch_df, pk, version, manifest, epoch_id)
+        touched, trunc_seq, n_rows = scan
+        if n_rows == 0:  # empty epoch: nothing to commit
+            # v{version} sits above _CURRENT: an orphan (the delta just
+            # written, or a crashed attempt's), never a committed version
+            shutil.rmtree(os.path.join(self.path, f"v{version}"),
+                          ignore_errors=True)
+            return None, None
+        if trunc_seq is not None or heals:
+            # TRUNCATE / heal / DDL: full rewrite (one schema per
+            # manifest), whose static overwrite of v{version} also
+            # clears the delta. The pre-scan already proved the batch
+            # non-empty and found the truncate seq.
             return super()._merge_commit_nonempty(
                 batch_df, pk, version, epoch_id, trunc_seq=trunc_seq,
                 broadcast_changes=n_rows <= self.broadcast_threshold_rows,
@@ -775,18 +807,20 @@ class PrunedParquetStateStore(ParquetStateStore):
         d = manifest["delta"]
         touched = set(touched) | set(d["buckets"] if d else ())
         n_changes = n_rows + (d["rows"] if d else 0)
-        changes = self._change_set(batch_df, manifest, epoch_id)
         if n_changes > self._fold_bound(manifest):
-            # trunc_seq=None: the pre-scan proved no TRUNCATE
+            # trunc_seq=None: the pre-scan proved no TRUNCATE. The
+            # bucket write's static overwrite clears the delta.
             merged = merge_cdc(
-                self._read_buckets(manifest, touched), changes, pk,
+                self._read_buckets(manifest, touched),
+                self._change_set(batch_df, manifest, epoch_id), pk,
                 trunc_seq=None,
                 broadcast_changes=n_changes <= self.broadcast_threshold_rows,
             )
             self._commit_touched(merged, version, manifest, touched, epoch_id)
         else:
             # normal epoch: the new delta over the unchanged base buckets
-            delta = self._write_delta(changes, pk, version, manifest, touched)
+            if delta is not None:
+                delta["buckets"] = sorted(touched)
             self._write_manifest(version, schema, manifest["buckets"],
                                  manifest["rows"], delta)
             self._repoint(version, epoch_id)
@@ -800,11 +834,35 @@ class PrunedParquetStateStore(ParquetStateStore):
         return min(DELTA_FOLD_FRACTION * sum(manifest["rows"].values()),
                    self.broadcast_threshold_rows)
 
-    def _write_delta(self, changes: DataFrame, pk: list[str], version: int,
-                     manifest: dict, touched: set) -> dict | None:
-        """Collapse the change set into ``v{version}/_delta``, aligned to
-        the manifest schema; returns its manifest entry (None for a
-        delta with no rows)."""
+    def _write_delta(
+        self, batch_df: DataFrame, pk: list[str], version: int,
+        manifest: dict, epoch_id: int,
+    ) -> tuple[dict | None, tuple[list[int], object, int]]:
+        """Collapse the change set (previous delta ∪ batch) into
+        ``v{version}/_delta``, aligned to the manifest schema, in the
+        job that also observes the pre-scan (_scan_aggs) on the batch.
+        Returns the delta's manifest entry without the touched buckets
+        (None for a delta with no rows) and the pre-scan result; the
+        caller publishes the delta or discards it. A change set that
+        fits one scan task (fits_one_split) collapses after
+        ``coalesce(1)``, so its groupBy plans no Exchange and the write
+        is ONE single-task job; a larger one collapses in parallel."""
+        # The change set's size is the batch's estimate plus the
+        # previous delta's bytes on disk (Catalyst's estimate of a
+        # parquet scan). It is checked before the batch is observed:
+        # the session keeps an observed frame registered until an
+        # action on it completes.
+        d = manifest["delta"]
+        delta_bytes = 0 if d is None else sum(
+            os.path.getsize(f) for f in self._delta_files(d))
+        one_task = fits_one_split(batch_df, delta_bytes)
+        scan = Observation()
+        changes = self._change_set(
+            batch_df.observe(scan, *self._scan_aggs(batch_df, pk)),
+            manifest, epoch_id,
+        )
+        if one_task:
+            changes = changes.coalesce(1)
         keys = {k.lower(): k for k in pk}
         have = {c.lower() for c in changes.columns}
         cols = []
@@ -826,10 +884,10 @@ class PrunedParquetStateStore(ParquetStateStore):
         delta.write.parquet(target)
         _crashpoint("delta_written")
         rows = self._dir_rows(target)
-        return {"owner": version,
-                "schema": _as_nullable(delta.schema).jsonValue(),
-                "rows": rows,
-                "buckets": sorted(touched)} if rows else None
+        entry = {"owner": version,
+                 "schema": _as_nullable(delta.schema).jsonValue(),
+                 "rows": rows} if rows else None
+        return entry, self._scan_result(scan.get)
 
     def _commit_touched(self, df: DataFrame, version: int, manifest: dict,
                         touched: set, epoch_id) -> None:
@@ -937,8 +995,7 @@ def typed_changes(
     # (session.py NOTE) — on an ANSI Spark 3.x session a plain
     # element_at THROWS on a missing map key (the 'old' map normally
     # carries only changed columns), which would wedge the stream in
-    # an epoch-replay loop (r10 review; Spark 4 returns NULL either
-    # way, so behavior here is unchanged)
+    # an epoch-replay loop (Spark 4 returns NULL either way)
     cols = [F.col("seq"), F.col("op")]
     for f in value_schema.fields:
         cols.append(

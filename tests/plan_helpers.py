@@ -115,6 +115,17 @@ def has_broadcast_join(df: DataFrame) -> bool:
     return "BroadcastHashJoin" in explain_str(df)
 
 
+def sized(df: DataFrame) -> DataFrame:
+    """``df`` cached and counted, so the planner knows its size the way
+    it knows a file-source micro-batch's. An RDD-built frame
+    (``createDataFrame`` over a list) reports
+    ``spark.sql.defaultSizeInBytes`` instead, which sends a pruned
+    state store epoch down its scan-first order (``fits_one_split``)."""
+    df = df.cache()
+    df.count()
+    return df
+
+
 def shuffle_count(df: DataFrame) -> int:
     """Number of Exchange (shuffle) operators in the plan (pre-AQE)."""
     return len(re.findall(r"\(\d+\) Exchange", explain_str(df)))

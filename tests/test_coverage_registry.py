@@ -104,8 +104,10 @@ def test_jvm_shim_degrades_to_noop_without_spark_context():
     """The Connect guard: a session object with no working
     sparkContext (Connect raises on the attribute) must yield an empty
     registry and a silent release no-op — correctness then rides on
-    session GC, the documented fallback."""
+    session GC, the documented fallback. A frame with no py4j Dataset
+    does not fit one split, the answer that keeps a batch parallel."""
     from canal_phoenix_adapter_spark.jvm_shim import (
+        fits_one_split,
         persistent_rdd_ids,
         release_rdds,
     )
@@ -117,3 +119,4 @@ def test_jvm_shim_degrades_to_noop_without_spark_context():
 
     assert persistent_rdd_ids(NoCtx()) == set()
     release_rdds(NoCtx(), {1, 2})  # must not raise
+    assert fits_one_split(object()) is False

@@ -386,14 +386,21 @@ def test_asof_join_mixed_temporal_matches_pandas(spark, tables):
 FOLD_FRACTIONS = [0.0, 3.0, 1e9]
 
 
-def _epoch_frame(spark, ep, heal):
+def _epoch_frame(spark, ep, heal, known_size=True):
     """One epoch's batch; a ``heal`` epoch's image carries an extra
-    ``tag`` column, so the stores take their schema-heal path."""
+    ``tag`` column, so the stores take their schema-heal path. A batch
+    of ``known_size`` (like a file-source micro-batch) lets the pruned
+    store write a small epoch's delta as one single-task job; without
+    it the batch reports spark.sql.defaultSizeInBytes and the delta
+    collapses in parallel."""
+    from plan_helpers import sized
+
     schema = "seq long, op string, id long, val long, old_id long"
-    if not heal:
-        return spark.createDataFrame(ep, schema)
-    rows = [(*r, None if r[3] is None else f"t{r[3]}") for r in ep]
-    return spark.createDataFrame(rows, schema + ", tag string")
+    if heal:
+        ep = [(*r, None if r[3] is None else f"t{r[3]}") for r in ep]
+        schema += ", tag string"
+    df = spark.createDataFrame(ep, schema)
+    return sized(df) if known_size else df
 
 
 def _store_state(store):
@@ -424,7 +431,10 @@ def test_pruned_store_epochs_equal_full_store(spark, evts, data, tmp_path_factor
     the full store, replays included. The drawn fold bound sends the
     pruned epochs down the delta path, the fold path or a mix, and a
     drawn epoch carries an extra column (heal path); TRUNCATE events
-    take the full-rewrite path. The fixed-scenario twins live in
+    take the full-rewrite path. Each epoch's batch is drawn on either
+    side of the pruned store's size check: of known size (a one-task
+    delta write) or of unknown size (a parallel one). The fixed-scenario
+    twins live in
     test_streaming.py; this closes the input-shape gap."""
     from unittest import mock
 
@@ -445,7 +455,9 @@ def test_pruned_store_epochs_equal_full_store(spark, evts, data, tmp_path_factor
     epochs = [evts[a:b] for a, b in zip(bounds, bounds[1:]) if b > a]
     heal_at = data.draw(st.sampled_from([None, *range(1, len(epochs))]),
                         label="heal_at")
-    frames = [_epoch_frame(spark, ep, i == heal_at)
+    known = data.draw(st.lists(st.booleans(), min_size=len(epochs),
+                               max_size=len(epochs)), label="known_size")
+    frames = [_epoch_frame(spark, ep, i == heal_at, known[i])
               for i, ep in enumerate(epochs)]
 
     base = tmp_path_factory.mktemp("prop_store")

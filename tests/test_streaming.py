@@ -9,6 +9,7 @@ from __future__ import annotations
 import datetime
 import json
 import os
+import pathlib
 import shutil
 
 import pytest
@@ -842,8 +843,14 @@ def test_max_files_per_trigger_bounds_epochs(spark, tmp_path):
 BASE_SCHEMA = "seq long, op string, id long, name string, balance double, old_id long"
 
 
-def _batch(spark, rows):
-    return spark.createDataFrame(rows, BASE_SCHEMA)
+def _batch(spark, rows, known_size=True):
+    """A change batch; one of ``known_size`` (like a file-source
+    micro-batch) fits the pruned store's one-task delta write, an
+    RDD-built one reports no size and collapses in parallel."""
+    from plan_helpers import sized
+
+    df = spark.createDataFrame(rows, BASE_SCHEMA)
+    return sized(df) if known_size else df
 
 
 def _pruned_and_full(spark, tmp_path, n_buckets=8):
@@ -885,9 +892,13 @@ def test_pruned_store_matches_full_and_rewrites_only_touched(
     state the full-rewrite store produces and (b) write ONLY a delta:
     its version dir holds `_delta` and the manifest, no bucket dir is
     read, and the manifest serves every bucket from the previous
-    version. A fold epoch materializes ONLY the buckets the delta and
-    the batch touch, reading exactly those, with every other bucket
-    served from the older version."""
+    version — in ONE Spark job whose delta write plans no Exchange (the
+    pre-scan is observed on that write). A fold epoch materializes ONLY
+    the buckets the delta and the batch touch, reading exactly those,
+    with every other bucket served from the older version."""
+    from plan_helpers import explain_str
+
+    from canal_phoenix_adapter_spark.jvm_shim import fits_one_split
     from canal_phoenix_adapter_spark.streaming import stream as stream_mod
     from canal_phoenix_adapter_spark.streaming.stream import apply_cdc_epoch
 
@@ -901,13 +912,37 @@ def test_pruned_store_matches_full_and_rewrites_only_touched(
         (301, "DELETE", 9, None, None, None),
         (302, "UPDATE", 901, "moved", 17.0, 17),
     ])
+    # the size check behind the one-job epoch: a batch of known size
+    # fits one scan task, not under a tiny maxPartitionBytes; an
+    # RDD-built batch's size is unknown
+    key = "spark.sql.files.maxPartitionBytes"
+    saved = spark.conf.get(key)
+    assert fits_one_split(b1)
+    spark.conf.set(key, "16")
+    try:
+        assert not fits_one_split(b1)
+    finally:
+        spark.conf.set(key, saved)
+    assert not fits_one_split(spark.createDataFrame([], BASE_SCHEMA))
     reads = []
     orig_read = pruned._read_buckets
     monkeypatch.setattr(pruned, "_read_buckets",
                         lambda m, b=None: (reads.append(b), orig_read(m, b))[1])
+    collapsed = []
+    orig_collapse = stream_mod.collapse_changes
+    monkeypatch.setattr(stream_mod, "collapse_changes", lambda *a, **kw: (
+        collapsed.append(orig_collapse(*a, **kw)), collapsed[-1])[1])
+    sc = spark.sparkContext
     for store in (pruned, full):
         assert apply_cdc_epoch(store, b0, 0, ["id"])
-        assert apply_cdc_epoch(store, b1, 1, ["id"])
+        if store is pruned:
+            sc.setJobGroup("one-job-epoch", "pruned delta epoch")
+        try:
+            assert apply_cdc_epoch(store, b1, 1, ["id"])
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("one-job-epoch")) == 1
+    assert len(collapsed) == 1 and "Exchange" not in explain_str(collapsed[0])
     # delta path: no bucket dir read, none written
     assert reads == []
     assert sorted(os.listdir(os.path.join(pruned.path, "v1"))) == [
@@ -940,6 +975,17 @@ def test_pruned_store_matches_full_and_rewrites_only_touched(
     assert sum(m2["rows"].values()) == 199
     assert _state_dict(pruned) == _state_dict(full)
     assert _state_dict(pruned)[5] == (5.6, "five2")
+
+    # a change set past the size check collapses in parallel: its delta
+    # write plans an Exchange
+    monkeypatch.setattr(stream_mod, "DELTA_FOLD_FRACTION", 1e9)
+    b3 = _batch(spark, [(500, "UPDATE", 6, "six", 6.6, None)],
+                known_size=False)
+    for store in (pruned, full):
+        assert apply_cdc_epoch(store, b3, 3, ["id"])
+    assert pruned._manifest(3)["delta"]["rows"] == 1
+    assert "Exchange" in explain_str(collapsed[-1])
+    assert _state_dict(pruned) == _state_dict(full)
 
 
 def test_pruned_store_crash_replay_converges_with_full(spark, tmp_path):
@@ -984,33 +1030,46 @@ def _crash_at(point, damage=None):
     return hook
 
 
-@pytest.mark.parametrize("point,fold", [
-    ("delta_written", False),
-    ("manifest_written", False),
-    ("buckets_written", True),
-    ("manifest_written", True),
+@pytest.mark.parametrize("point,fold,known_size", [
+    pytest.param(point, fold, known, id=f"{point}-{fold}"
+                 + ("" if known else "-unsized"))
+    for point, fold in [
+        ("delta_written", False),
+        ("delta_written", True),
+        ("manifest_written", False),
+        ("buckets_written", True),
+        ("manifest_written", True),
+    ]
+    for known in (True, False)
 ])
 def test_pruned_store_crashpoints_replay_to_full_state(
-    spark, tmp_path, monkeypatch, point, fold
+    spark, tmp_path, monkeypatch, point, fold, known_size
 ):
     """Crash a pruned-store epoch at each durable step of its commit
-    path — delta written but no manifest, manifest written but no
-    repoint, a fold part-way through its bucket writes — then replay
-    the epoch: the store must equal the plain store, and the next
-    epoch must still apply."""
+    path — delta written but no manifest (an epoch writes it before it
+    knows it will fold), manifest written but no repoint, a fold
+    part-way through its bucket writes — then replay the epoch: the
+    store must equal the plain store, and the next epochs must still
+    apply, down to a TRUNCATE over a delta. A fold or TRUNCATE epoch
+    leaves no `_delta` behind in its version dir. Batches of known size
+    take the one-task delta write, the others the parallel one."""
     from canal_phoenix_adapter_spark.streaming import stream as stream_mod
     from canal_phoenix_adapter_spark.streaming.stream import apply_cdc_epoch
 
     pruned, full = _pruned_and_full(spark, tmp_path)
     epochs = [
-        _batch(spark, [(i, "INSERT", i, f"n{i}", float(i), None)
-                       for i in range(1, 101)]),
-        _batch(spark, [(200, "UPDATE", 7, "seven", 0.7, None),
-                       (201, "DELETE", 8, None, None, None)]),
-        _batch(spark, [(300, "UPDATE", 7, "seven2", 0.8, None),
-                       (301, "INSERT", 8, "eight", 8.0, None),
-                       (302, "UPDATE", 950, "moved", 3.0, 3)]),
-        _batch(spark, [(400, "DELETE", 950, None, None, None)]),
+        _batch(spark, rows, known_size) for rows in (
+            [(i, "INSERT", i, f"n{i}", float(i), None) for i in range(1, 101)],
+            [(200, "UPDATE", 7, "seven", 0.7, None),
+             (201, "DELETE", 8, None, None, None)],
+            [(300, "UPDATE", 7, "seven2", 0.8, None),
+             (301, "INSERT", 8, "eight", 8.0, None),
+             (302, "UPDATE", 950, "moved", 3.0, 3)],
+            [(400, "DELETE", 950, None, None, None)],
+            [(500, "UPDATE", 9, "nine", 9.0, None),
+             (501, "TRUNCATE", None, None, None, None),
+             (502, "INSERT", 4, "four", 4.0, None)],
+        )
     ]
     for e in range(2):
         for store in (pruned, full):
@@ -1033,11 +1092,17 @@ def test_pruned_store_crashpoints_replay_to_full_state(
     assert pruned.current_version() == 1 and pruned.last_epoch() == 1
     assert os.path.isdir(os.path.join(pruned.path, "v2"))  # the orphan
     monkeypatch.setattr(stream_mod, "_crashpoint", lambda name: None)
-    for e in (2, 3):
+    for e in (2, 3, 4):
         for store in (pruned, full):
             assert apply_cdc_epoch(store, epochs[e], e, ["id"])
         assert _state_dict(pruned) == _state_dict(full)
     assert (pruned._manifest(2)["delta"] is None) == fold
+    assert (pruned._manifest(3)["delta"] is None) == fold  # 4 truncates it
+    assert _state_dict(pruned) == {4: (4.0, "four")}
+    assert pruned._manifest(4)["delta"] is None
+    for v in (2, 3, 4):
+        has_delta = pruned._manifest(v)["delta"] is not None
+        assert os.path.isdir(pruned._delta_dir(v)) == has_delta, v
 
 
 def test_pruned_erase_crash_part_way_then_rerun(spark, tmp_path, monkeypatch):
@@ -1214,14 +1279,16 @@ def test_pruned_store_schema_heal_rewrites_all_buckets(spark, tmp_path):
 
 def test_pruned_fallback_epochs_skip_isempty_recheck(spark, tmp_path,
                                                      monkeypatch):
-    """r6 ADVICE (low): the pruned store's TRUNCATE and heal/DDL
-    fallbacks delegate to the base full-rewrite path, whose entry once
-    re-ran batch_df.isEmpty() — one redundant Spark job on a batch the
+    """The pruned store's TRUNCATE and heal/DDL fallbacks delegate to
+    the base full-rewrite path, whose entry once re-ran
+    batch_df.isEmpty() — one redundant Spark job on a batch the
     pre-scan already counted as non-empty. The fallbacks must enter
     via _merge_commit_nonempty (zero isEmpty calls); results are
-    unchanged."""
+    unchanged. An empty batch over a store holding a delta commits
+    nothing and leaves no version dir behind."""
     from pyspark.sql import DataFrame
 
+    from canal_phoenix_adapter_spark.streaming import stream as stream_mod
     from canal_phoenix_adapter_spark.streaming.stream import apply_cdc_epoch
 
     pruned, _ = _pruned_and_full(spark, tmp_path)
@@ -1250,9 +1317,25 @@ def test_pruned_fallback_epochs_skip_isempty_recheck(spark, tmp_path,
     assert calls == []
     got = {r["id"]: (r["name"], r["tier"]) for r in pruned.read().collect()}
     assert got == {1: ("uno", "gold")}
-    # the plain store's normal path still owns the emptiness check
+    # an empty batch over a store holding a delta: its one-job epoch
+    # writes a delta dir above _CURRENT, learns the batch was empty and
+    # removes it; nothing commits, and the next epoch does. (The
+    # one-row state folds any batch at the default fold bound.)
+    monkeypatch.setattr(stream_mod, "DELTA_FOLD_FRACTION", 1e9)
+    b3 = _batch(spark, [(300, "UPDATE", 1, "eins", 1.7, None)])
+    assert apply_cdc_epoch(pruned, b3, 3, ["id"])
+    assert pruned._manifest(3)["delta"] is not None
+    pointer = pathlib.Path(pruned._pointer()).read_bytes()
     empty = _batch(spark, [])
-    assert apply_cdc_epoch(pruned, empty, 3, ["id"]) is False
+    assert apply_cdc_epoch(pruned, empty, 4, ["id"]) is False
+    assert pathlib.Path(pruned._pointer()).read_bytes() == pointer
+    assert not os.path.exists(os.path.join(pruned.path, "v4"))
+    b5 = _batch(spark, [(500, "UPDATE", 1, "one", 1.9, None)])
+    assert apply_cdc_epoch(pruned, b5, 5, ["id"])
+    assert pruned.current_version() == 5 and pruned.last_epoch() == 5
+    got = {r["id"]: (r["name"], r["tier"]) for r in pruned.read().collect()}
+    assert got == {1: ("one", None)}
+    assert calls == []
 
 
 def test_pruned_store_truncate_erase_prune_timetravel(spark, tmp_path):

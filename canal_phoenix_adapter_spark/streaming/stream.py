@@ -376,30 +376,30 @@ class PrunedParquetStateStore(ParquetStateStore):
 
     Epoch paths, picked by a pre-scan of the batch (touched buckets,
     TRUNCATE seq, row count). Every epoch that keeps the schema first
-    writes the new delta, and the pre-scan is observed on that write;
-    the other paths discard the delta. When (previous delta ∪ batch)
-    fits one scan task the write is one single-task job, so a normal
-    epoch is ONE Spark job. A heal epoch runs the pre-scan as its own
-    job.
+    writes the new delta, and the pre-scan is observed on that write.
+    When (previous delta ∪ batch) fits one scan task the write is one
+    single-task job, so a normal epoch is ONE Spark job. A heal epoch
+    runs the pre-scan as its own job.
       * normal: collapse (previous delta ∪ batch) into a new delta,
         write it, then the manifest, then repoint. No bucket dir is
         read or written.
-      * fold: once delta + batch rows would pass DELTA_FOLD_FRACTION of
-        the base rows or ``broadcast_threshold_rows`` (this also catches
-        backfill-sized batches), merge (delta ∪ batch) into only the
-        buckets they touch, write those, and publish a manifest without
-        a delta. The threshold also picks the fold's merge route, and
-        since no delta outgrows it, the read's broadcast of the delta
-        keys stays within it too.
+      * fold: once the new delta's rows pass _fold_bound (this also
+        catches backfill-sized batches), commit the merge-on-read of
+        that delta over only the buckets it touches: write those,
+        remove the delta, and publish a manifest without one. There is
+        one delta-apply rule (_with_delta) for reads, folds and
+        erasures, and it picks the broadcast route too.
       * TRUNCATE and schema-changing heal/DDL epochs: full rewrite of
         base plus delta (one schema per manifest).
     ``erase_keys`` commits through the fold path, so an erased key can
     survive in neither the base nor the delta.
 
     Crash safety is the inherited pointer contract: an epoch writes
-    only into its own version dir, above _CURRENT, and clears a
-    crashed attempt's orphan there first; the manifest lands before
-    the repoint; replayed committed epochs no-op on the watermark.
+    only into its own version dir, above _CURRENT, and every commit
+    path clears a crashed attempt's orphan there first (bucket writes
+    append, so a leftover file would otherwise be published); the
+    manifest lands before the repoint; replayed committed epochs no-op
+    on the watermark.
     ``prune`` GCs bucket and delta dirs by reference from RETAINED
     manifests, so time travel within retention survives dir sharing."""
 
@@ -612,8 +612,10 @@ class PrunedParquetStateStore(ParquetStateStore):
         return self.spark.read.schema(T.StructType.fromJson(d["schema"])) \
             .parquet(*self._delta_files(d))
 
-    def _read_manifest(self, manifest: dict) -> DataFrame:
-        return self._with_delta(self._read_buckets(manifest), manifest)
+    def _read_manifest(self, manifest: dict, buckets=None) -> DataFrame:
+        """The state a manifest describes (all buckets, or a subset
+        holding all of the delta's buckets), delta applied."""
+        return self._with_delta(self._read_buckets(manifest, buckets), manifest)
 
     def read(self) -> DataFrame | None:
         v = self.current_version()
@@ -646,11 +648,20 @@ class PrunedParquetStateStore(ParquetStateStore):
             epoch_id = self.last_epoch()
         if self.BUCKET in df.columns:
             raise ValueError(f"state may not carry a {self.BUCKET} column")
+        self._clear_version(version)
         self._write_bucket_dirs(df, version)
         rows = self._owned_rows(version)
         self._write_manifest(version, df.schema, dict.fromkeys(rows, version),
                              rows)
         self._repoint(version, epoch_id)
+
+    def _clear_version(self, version: int) -> None:
+        """Remove ``v{version}`` before a commit path writes into it: a
+        version dir above _CURRENT is a crashed attempt's orphan, and
+        its files (staged task output under ``_temporary`` included)
+        would otherwise land in the append."""
+        shutil.rmtree(os.path.join(self.path, f"v{version}"),
+                      ignore_errors=True)
 
     def _owned_rows(self, version: int) -> dict[int, int]:
         """Row count of each bucket dir a version's own directory holds."""
@@ -660,11 +671,12 @@ class PrunedParquetStateStore(ParquetStateStore):
     def _write_bucket_dirs(
         self, df: DataFrame, version: int, n_parts: int | None = None
     ) -> None:
-        """Write ``df`` hash-clustered into ``__bucket=K`` dirs under
-        the version dir (static overwrite clears a crashed attempt's
-        orphan first). The bucket-column repartition is load-bearing:
-        without it every write task emits a file into every bucket dir
-        it holds rows for — O(tasks x buckets) tiny files per version.
+        """Append ``df`` hash-clustered into ``__bucket=K`` dirs under
+        the version dir, which may hold the delta a fold reads; the
+        caller clears the dir first (_clear_version). The bucket-column
+        repartition is load-bearing: without it every write task emits
+        a file into every bucket dir it holds rows for — O(tasks x
+        buckets) tiny files per version.
         ``n_parts`` sizes that shuffle (a fold passes |touched|). The
         count stays pinned (REPARTITION_BY_NUM): the AQE-coalescible
         column-only form measured slower per drive."""
@@ -681,8 +693,7 @@ class PrunedParquetStateStore(ParquetStateStore):
             df.withColumn(self.BUCKET, self._bucket_of([F.col(k) for k in self.pk]))
             .repartition(n_parts or self.n_buckets, F.col(self.BUCKET))
             .sortWithinPartitions(self.BUCKET, *self.pk)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "static")
+            .write.mode("append")
             .partitionBy(self.BUCKET)
             .parquet(target)
         )
@@ -738,27 +749,6 @@ class PrunedParquetStateStore(ParquetStateStore):
         healed = healed_schema(schema, image_schema(batch_df.schema, pk))
         return by_name(healed) != by_name(schema)
 
-    def _change_set(
-        self, batch_df: DataFrame, manifest: dict, epoch_id: int
-    ) -> DataFrame:
-        """(previous delta ∪ batch) as one change batch under an
-        epoch-major ``seq`` = struct(epoch, seq): every batch row
-        orders after every delta row, whatever the source's seq. Delta
-        rows replay as INSERT (create) or DELETE events."""
-        batch = applicable_changes(batch_df).withColumn("seq", F.expr(
-            f"named_struct('e', CAST({int(epoch_id)} AS BIGINT), 's', seq)"
-        ))
-        d = manifest["delta"]
-        if d is None:
-            return batch
-        seq_t = batch_df.schema["seq"].dataType.simpleString()
-        prev = self._read_delta(d).selectExpr(
-            f"named_struct('e', __seq.e, 's', try_cast(__seq.s AS {seq_t})) AS seq",
-            "CASE WHEN __is_create = 1 THEN 'INSERT' ELSE 'DELETE' END AS op",
-            *[_bq(f.name) for f in self._schema_of(manifest).fields],
-        )
-        return batch.unionByName(prev, allowMissingColumns=True)
-
     def _merge_commit_unlocked(
         self,
         batch_df: DataFrame,
@@ -790,14 +780,13 @@ class PrunedParquetStateStore(ParquetStateStore):
         if n_rows == 0:  # empty epoch: nothing to commit
             # v{version} sits above _CURRENT: an orphan (the delta just
             # written, or a crashed attempt's), never a committed version
-            shutil.rmtree(os.path.join(self.path, f"v{version}"),
-                          ignore_errors=True)
+            self._clear_version(version)
             return None, None
         if trunc_seq is not None or heals:
             # TRUNCATE / heal / DDL: full rewrite (one schema per
-            # manifest), whose static overwrite of v{version} also
-            # clears the delta. The pre-scan already proved the batch
-            # non-empty and found the truncate seq.
+            # manifest), which clears v{version} and the delta in it.
+            # The pre-scan already proved the batch non-empty and found
+            # the truncate seq.
             return super()._merge_commit_nonempty(
                 batch_df, pk, version, epoch_id, trunc_seq=trunc_seq,
                 broadcast_changes=n_rows <= self.broadcast_threshold_rows,
@@ -806,31 +795,25 @@ class PrunedParquetStateStore(ParquetStateStore):
         cols = {f.name.lower() for f in schema.fields}
         d = manifest["delta"]
         touched = set(touched) | set(d["buckets"] if d else ())
-        n_changes = n_rows + (d["rows"] if d else 0)
-        if n_changes > self._fold_bound(manifest):
-            # trunc_seq=None: the pre-scan proved no TRUNCATE. The
-            # bucket write's static overwrite clears the delta.
-            merged = merge_cdc(
-                self._read_buckets(manifest, touched),
-                self._change_set(batch_df, manifest, epoch_id), pk,
-                trunc_seq=None,
-                broadcast_changes=n_changes <= self.broadcast_threshold_rows,
-            )
-            self._commit_touched(merged, version, manifest, touched, epoch_id)
+        if delta is not None:
+            delta["buckets"] = sorted(touched)
+        if delta is not None and delta["rows"] > self._fold_bound(manifest):
+            # fold: the new delta applied to the buckets it touches
+            basis = self._read_manifest({**manifest, "delta": delta}, touched)
+            self._commit_touched(basis, version, manifest, touched, epoch_id)
         else:
             # normal epoch: the new delta over the unchanged base buckets
-            if delta is not None:
-                delta["buckets"] = sorted(touched)
             self._write_manifest(version, schema, manifest["buckets"],
                                  manifest["rows"], delta)
             self._repoint(version, epoch_id)
         return cols, cols
 
     def _fold_bound(self, manifest: dict) -> float:
-        """Most change rows (delta + batch) a normal epoch may carry in
-        its delta: DELTA_FOLD_FRACTION of the base's recorded rows, and
-        never more than broadcast_threshold_rows — every read broadcasts
-        the delta's keys, and each delta epoch rewrites the delta."""
+        """Most rows a committed delta may hold; an epoch whose new
+        delta has more folds it. DELTA_FOLD_FRACTION of the base's
+        recorded rows, and never more than broadcast_threshold_rows —
+        every read broadcasts the delta's keys, and each delta epoch
+        rewrites the delta."""
         return min(DELTA_FOLD_FRACTION * sum(manifest["rows"].values()),
                    self.broadcast_threshold_rows)
 
@@ -841,12 +824,16 @@ class PrunedParquetStateStore(ParquetStateStore):
         """Collapse the change set (previous delta ∪ batch) into
         ``v{version}/_delta``, aligned to the manifest schema, in the
         job that also observes the pre-scan (_scan_aggs) on the batch.
-        Returns the delta's manifest entry without the touched buckets
-        (None for a delta with no rows) and the pre-scan result; the
-        caller publishes the delta or discards it. A change set that
-        fits one scan task (fits_one_split) collapses after
-        ``coalesce(1)``, so its groupBy plans no Exchange and the write
-        is ONE single-task job; a larger one collapses in parallel."""
+        The change set orders under an epoch-major ``seq`` =
+        struct(epoch, seq): every batch row orders after every delta
+        row, whatever the source's seq, and delta rows replay as INSERT
+        (create) or DELETE events. Returns the delta's manifest entry
+        without the touched buckets (None for a delta with no rows) and
+        the pre-scan result; the caller publishes the delta, folds it,
+        or discards it. A change set that fits one scan task
+        (fits_one_split) collapses after ``coalesce(1)``, so its
+        groupBy plans no Exchange and the write is ONE single-task job;
+        a larger one collapses in parallel."""
         # The change set's size is the batch's estimate plus the
         # previous delta's bytes on disk (Catalyst's estimate of a
         # parquet scan). It is checked before the batch is observed:
@@ -857,10 +844,19 @@ class PrunedParquetStateStore(ParquetStateStore):
             os.path.getsize(f) for f in self._delta_files(d))
         one_task = fits_one_split(batch_df, delta_bytes)
         scan = Observation()
-        changes = self._change_set(
-            batch_df.observe(scan, *self._scan_aggs(batch_df, pk)),
-            manifest, epoch_id,
-        )
+        changes = applicable_changes(
+            batch_df.observe(scan, *self._scan_aggs(batch_df, pk))
+        ).withColumn("seq", F.expr(
+            f"named_struct('e', CAST({int(epoch_id)} AS BIGINT), 's', seq)"
+        ))
+        if d is not None:
+            seq_t = batch_df.schema["seq"].dataType.simpleString()
+            prev = self._read_delta(d).selectExpr(
+                f"named_struct('e', __seq.e, 's', try_cast(__seq.s AS {seq_t})) AS seq",
+                "CASE WHEN __is_create = 1 THEN 'INSERT' ELSE 'DELETE' END AS op",
+                *[_bq(f.name) for f in self._schema_of(manifest).fields],
+            )
+            changes = changes.unionByName(prev, allowMissingColumns=True)
         if one_task:
             changes = changes.coalesce(1)
         keys = {k.lower(): k for k in pk}
@@ -879,8 +875,7 @@ class PrunedParquetStateStore(ParquetStateStore):
             *cols, "__is_create", "__seq"
         )
         target = self._delta_dir(version)
-        # a version dir above _CURRENT is a crashed attempt's orphan
-        shutil.rmtree(os.path.dirname(target), ignore_errors=True)
+        self._clear_version(version)
         delta.write.parquet(target)
         _crashpoint("delta_written")
         rows = self._dir_rows(target)
@@ -894,13 +889,14 @@ class PrunedParquetStateStore(ParquetStateStore):
         """Fold commit shared by the fold epoch and the erasure: ``df``
         is the new content of the ``touched`` buckets (delta applied).
         Write only those buckets (write tasks sized to |touched|),
-        publish a manifest without a delta where touched buckets that
-        survived point at this version, touched buckets with no
-        survivors drop out, and untouched buckets keep their owner;
-        then repoint."""
+        remove this version's delta (a fold's input), publish a
+        manifest without a delta where touched buckets that survived
+        point at this version, touched buckets with no survivors drop
+        out, and untouched buckets keep their owner; then repoint."""
         self._write_bucket_dirs(
             df, version, n_parts=min(self.n_buckets, max(1, len(touched)))
         )
+        shutil.rmtree(self._delta_dir(version), ignore_errors=True)
         owned = self._owned_rows(version)
         buckets = {b: o for b, o in manifest["buckets"].items()
                    if b not in touched}
@@ -1333,14 +1329,13 @@ def erase_keys(
             }
             if manifest["delta"] is not None:
                 touched |= set(manifest["delta"]["buckets"])
-            basis = store._with_delta(
-                store._read_buckets(manifest, touched), manifest
-            )
+            basis = store._read_manifest(manifest, touched)
             # audited post-condition, bounded to the touched buckets
             erased = basis.join(
                 F.broadcast(keyset), on=pk, how="left_semi"
             ).count()
             new_t = basis.join(F.broadcast(keyset), on=pk, how="left_anti")
+            store._clear_version(new_version)
             store._commit_touched(new_t, new_version, manifest, touched,
                                   store.last_epoch())
         else:

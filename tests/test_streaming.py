@@ -895,7 +895,9 @@ def test_pruned_store_matches_full_and_rewrites_only_touched(
     version — in ONE Spark job whose delta write plans no Exchange (the
     pre-scan is observed on that write). A fold epoch materializes ONLY
     the buckets the delta and the batch touch, reading exactly those,
-    with every other bucket served from the older version."""
+    with every other bucket served from the older version: it commits
+    the merge-on-read of the delta it wrote, so its one collapse is the
+    delta write's and it never calls merge_cdc."""
     from plan_helpers import explain_str
 
     from canal_phoenix_adapter_spark.jvm_shim import fits_one_split
@@ -958,12 +960,18 @@ def test_pruned_store_matches_full_and_rewrites_only_touched(
     assert got[5] == (5.5, "five") and 9 not in got
     assert got[901] == (17.0, "moved") and 17 not in got
 
-    # fold path: (delta ∪ batch) merged into exactly their buckets
+    # fold path: the new delta applied to exactly its buckets
     monkeypatch.setattr(stream_mod, "DELTA_FOLD_FRACTION", 0.0)
     b2 = _batch(spark, [(400, "UPDATE", 5, "five2", 5.6, None)])
     reads.clear()
-    for store in (pruned, full):
-        assert apply_cdc_epoch(store, b2, 2, ["id"])
+    collapsed.clear()
+    merges = []
+    orig_merge = stream_mod.merge_cdc
+    monkeypatch.setattr(stream_mod, "merge_cdc", lambda *a, **kw: (
+        merges.append(1), orig_merge(*a, **kw))[1])
+    assert apply_cdc_epoch(pruned, b2, 2, ["id"])
+    assert len(collapsed) == 1 and merges == []
+    assert apply_cdc_epoch(full, b2, 2, ["id"])
     assert reads == [touched]
     assert _owned(pruned, 2) == touched
     assert not os.path.exists(os.path.join(pruned.path, "v2", "_delta"))
@@ -989,10 +997,10 @@ def test_pruned_store_matches_full_and_rewrites_only_touched(
 
 
 def test_pruned_store_crash_replay_converges_with_full(spark, tmp_path):
-    """Task-3 gate: after a crashed-then-replayed epoch the pruned
-    store equals the full-rewrite store, whichever side of the commit
-    marker the crash fell on (the failure mode partial rewrites
-    historically introduce: a replay over a half-committed orphan)."""
+    """After a crashed-then-replayed epoch the pruned store equals the
+    full-rewrite store, whichever side of the commit marker the crash
+    fell on (the failure mode partial rewrites historically introduce:
+    a replay over a half-committed orphan)."""
     from canal_phoenix_adapter_spark.streaming.stream import apply_cdc_epoch
 
     pruned, full = _pruned_and_full(spark, tmp_path)
@@ -1019,6 +1027,37 @@ def test_pruned_store_crash_replay_converges_with_full(spark, tmp_path):
     assert _state_dict(pruned) == _state_dict(full)
 
 
+def _drop_half_buckets(vdir):
+    """Damage for a crash part-way through a bucket write: drop just
+    over half of the version's bucket dirs."""
+    dirs = sorted(n for n in os.listdir(vdir) if n.startswith("__bucket="))
+    assert dirs
+    for n in dirs[: len(dirs) // 2 + 1]:
+        shutil.rmtree(os.path.join(vdir, n))
+
+
+def _plant_stale(spark, store, version, scratch):
+    """Leave in the orphan ``v{version}`` two files a crashed attempt
+    can leave behind: committed task output still staged under
+    ``_temporary/0/task_*`` (Spark's default committer merges every
+    such dir into the output on job commit) and a stray part file in a
+    bucket dir. Both hold a key (99999) no epoch writes."""
+    from pyspark.sql import functions as F
+
+    src = str(scratch / "stale")
+    store.read().limit(1).withColumn("id", F.lit(99999).cast("long")) \
+        .coalesce(1).write.parquet(src)
+    part = next(f for f in os.listdir(src) if f.endswith(".parquet"))
+    (b,) = _bucket_of_ids(spark, [99999], store.n_buckets)
+    vdir = os.path.join(store.path, f"v{version}")
+    task = os.path.join("_temporary", "0", "task_202601010000_0001_m_000000")
+    for d in (os.path.join(vdir, task, f"__bucket={b}"),
+              os.path.join(vdir, f"__bucket={b}")):
+        os.makedirs(d, exist_ok=True)
+        shutil.copy(os.path.join(src, part),
+                    os.path.join(d, "part-00000-stale.c000.snappy.parquet"))
+
+
 def _crash_at(point, damage=None):
     """A _crashpoint stand-in that raises at ``point`` (after running
     ``damage``, which models a write the crash cut short)."""
@@ -1030,20 +1069,21 @@ def _crash_at(point, damage=None):
     return hook
 
 
-@pytest.mark.parametrize("point,fold,known_size", [
-    pytest.param(point, fold, known, id=f"{point}-{fold}"
-                 + ("" if known else "-unsized"))
-    for point, fold in [
-        ("delta_written", False),
-        ("delta_written", True),
-        ("manifest_written", False),
-        ("buckets_written", True),
-        ("manifest_written", True),
+@pytest.mark.parametrize("point,fold,stale,known_size", [
+    pytest.param(point, fold, stale, known, id=f"{point}-{fold}"
+                 + ("-stale" if stale else "") + ("" if known else "-unsized"))
+    for point, fold, stale in [
+        ("delta_written", False, False),
+        ("delta_written", True, False),
+        ("manifest_written", False, False),
+        ("buckets_written", True, False),
+        ("buckets_written", True, True),
+        ("manifest_written", True, False),
     ]
     for known in (True, False)
 ])
 def test_pruned_store_crashpoints_replay_to_full_state(
-    spark, tmp_path, monkeypatch, point, fold, known_size
+    spark, tmp_path, monkeypatch, point, fold, stale, known_size
 ):
     """Crash a pruned-store epoch at each durable step of its commit
     path — delta written but no manifest (an epoch writes it before it
@@ -1052,7 +1092,10 @@ def test_pruned_store_crashpoints_replay_to_full_state(
     store must equal the plain store, and the next epochs must still
     apply, down to a TRUNCATE over a delta. A fold or TRUNCATE epoch
     leaves no `_delta` behind in its version dir. Batches of known size
-    take the one-task delta write, the others the parallel one."""
+    take the one-task delta write, the others the parallel one. With
+    ``stale``, the orphan also holds a crashed attempt's staged task
+    output and a stray bucket file, neither of which the replay may
+    publish."""
     from canal_phoenix_adapter_spark.streaming import stream as stream_mod
     from canal_phoenix_adapter_spark.streaming.stream import apply_cdc_epoch
 
@@ -1078,24 +1121,22 @@ def test_pruned_store_crashpoints_replay_to_full_state(
     if fold:
         monkeypatch.setattr(stream_mod, "DELTA_FOLD_FRACTION", 0.0)
 
-    def half_written():
-        vdir = os.path.join(pruned.path, "v2")
-        dirs = sorted(n for n in os.listdir(vdir) if n.startswith("__bucket="))
-        assert dirs
-        for n in dirs[: len(dirs) // 2 + 1]:
-            shutil.rmtree(os.path.join(vdir, n))
-
-    damage = half_written if point == "buckets_written" else None
+    orphan = os.path.join(pruned.path, "v2")
+    damage = ((lambda: _drop_half_buckets(orphan))
+              if point == "buckets_written" else None)
     monkeypatch.setattr(stream_mod, "_crashpoint", _crash_at(point, damage))
     with pytest.raises(RuntimeError, match=f"crash at {point}"):
         apply_cdc_epoch(pruned, epochs[2], 2, ["id"])
     assert pruned.current_version() == 1 and pruned.last_epoch() == 1
-    assert os.path.isdir(os.path.join(pruned.path, "v2"))  # the orphan
+    assert os.path.isdir(orphan)
+    if stale:
+        _plant_stale(spark, pruned, 2, tmp_path)
     monkeypatch.setattr(stream_mod, "_crashpoint", lambda name: None)
     for e in (2, 3, 4):
         for store in (pruned, full):
             assert apply_cdc_epoch(store, epochs[e], e, ["id"])
         assert _state_dict(pruned) == _state_dict(full)
+        assert pruned.read().count() == full.read().count()
     assert (pruned._manifest(2)["delta"] is None) == fold
     assert (pruned._manifest(3)["delta"] is None) == fold  # 4 truncates it
     assert _state_dict(pruned) == {4: (4.0, "four")}
@@ -1108,7 +1149,9 @@ def test_pruned_store_crashpoints_replay_to_full_state(
 def test_pruned_erase_crash_part_way_then_rerun(spark, tmp_path, monkeypatch):
     """An erasure commits through the fold path: a crash part-way
     through its bucket writes leaves the pointer (and the delta) in
-    place, and re-running the erasure lands the plain store's state."""
+    place, and re-running the erasure over that orphan (half its bucket
+    dirs, a crashed attempt's staged task output, a stray bucket file)
+    lands the plain store's state."""
     from canal_phoenix_adapter_spark.streaming import stream as stream_mod
     from canal_phoenix_adapter_spark.streaming.stream import (
         apply_cdc_epoch,
@@ -1122,20 +1165,22 @@ def test_pruned_erase_crash_part_way_then_rerun(spark, tmp_path, monkeypatch):
     for store in (pruned, full):
         assert apply_cdc_epoch(store, b0, 0, ["id"])
         assert apply_cdc_epoch(store, b1, 1, ["id"])
-    keys = spark.createDataFrame([(77,), (3,)], "id long")
-
-    def drop_all():
-        shutil.rmtree(os.path.join(pruned.path, "v2"))
-
-    monkeypatch.setattr(stream_mod, "_crashpoint",
-                        _crash_at("buckets_written", drop_all))
+    # keys over most buckets, so the damage leaves bucket dirs behind
+    keys = spark.createDataFrame([(77,)] + [(i,) for i in range(1, 11)],
+                                 "id long")
+    orphan = os.path.join(pruned.path, "v2")
+    monkeypatch.setattr(stream_mod, "_crashpoint", _crash_at(
+        "buckets_written", lambda: _drop_half_buckets(orphan)))
     with pytest.raises(RuntimeError):
         erase_keys(pruned, keys, ["id"])
     assert pruned.current_version() == 1
     assert 77 in _state_dict(pruned)
+    assert any(n.startswith("__bucket=") for n in os.listdir(orphan))
+    _plant_stale(spark, pruned, 2, tmp_path)
     monkeypatch.setattr(stream_mod, "_crashpoint", lambda name: None)
     assert erase_keys(pruned, keys, ["id"]) == erase_keys(full, keys, ["id"])
     assert _state_dict(pruned) == _state_dict(full)
+    assert pruned.read().count() == full.read().count()
 
 
 def test_pruned_erase_reaches_delta_keys(spark, tmp_path):
@@ -1529,7 +1574,7 @@ def test_pruned_store_modulus_guard_and_rebucket(spark, tmp_path):
 
 
 def test_pruned_erase_casts_keyset_types_and_guards_pk(spark, tmp_path):
-    """r6 ADVICE (high): hash() is type-sensitive, so an erasure keyset
+    """hash() is type-sensitive, so an erasure keyset
     whose pk dtype differs from the state's (int keys vs long state)
     once bucket-hashed to dirs the state never uses — the key SURVIVED
     while a new 'erased' version committed and success returned. The
@@ -1584,7 +1629,7 @@ def test_pruned_erase_casts_keyset_types_and_guards_pk(spark, tmp_path):
 
 
 def test_pruned_store_refuses_plain_layout(spark, tmp_path):
-    """r6 ADVICE (medium + low): a pruned handle over a plain-layout
+    """A pruned handle over a plain-layout
     path (exactly what flipping state_buckets on an existing deployment
     produces) must raise a migration error — prune() once computed an
     empty retained set and rmtree'd every version INCLUDING _CURRENT,
@@ -1608,7 +1653,7 @@ def test_pruned_store_refuses_plain_layout(spark, tmp_path):
     b1 = _batch(spark, [(10, "UPDATE", 3, "x", 0.0, None)])
     with pytest.raises(ValueError, match="plain ParquetStateStore layout"):
         apply_cdc_epoch(pruned, b1, 1, ["id"])
-    # write() is the PUBLISH direction (r7 review): a pruned-handle
+    # write() is the PUBLISH direction: a pruned-handle
     # bootstrap write over the plain layout would commit a manifested
     # version on top, after which prune() sweeps every manifest-less
     # plain snapshot dir as unreferenced storage — refuse instead
@@ -1618,7 +1663,7 @@ def test_pruned_store_refuses_plain_layout(spark, tmp_path):
 
 
 def test_plain_store_refuses_pruned_layout(spark, tmp_path):
-    """r6 ADVICE (low), the mismatch's other direction: a plain handle
+    """The mismatch's other direction: a plain handle
     over a pruned layout once read only the latest version's
     touched-bucket dirs as if they were full state (then committed that
     truncated state forward). read()/read_version() must refuse."""
@@ -1655,7 +1700,7 @@ def test_plain_store_refuses_pruned_layout(spark, tmp_path):
 
 
 def test_rebucket_failure_restores_modulus(spark, tmp_path):
-    """r6 ADVICE (low): rebucket() once mutated the handle's n_buckets
+    """rebucket() once mutated the handle's n_buckets
     BEFORE the rewrite committed — a failed rewrite left the handle on
     the new modulus while the store kept the old, so every later
     bucket-local epoch failed the modulus guard until restart."""
@@ -1683,91 +1728,89 @@ def test_rebucket_failure_restores_modulus(spark, tmp_path):
     assert _state_dict(pruned)[3] == (0.0, "x")
 
 
-def test_pruned_store_huge_batch_routes_no_broadcast(spark, tmp_path, monkeypatch):
-    """The pruned store's fold must route on the change-set size — at
-    or below broadcast_threshold_rows the key set is broadcast (state
-    never shuffles, the normal CDC regime); above it merge_cdc runs
-    broadcast-free (a backfill-sized epoch must not pin the whole key
-    set in every executor's memory). Both routes must land the
-    identical state. The fold bound is lowered to 0 so the small
-    epoch takes the fold path, where the routing applies."""
+def _fold_basis(spark, tmp_path, monkeypatch, name, thr):
+    """Bootstrap a pruned store at broadcast_threshold_rows ``thr``,
+    then fold one small epoch (the fold bound is lowered to 0) and
+    record the basis the fold commits: its plan, the files it scans,
+    the buckets the epoch touches and the state it lands."""
+    from plan_helpers import explain_str
+
     from canal_phoenix_adapter_spark.streaming import stream as stream_mod
     from canal_phoenix_adapter_spark.streaming.stream import (
         PrunedParquetStateStore,
         apply_cdc_epoch,
     )
 
-    flags = []
-    orig = stream_mod.merge_cdc
-
-    def recording(*a, **kw):
-        flags.append(kw.get("broadcast_changes", True))
-        return orig(*a, **kw)
-
-    monkeypatch.setattr(stream_mod, "merge_cdc", recording)
     monkeypatch.setattr(stream_mod, "DELTA_FOLD_FRACTION", 0.0)
-
+    n_buckets = 8
     b0 = _batch(spark, [(i, "INSERT", i, f"n{i}", float(i), None)
                         for i in range(1, 101)])
     b1 = _batch(spark, [(200, "UPDATE", 7, "seven", 0.7, None),
                         (201, "DELETE", 8, None, None, None),
                         (202, "UPDATE", 901, "moved", 17.0, 17)])
+    touched = _bucket_of_ids(spark, [7, 8, 901, 17], n_buckets)
+    assert len(touched) < n_buckets
+    store = PrunedParquetStateStore(
+        spark, str(tmp_path / name), ["id"], n_buckets=n_buckets,
+        broadcast_threshold_rows=thr,
+    )
+    assert apply_cdc_epoch(store, b0, 0, ["id"])  # bootstrap: full path
+    bases = []
+    orig = store._commit_touched
+
+    def recording(df, *a, **kw):
+        bases.append((explain_str(df), df.inputFiles()))
+        return orig(df, *a, **kw)
+
+    monkeypatch.setattr(store, "_commit_touched", recording)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "-1")  # only the store's hint may broadcast
+    try:
+        assert apply_cdc_epoch(store, b1, 1, ["id"])
+    finally:
+        spark.conf.set(key, saved)
+    assert store._manifest(1)["delta"] is None
+    ((plan, files),) = bases
+    return plan, files, store, touched, _state_dict(store)
+
+
+def test_pruned_store_huge_batch_routes_no_broadcast(spark, tmp_path, monkeypatch):
+    """The pruned store's fold must route on the change-set size — at
+    or below broadcast_threshold_rows the delta keys are broadcast
+    (state never shuffles, the normal CDC regime); above it the fold's
+    basis plans no BroadcastExchange (a backfill-sized epoch must not
+    pin its key set in every executor's memory). A fold commits the
+    merge-on-read of its new delta, so the route is the one the delta
+    apply rule (_with_delta) picks. Both routes must land the identical
+    state."""
     states = {}
     for name, thr in (("bcast", 10_000), ("nobcast", 0)):
-        store = PrunedParquetStateStore(
-            spark, str(tmp_path / name), ["id"], n_buckets=8,
-            broadcast_threshold_rows=thr,
-        )
-        assert apply_cdc_epoch(store, b0, 0, ["id"])  # bootstrap: full path
-        flags.clear()
-        assert apply_cdc_epoch(store, b1, 1, ["id"])
-        assert flags == [thr > 0], (name, flags)
-        states[name] = _state_dict(store)
+        plan, _, _, _, states[name] = _fold_basis(
+            spark, tmp_path, monkeypatch, name, thr)
+        assert ("BroadcastExchange" in plan) == (thr > 0), name
     assert states["bcast"] == states["nobcast"]
     assert states["bcast"][901] == (17.0, "moved") and 17 not in states["bcast"]
+    assert 8 not in states["bcast"] and states["bcast"][7] == (0.7, "seven")
 
 
-def test_pruned_nobroadcast_merge_plan_reads_only_touched(spark, tmp_path):
-    """r6 task 1 plan gate, comparative: above the threshold the merge
-    plan has NO BroadcastExchange of the key set (below it, it does),
-    and the state side of that broadcast-free anti join reads ONLY the
-    touched bucket dirs — so what shuffles is O(touched-bucket state +
-    batch), never O(state), even in the huge-batch regime."""
-    from canal_phoenix_adapter_spark.operators.merge import merge_cdc
-    from plan_helpers import explain_str
-    from canal_phoenix_adapter_spark.streaming.stream import apply_cdc_epoch
-
-    n_buckets = 8
-    pruned, _ = _pruned_and_full(spark, tmp_path, n_buckets)
-    b0 = _batch(spark, [(i, "INSERT", i, f"n{i}", float(i), None)
-                        for i in range(1, 201)])
-    assert apply_cdc_epoch(pruned, b0, 0, ["id"])
-
-    b1 = _batch(spark, [(300, "UPDATE", 5, "five", 5.5, None)])
-    touched, trunc, n = pruned._scan_batch(b1, ["id"])
-    assert trunc is None and n == 1
-    want_buckets = _bucket_of_ids(spark, [5], n_buckets)
-    assert set(touched) == want_buckets
-    touched_state = pruned._read_buckets(pruned._manifest(0), set(touched))
-
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")  # no auto rescue
-    try:
-        m_no = merge_cdc(touched_state, b1, ["id"], trunc_seq=None,
-                         broadcast_changes=False)
-        m_b = merge_cdc(touched_state, b1, ["id"], trunc_seq=None,
-                        broadcast_changes=True)
-        assert "BroadcastExchange" not in explain_str(m_no)
-        assert "BroadcastExchange" in explain_str(m_b)
-        got = sorted((r["id"], r["name"]) for r in m_no.collect())
-        assert got == sorted((r["id"], r["name"]) for r in m_b.collect())
-        assert (5, "five") in got
-        # every file the broadcast-free plan scans is a touched-bucket dir
-        dirs = {seg for f in m_no.inputFiles()
-                for seg in f.split("/") if seg.startswith("__bucket=")}
-        assert dirs == {f"__bucket={b}" for b in want_buckets}
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+def test_pruned_nobroadcast_merge_plan_reads_only_touched(
+    spark, tmp_path, monkeypatch
+):
+    """Above the threshold the fold's basis plan has NO BroadcastExchange
+    of the key set (below it, it does), and on both routes the basis
+    scans ONLY the touched bucket dirs plus the epoch's own `_delta` —
+    so what shuffles is O(touched-bucket state + batch), never O(state),
+    even in the huge-batch regime."""
+    for name, thr in (("nobcast", 0), ("bcast", 10_000)):
+        plan, files, store, touched, _ = _fold_basis(
+            spark, tmp_path, monkeypatch, name, thr)
+        assert ("BroadcastExchange" in plan) == (thr > 0), name
+        want = {store._bucket_dir(0, b) for b in touched}
+        want.add(store._delta_dir(1))
+        scanned = {os.path.dirname(f.split(":", 1)[1]) for f in files}
+        assert ({os.path.realpath(d) for d in scanned}
+                == {os.path.realpath(d) for d in want}), name
 
 
 def test_commit_lock_excludes_other_processes(tmp_path):
@@ -1808,8 +1851,8 @@ def test_commit_lock_excludes_other_processes(tmp_path):
 def test_empty_epoch_commits_nothing(spark, tmp_path):
     """An empty micro-batch commits no version and returns False on
     both stores — with the check folded into the store's merge-commit
-    strategy (the pruned store reads it off its single pre-scan job;
-    r6 task 3 removed apply_cdc_epoch's separate isEmpty() job). An
+    strategy (the pruned store reads it off its pre-scan, so
+    apply_cdc_epoch runs no separate isEmpty() job). An
     empty epoch must not advance the replay watermark either: the
     skipped epoch id stays replayable."""
     from canal_phoenix_adapter_spark.streaming.stream import apply_cdc_epoch

@@ -11,7 +11,7 @@ delta write), read (building the pruned store's bucket-dir basis; 0 on
 delta epochs), manifest, repoint, gc (inline retention prune), other
 (bookkeeping, lock).
 
-The question (VERDICT r4 tasks 1/5): does per-epoch wall stay ~flat as
+The question: does per-epoch wall stay ~flat as
 STATE grows with batch size fixed? Full-rewrite is O(state) per epoch
 by construction; pruned should be ~O(batch). One JSON line per
 (store, factor); findings recorded in SCALE.md.
@@ -29,14 +29,14 @@ benchmark's keyed read (point lookups plus a count) and of one fold
 epoch. Fraction 0 is a delta-free store, whose fold epoch is the
 touched-bucket rewrite every epoch paid before deltas.
 
-The crossover mode (VERDICT r6 task 3) measures what crossing
+The crossover mode measures what crossing
 broadcast_threshold_rows costs: ONE store at a large fixed state,
 batch size swept across the 2M-row default, the three merge routes
 (broadcast / auto / smj — see crossover()) INTERLEAVED per batch size
 in the same session (the shingle_bisect protocol — composition and
 host noise hit all routes equally). Reports median epoch wall per
-(batch_rows, route); findings of record are the r9 stamped 5-rep
-run in SCALE.md "Round 9" (run=crossover-64-r9-stamped).
+(batch_rows, route); the findings of record are the stamped 5-rep
+run in SCALE.md ("crossover sweep re-run STAMPED at 5 reps").
 """
 
 from __future__ import annotations
@@ -61,11 +61,12 @@ from canal_phoenix_adapter_spark.streaming.stream import (  # noqa: E402
 )
 
 # overridable so factor 1 can replicate the BENCH streaming drive's
-# tiny-state configuration (r10 verdict task 7: attribute its epoch
-# floor kernel-vs-streaming-machinery): EPOCH_SMOKE_BASE_ROWS=400
-# EPOCH_SMOKE_BATCH_ROWS=100 -> the drive's 32-bucket, 100-row epochs
+# tiny-state configuration: EPOCH_SMOKE_BASE_ROWS=400
+# EPOCH_SMOKE_BATCH_ROWS=100 -> the drive's 32-bucket, 100-row epochs;
+# EPOCH_SMOKE_BASE_ROWS=600000 EPOCH_SMOKE_BATCH_ROWS=300000 makes every
+# pruned epoch a fold
 BASE_ROWS = int(os.environ.get("EPOCH_SMOKE_BASE_ROWS", "500000"))
-# overridable for the huge-batch regime experiment (SCALE.md r6): batch
+# overridable for the huge-batch regime experiment (SCALE.md): batch
 # rows past the threshold route the pruned merge off the broadcast path
 BATCH_ROWS = int(os.environ.get("EPOCH_SMOKE_BATCH_ROWS", "200"))
 BCAST_THRESHOLD = int(os.environ.get("EPOCH_SMOKE_BCAST_THRESHOLD", "2000000"))
@@ -199,7 +200,7 @@ def crossover(factor: int = 64) -> None:
                 walls[route].append(run_epoch(thresh, conf, n_rows))
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", auto_bcast)
         for route, ws in walls.items():
-            # session tag: cross-run row merges (the r7 slip) stay visible
+            # session tag: rows merged across runs stay attributable
             print(json.dumps(
                 {"crossover_smoke": route, "factor": factor,
                  "state_rows": rows, "batch_rows": n_rows,

@@ -89,8 +89,8 @@ def cdc_merge_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship: full CDC apply (C1-C6, C8) — inserts, keep-last
     updates, deletes, PK-changes — folded to the final state table."""
     changes = ev.synthetic_changes(load_table(spark, sf_dir, "events"))
-    return merge_cdc(None, changes, ["user_id"], old_prefix="old_",
-                     trunc_seq=None)  # derivation emits no TRUNCATE
+    # the derivation emits no TRUNCATE
+    return merge_cdc(None, changes, ["user_id"], trunc_seq=None)
 
 
 @register(
@@ -100,8 +100,7 @@ def cdc_merge_full(spark: SparkSession, sf_dir: str) -> DataFrame:
 def cdc_merge_upsert_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C3/C4/C6 without PK-changes: upsert + delete + last-writer-wins."""
     changes = ev.synthetic_changes(load_table(spark, sf_dir, "events"), with_pk_change=False)
-    return merge_cdc(None, changes, ["user_id"], old_prefix="old_",
-                     trunc_seq=None)
+    return merge_cdc(None, changes, ["user_id"], trunc_seq=None)
 
 
 @register(
@@ -167,8 +166,7 @@ def cdc_merge_into_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     changes = ev.synthetic_changes(
         events.where(F.col("event_id") % 3 == 0), with_pk_change=False
     )
-    return merge_cdc(state, changes, ["user_id"], old_prefix="old_",
-                     trunc_seq=None)
+    return merge_cdc(state, changes, ["user_id"], trunc_seq=None)
 
 
 # ---------------------------------------------------------------------------
@@ -932,8 +930,7 @@ def cdc_truncate_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     witness = spark.createDataFrame(
         [(1, "INSERT", -1, None, 1.0, 0)], schema=changes.schema
     )
-    return merge_cdc(None, changes.unionByName(witness), ["user_id"],
-                     old_prefix="old_")
+    return merge_cdc(None, changes.unionByName(witness), ["user_id"])
 
 
 @register(
@@ -989,8 +986,7 @@ def cdc_serial_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
     changes = ev.synthetic_changes(
         load_table(spark, sf_dir, "events"), with_pk_change=False
     ).coalesce(1)
-    return merge_cdc(None, changes, ["user_id"], old_prefix="old_",
-                     trunc_seq=None)
+    return merge_cdc(None, changes, ["user_id"], trunc_seq=None)
 
 
 _DDL_SQL = (
@@ -1015,8 +1011,7 @@ def schema_ddl_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     changes = ev.synthetic_changes(
         load_table(spark, sf_dir, "events"), with_pk_change=False
     )
-    state = merge_cdc(None, changes, ["user_id"], old_prefix="old_",
-                      trunc_seq=None)
+    state = merge_cdc(None, changes, ["user_id"], trunc_seq=None)
     return apply_ddl(state, _DDL_SQL, allow_drop=True)
 
 

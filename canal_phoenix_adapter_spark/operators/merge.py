@@ -36,6 +36,14 @@ OP_UPDATE = "UPDATE"
 OP_DELETE = "DELETE"
 OP_TRUNCATE = "TRUNCATE"
 
+# The change-batch row contract (typed_changes / explode_dml): a
+# total-order sequence column, the event type, and, for a PK-changing
+# UPDATE, the old key in old_<pk> (the reference's old[pk] ?? data[pk],
+# PhoenixSyncService.java:575-593).
+SEQ = "seq"
+OP = "op"
+OLD_PREFIX = "old_"
+
 _NO_PRESCAN = object()  # "did not pre-scan"; None means "no TRUNCATE"
 
 
@@ -50,61 +58,54 @@ _NO_PRESCAN = object()  # "did not pre-scan"; None means "no TRUNCATE"
 # cannot drift.
 
 
-def truncate_seq_expr(seq_col: str = "seq", op_col: str = "op") -> F.Column:
+def truncate_seq_expr() -> F.Column:
     """THE truncate-detection aggregate (max seq of TRUNCATE rows),
     shared by last_truncate_seq and the pruned store's single-pass
     pre-scan — two hand-maintained copies of this predicate would
     silently desynchronize the pre-scan from the merge it feeds
     (merge_cdc's trunc_seq makes the pre-scan authoritative)."""
-    return F.max(F.when(F.upper(F.col(op_col)) == OP_TRUNCATE, F.col(seq_col)))
+    return F.max(F.when(F.upper(F.col(OP)) == OP_TRUNCATE, F.col(SEQ)))
 
 
-def _is_create_sql(op_col: str) -> str:
-    """`op` marks a surviving row image (INSERT/UPDATE) — text twin of
-    the dispatch the reference applies per event type."""
-    return f"upper({_bq(op_col)}) IN ('{OP_INSERT}', '{OP_UPDATE}')"
+# `op` marks a surviving row image (INSERT/UPDATE) — text twin of the
+# dispatch the reference applies per event type.
+_IS_CREATE_SQL = f"upper({_bq(OP)}) IN ('{OP_INSERT}', '{OP_UPDATE}')"
 
 
-def _old_key_sql(
-    columns: list[str], pk: list[str], old_prefix: str = "old_"
-) -> list[str]:
+def _old_key_sql(columns: list[str], pk: list[str]) -> list[str]:
     """coalesce(old_<pk>, <pk>) per pk column — THE old-key expression
     (reference getPkVal, PhoenixSyncService.java:575-593), shared by
     collapse_changes' death rows, touched_keys, and (via
     old_key_exprs) the pruned store's touched-bucket pre-scan."""
     return [
-        f"coalesce({_bq(old_prefix + k)}, {_bq(k)})"
-        if (old_prefix + k) in columns else _bq(k)
+        f"coalesce({_bq(OLD_PREFIX + k)}, {_bq(k)})"
+        if (OLD_PREFIX + k) in columns else _bq(k)
         for k in pk
     ]
 
 
-def old_key_exprs(
-    columns: list[str], pk: list[str], old_prefix: str = "old_"
-) -> list[F.Column]:
+def old_key_exprs(columns: list[str], pk: list[str]) -> list[F.Column]:
     """Column form of _old_key_sql (one definition — see _bq)."""
-    return [F.expr(s) for s in _old_key_sql(columns, pk, old_prefix)]
+    return [F.expr(s) for s in _old_key_sql(columns, pk)]
 
 
-def _key_changed_sql(
-    columns: list[str], pk: list[str], old_prefix: str = "old_"
-) -> str:
+def _key_changed_sql(columns: list[str], pk: list[str]) -> str:
     """True iff the row's old_<pk> columns mark a PK-changing UPDATE
     (old key present and different) — THE death-row predicate, shared
     by collapse_changes' timeline and touched_keys' key set so the two
     can never disagree on which old keys an epoch touches."""
     terms = [
-        f"({_bq(old_prefix + k)} IS NOT NULL"
-        f" AND NOT ({_bq(old_prefix + k)} <=> {_bq(k)}))"
+        f"({_bq(OLD_PREFIX + k)} IS NOT NULL"
+        f" AND NOT ({_bq(OLD_PREFIX + k)} <=> {_bq(k)}))"
         for k in pk
-        if (old_prefix + k) in columns
+        if (OLD_PREFIX + k) in columns
     ]
     return "(" + (" OR ".join(terms) or "false") + ")"
 
 
 def _key_entries_sql(
-    columns: list[str], pk: list[str], op_col: str, old_prefix: str,
-    field_prefix: str, with_create_flag: bool,
+    columns: list[str], pk: list[str], field_prefix: str,
+    with_create_flag: bool,
 ) -> str:
     """The timeline's per-row key-entry array: the main key (with the
     create flag when asked), plus the death entry at the OLD key for a
@@ -113,7 +114,7 @@ def _key_entries_sql(
     drift here is exactly the silent-row-loss trap the
     touched-keys-equals-collapse test pins."""
     flag = (
-        f", CASE WHEN {_is_create_sql(op_col)} THEN 1 ELSE 0 END AS c"
+        f", CASE WHEN {_IS_CREATE_SQL} THEN 1 ELSE 0 END AS c"
         if with_create_flag else ""
     )
     dead_flag = ", 0 AS c" if with_create_flag else ""
@@ -122,11 +123,11 @@ def _key_entries_sql(
     ) + flag + ")"
     death = "struct(" + ", ".join(
         f"{oe} AS {_bq(field_prefix + k)}"
-        for oe, k in zip(_old_key_sql(columns, pk, old_prefix), pk)
+        for oe, k in zip(_old_key_sql(columns, pk), pk)
     ) + dead_flag + ")"
     return (
-        f"CASE WHEN {_is_create_sql(op_col)}"
-        f" AND {_key_changed_sql(columns, pk, old_prefix)}"
+        f"CASE WHEN {_IS_CREATE_SQL}"
+        f" AND {_key_changed_sql(columns, pk)}"
         f" THEN array({main}, {death}) ELSE array({main}) END"
     )
 
@@ -134,8 +135,6 @@ def _key_entries_sql(
 def touched_keys(
     changes: DataFrame,
     pk: list[str],
-    op_col: str = "op",
-    old_prefix: str = "old_",
     distinct: bool = True,
 ) -> DataFrame:
     """Keys a (pre-filtered) change batch touches: every row's main
@@ -161,11 +160,9 @@ def touched_keys(
     The key set must stay EXACTLY equal to the collapse's: a superset
     would anti-join away state rows no survivor re-adds (silent row
     loss), a subset would duplicate keys."""
-    old_cols = [old_prefix + k for k in pk]
-    if any(c in changes.columns for c in old_cols):
+    if any(OLD_PREFIX + k in changes.columns for k in pk):
         entries = _key_entries_sql(
-            changes.columns, pk, op_col, old_prefix,
-            field_prefix="", with_create_flag=False,
+            changes.columns, pk, field_prefix="", with_create_flag=False,
         )
         # inline() expands the struct array straight to pk-named
         # columns — generator and unpack in ONE projection.
@@ -175,30 +172,28 @@ def touched_keys(
     return keys.dropDuplicates() if distinct else keys
 
 
-def applicable_changes(changes: DataFrame, op_col: str = "op") -> DataFrame:
+def applicable_changes(changes: DataFrame) -> DataFrame:
     """The rows of a change batch the merge applies: INSERT, UPDATE and
     DELETE. Unrecognized event types are logged-and-ignored by the
     reference (PhoenixSyncService.sync else-branch), never applied as
     deletes; DDL rows travel the schema_sync channel, not the merge.
     One combined filter: Catalyst merges them anyway, and the driver
     pays one analysis instead of two per epoch (see _bq)."""
-    keep = (f"upper({_bq(op_col)}) IN "
+    keep = (f"upper({_bq(OP)}) IN "
             f"('{OP_INSERT}', '{OP_UPDATE}', '{OP_DELETE}')")
     if "is_ddl" in changes.columns:
         keep += " AND NOT coalesce(`is_ddl`, false)"
     return changes.where(keep)
 
 
-def last_truncate_seq(changes: DataFrame, seq_col: str = "seq", op_col: str = "op"):
+def last_truncate_seq(changes: DataFrame):
     """Seq of the last TRUNCATE in the batch, or None. A TRUNCATE wipes
     state and all earlier events (C7, PhoenixSyncService.java:505-513
     applied in event order)."""
-    return changes.agg(truncate_seq_expr(seq_col, op_col)).first()[0]
+    return changes.agg(truncate_seq_expr()).first()[0]
 
 
-def _image_cols(
-    columns: list[str], pk: list[str], seq_col: str, op_col: str, old_prefix: str
-) -> list[str]:
+def _image_cols(columns: list[str], pk: list[str]) -> list[str]:
     """Row-image columns of a change batch: everything except the
     sequence/op metadata, the EXACT ``old_<pk>`` PK-change columns,
     and is_ddl (routing metadata — its ROWS are filtered in
@@ -210,24 +205,21 @@ def _image_cols(
     schema align). One definition shared by collapse_changes and
     merge_cdc so a future metadata column cannot be excluded in one
     and healed into state by the other."""
-    old_keys = {old_prefix + k for k in pk}
+    old_keys = {OLD_PREFIX + k for k in pk}
     return [
         c for c in columns
-        if c not in (seq_col, op_col, "is_ddl") and c not in old_keys
+        if c not in (SEQ, OP, "is_ddl") and c not in old_keys
     ]
 
 
-def image_schema(
-    changes: T.StructType, pk: list[str], seq_col: str = "seq",
-    op_col: str = "op", old_prefix: str = "old_",
-) -> T.StructType:
+def image_schema(changes: T.StructType, pk: list[str]) -> T.StructType:
     """Schema of the survivor rows merge_cdc builds from a change batch
     of schema ``changes``: the pk columns, then the other image
     columns, with the batch's types. Lets a caller that has not built
     the collapse (the pruned state store) ask healed_schema whether a
     batch would change the state schema."""
     fields = {f.name: f for f in changes.fields}
-    image = _image_cols(changes.names, pk, seq_col, op_col, old_prefix)
+    image = _image_cols(changes.names, pk)
     return T.StructType(
         [fields[k] for k in pk] + [fields[c] for c in image if c not in pk]
     )
@@ -248,13 +240,7 @@ def healed_schema(state: T.StructType, images: T.StructType) -> T.StructType:
     )
 
 
-def collapse_changes(
-    changes: DataFrame,
-    pk: list[str],
-    seq_col: str = "seq",
-    op_col: str = "op",
-    old_prefix: str = "old_",
-) -> DataFrame:
+def collapse_changes(changes: DataFrame, pk: list[str]) -> DataFrame:
     """Collapse an ordered change batch to its net per-key effect.
 
     Input layout: one row per change event with typed image columns,
@@ -267,7 +253,7 @@ def collapse_changes(
     alive, image columns hold the final row) or 0 (key ends deleted).
     TRUNCATE rows must be filtered out beforehand (see merge_cdc).
     """
-    image_cols = _image_cols(changes.columns, pk, seq_col, op_col, old_prefix)
+    image_cols = _image_cols(changes.columns, pk)
 
     # Build the per-key timeline in ONE pass: each change row yields its
     # main effect (create with the row image, or delete with a null
@@ -283,16 +269,12 @@ def collapse_changes(
     # death rows). Expression TEXT throughout, not composed Columns —
     # see _bq: same operators, same aliases, ~6 py4j calls instead of
     # O(columns) hundreds, paid per streaming epoch.
-    is_create = _is_create_sql(op_col)
-
-    old_cols = [old_prefix + k for k in pk]
-    if any(c in changes.columns for c in old_cols):
+    if any(OLD_PREFIX + k in changes.columns for k in pk):
         entries = _key_entries_sql(
-            changes.columns, pk, op_col, old_prefix,
-            field_prefix="k_", with_create_flag=True,
+            changes.columns, pk, field_prefix="k_", with_create_flag=True,
         )
         timeline = changes.selectExpr(
-            f"{_bq(seq_col)} AS __seq",
+            f"{_bq(SEQ)} AS __seq",
             *[_bq(c) for c in image_cols],
             f"explode({entries}) AS __e",
         ).selectExpr(
@@ -309,10 +291,10 @@ def collapse_changes(
     else:
         timeline = changes.selectExpr(
             *[f"{_bq(k)} AS {_bq('__k_' + k)}" for k in pk],
-            f"{_bq(seq_col)} AS __seq",
-            f"CASE WHEN {is_create} THEN 1 ELSE 0 END AS __is_create",
+            f"{_bq(SEQ)} AS __seq",
+            f"CASE WHEN {_IS_CREATE_SQL} THEN 1 ELSE 0 END AS __is_create",
             *[
-                f"CASE WHEN {is_create} THEN {_bq(c)} END AS {_bq(c)}"
+                f"CASE WHEN {_IS_CREATE_SQL} THEN {_bq(c)} END AS {_bq(c)}"
                 for c in image_cols
             ],
         )
@@ -345,9 +327,6 @@ def merge_cdc(
     state: DataFrame | None,
     changes: DataFrame,
     pk: list[str],
-    seq_col: str = "seq",
-    op_col: str = "op",
-    old_prefix: str = "old_",
     broadcast_changes: bool = True,
     skip_missing: bool = False,
     trunc_seq: object = _NO_PRESCAN,
@@ -377,16 +356,16 @@ def merge_cdc(
     batch granularity.
     """
     if trunc_seq is _NO_PRESCAN:
-        trunc_seq = last_truncate_seq(changes, seq_col, op_col)
+        trunc_seq = last_truncate_seq(changes)
     if trunc_seq is not None:
         # Column form, not text: trunc_seq is a runtime VALUE whose
         # type (long, timestamp, ...) F.lit preserves exactly.
-        changes = changes.where(F.col(seq_col) > F.lit(trunc_seq))
+        changes = changes.where(F.col(SEQ) > F.lit(trunc_seq))
         state = None  # truncate wipes accumulated state (C7)
-    changes = applicable_changes(changes, op_col)
+    changes = applicable_changes(changes)
 
-    last = collapse_changes(changes, pk, seq_col, op_col, old_prefix)
-    image_cols = _image_cols(changes.columns, pk, seq_col, op_col, old_prefix)
+    last = collapse_changes(changes, pk)
+    image_cols = _image_cols(changes.columns, pk)
     survivors = last.where("__is_create = 1").selectExpr(
         *[f"{_bq('__k_' + k)} AS {_bq(k)}" for k in pk],
         *[_bq(c) for c in image_cols if c not in pk],
@@ -418,8 +397,7 @@ def merge_cdc(
     # barrier) from every streaming epoch. The shuffle route
     # keeps the distinct: there the dedup shrinks the shuffled key
     # bytes by the batch's per-key churn factor.
-    touched = touched_keys(changes, pk, op_col, old_prefix,
-                           distinct=not broadcast_changes)
+    touched = touched_keys(changes, pk, distinct=not broadcast_changes)
     return replace_keys(state, touched, survivors, pk, broadcast_changes)
 
 

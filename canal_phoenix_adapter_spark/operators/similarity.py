@@ -59,7 +59,7 @@ def nonzero_vecs(df: DataFrame, id_col: str, vec_col: str,
     pushing that filter below the projection substitutes the whole
     norm fold into the Filter condition, so every vector paid the
     64-element fold TWICE (the guide §4.4 double-eval shape, with
-    built-ins — r14 "not yet optimized" item 5). Instead the filter
+    built-ins). Instead the filter
     runs BELOW the projection on an exactly-equivalent cheap
     predicate over the raw array; the fold then evaluates once per
     surviving vector, and downstream deterministic key filters
@@ -128,8 +128,9 @@ def _keyed_ann_topk(
 
 def _ann_from_base(base: DataFrame, num_queries: int, k: int) -> DataFrame:
     """_keyed_ann_topk from a prepared (id, v, nrm, __key) base — the
-    entry point for quantizers that need a join to attach the key
-    (_join_cells' large-k codebook) instead of a key expression."""
+    entry point for quantizers that attach the key as a column
+    (with_codebook_cells' Arrow kernel at large k) instead of a key
+    expression."""
     queries = base.where(F.col("id") < num_queries).select(
         F.col("id").alias("query_id"), F.col("v").alias("qv"),
         F.col("nrm").alias("qn"), F.col("__key"),
@@ -162,7 +163,7 @@ def cosine_topk(
     The keyed body with ONE universal bucket (constant key — Catalyst
     folds it away and plans the same allowed O(q*n) broadcast nested
     loop as the previous explicit form, q constant): one body for all
-    top-k variants (r13 fold)."""
+    top-k variants."""
     return _keyed_ann_topk(
         df, id_col, vec_col, F.lit(0).cast("long"), num_queries, k
     )
@@ -319,7 +320,7 @@ def _dist2_sql(vec_sql: str, centroid: list[float]) -> str:
     """Squared L2 distance to a literal centroid, as one fold — SQL
     text. ``CAST('<repr>' AS DOUBLE)`` literals: repr is shortest
     round-trip decimal, bit-identical to the F.lit() path (the
-    _train_iteration_sql precedent, r14).
+    _train_iteration_sql precedent).
 
     Deliberately a zip_with/aggregate fold and NOT an unrolled
     per-component expression chain: with k centroids x dim components
@@ -347,8 +348,8 @@ def assign_cells(vec_col: str, codebook: list[list[float]]) -> F.Column:
     the expression, same contract as lsh_bucket_expr). Built as ONE
     parsed SQL string: the previous Column form paid O(k*dim) py4j
     literal conversions per call — ~0.4s of the trained-ANN gate's
-    serve construction at k=8 x dim=64 (r15; same discipline as
-    _train_iteration_sql, whose docstring carries the measurements).
+    serve construction at k=8 x dim=64 (same discipline as
+    _train_iteration_sql).
     Same expression tree as before: the dists array appears in both
     array_position arguments, exactly like the composed-Column form
     it replaces."""
@@ -364,33 +365,10 @@ def assign_cells(vec_col: str, codebook: list[list[float]]) -> F.Column:
 
 LITERAL_CODEBOOK_MAX = 64  # measured: F.lit-array construction 2.2 s
 # at k=64 but 7.8 s at k=256 and 37 s at k=1024 (driver-side literal
-# conversion is O(k*dim)); past this, the codebook travels as DATA.
+# conversion is O(k*dim)); past this, _arrow_cells assigns the cells.
 
 ARROW_CELL_CHUNK_ELEMS = 1 << 24  # ~134 MB float64 distance block;
 # bounds _arrow_cells' per-worker peak independent of k (see kernel)
-
-
-def _join_cells(
-    df: DataFrame, codebook: list[list[float]], vec_col: str, cell_col: str
-) -> DataFrame:
-    """Argmin-of-codebook cell via a ONE-ROW broadcast join: the
-    codebook ships as data (one createDataFrame row — no per-literal
-    py4j round-trips, no O(k*dim) plan text), every task reads it from
-    the broadcast, and the argmin is a transform fold over the array —
-    the plan stays O(1) nodes at ANY k. Bit-identical cells to
-    assign_cells (same left-to-right (x-c)^2 fold, same first-min
-    array_position; unit-witnessed), so the two strategies are
-    interchangeable. Same 1-row-broadcast shape as
-    etl.range_split_stats' bounds attach."""
-    cb = F.broadcast(df.sparkSession.createDataFrame(
-        [(codebook,)], "__cb array<array<double>>"
-    ))
-    dists = F.transform(F.col("__cb"), lambda cv: F.aggregate(
-        F.zip_with(F.col(vec_col), cv,
-                   lambda x, c: (x.cast("double") - c) * (x.cast("double") - c)),
-        F.lit(0.0), lambda acc, x: acc + x))
-    cell = (F.array_position(dists, F.array_min(dists)) - 1).cast("long")
-    return df.join(cb).withColumn(cell_col, cell).drop("__cb")
 
 
 def _arrow_cells(
@@ -400,23 +378,22 @@ def _arrow_cells(
     (batch x dim) @ (dim x k) BLAS matmul per Arrow batch instead of
     k interpreted HOF folds per ROW. This is the repo's one deliberate
     dense-linear-algebra pandas_udf (Arrow-vectorized — NOT a
-    row-at-a-time Python UDF): at k=1563 x 200k vectors the fold
+    row-at-a-time Python UDF): at k=1563 x 200k vectors a fold
     kernel measured 921.9 s where this kernel serves in seconds
-    (SCALE.md r13) — flat-IVF assignment is a dense matmul, and no
+    (SCALE.md) — flat-IVF assignment is a dense matmul, and no
     Column-fold formulation competes with BLAS on it. Distances
     expand as |x|^2 - 2 x.c + |c|^2 and |x|^2 is argmin-invariant, so
     only -2 x.c + |c|^2 is computed. Ulp caveat: BLAS summation order
     differs from the folds' left-to-right, so an EXACT distance tie
-    may assign differently than the fold kernels (measure-zero on
+    may assign differently than assign_cells (measure-zero on
     q6-quantized codebooks and real data; agreement is unit-pinned on
-    fixtures) — the fold paths remain the bit-pinned oracle
+    fixtures) — assign_cells remains the bit-pinned oracle
     reference. NULL and wrong-width (ragged) vectors map to NULL
-    cells, matching the fold kernels (their zip_with pads the short
-    side with NULLs and the distance folds to NULL — r14 review:
-    nonzero_vecs does NOT screen width, so a ragged row reaches every
-    kernel, and before this guard it crashed the whole Arrow batch
-    where the folds returned NULL); element-NULL vectors never reach
-    the kernel (nonzero_vecs' norm predicate is NULL for them)."""
+    cells, matching assign_cells (its zip_with pads the short side
+    with NULLs and the distance folds to NULL; nonzero_vecs does NOT
+    screen width, so a ragged row reaches this kernel); element-NULL
+    vectors never reach the kernel (nonzero_vecs' norm predicate is
+    NULL for them)."""
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 
@@ -450,33 +427,23 @@ def _arrow_cells(
 def with_codebook_cells(
     df: DataFrame, codebook: list[list[float]],
     vec_col: str, cell_col: str = "cell",
-    kernel: str | None = None,
 ) -> DataFrame:
-    """Attach the trained-quantizer cell, strategy by k: below
+    """Attach the trained-quantizer cell, strategy by k alone: up to
     LITERAL_CODEBOOK_MAX the codebook rides into the plan as literal
-    fold expressions (scan-local projection, no join — fuses with the
-    scan, bit-pinned against the oracle); above it, the Arrow BLAS
-    kernel (_arrow_cells — assignment cost is a dense matmul, where
-    interpreted folds measured ~100x slower at k ∝ n scale).
-    ``kernel``: None = that auto; 'fold' forces the fold reference
-    (literal or one-row-broadcast join by size); 'arrow' forces the
-    BLAS kernel. Anything else refuses loudly (r14 review: a typo'd
-    kernel silently rode the auto policy)."""
-    if kernel not in (None, "arrow", "fold"):
-        raise ValueError(f"kernel must be None, 'arrow' or 'fold': {kernel!r}")
-    if kernel == "arrow":
-        return _arrow_cells(df, codebook, vec_col, cell_col)
+    fold expressions (assign_cells: scan-local projection, no join —
+    fuses with the scan, bit-pinned against the oracle); above it, the
+    Arrow BLAS kernel (_arrow_cells — assignment cost is a dense
+    matmul, where interpreted folds measured ~100x slower at k ∝ n
+    scale)."""
     if len(codebook) <= LITERAL_CODEBOOK_MAX:
         return df.withColumn(cell_col, assign_cells(vec_col, codebook))
-    if kernel == "fold":
-        return _join_cells(df, codebook, vec_col, cell_col)
     return _arrow_cells(df, codebook, vec_col, cell_col)
 
 
 def ivf_k_for_corpus(expected_count: int, max_cell: int | None = None) -> int:
     """k ∝ n for the IVF quantizer: k = ceil(2n / max_cell), floor 8 —
     targets a MEAN cell of max_cell/2 (2x skew headroom under the
-    cap). The anchors are measured (SCALE_SMOKE/SCALE.md r12): at
+    cap). The anchors are measured (SCALE_SMOKE/SCALE.md): at
     FIXED k the uncapped within-cell pair cost is ~n^2/k (static
     2*dim quantizer measured 7.29x wall at 103x output over one
     decade), and with the cap ON recall silently decays once cells
@@ -502,11 +469,9 @@ def _train_iteration_sql(view: str, codebook: list[list[float]], dim: int) -> st
     one grouped aggregate — no join, one exchange (plan-pinned). SQL
     TEXT, not Column composition: the JVM parses the k x dim literal
     text in milliseconds where the equivalent Column build costs
-    ~0.7 s/iteration of driver py4j round-trips — measured r12,
-    deleted r13, RESURRECTED r14 when the bench gate's 1.70x
-    regression adjudicated to construction cost, not the broadcast
-    join (warm iter: 0.55 s this form vs 1.27 s literal Columns vs
-    1.29 s _join_cells). CAST('<repr>' AS DOUBLE): repr is shortest
+    ~0.7 s/iteration of driver py4j round-trips (warm iter: 0.55 s
+    this form vs 1.27 s literal Columns vs 1.29 s a one-row codebook
+    broadcast join). CAST('<repr>' AS DOUBLE): repr is shortest
     round-trip decimal — bit-identical to the F.lit() path."""
     dists = ", ".join(_dist2_sql("__v", centroid) for centroid in codebook)
     sums = ", ".join(f"sum(CAST(__v[{i}] AS DOUBLE)) AS s{i}" for i in range(dim))
@@ -524,7 +489,6 @@ def ivf_train_codebook(
     vec_col: str = "embedding",
     k: int = 8,
     iters: int = 3,
-    kernel: str | None = None,
 ) -> list[list[float]]:
     """Deterministic Lloyd's k-means for the IVF coarse quantizer.
 
@@ -543,16 +507,13 @@ def ivf_train_codebook(
     blocks vs re-reading the source each pass); the persist is
     released before returning.
 
-    Each iteration is ONE job, the strategy split by k: at k <=
-    LITERAL_CODEBOOK_MAX the whole pass is ONE SQL string over a temp
-    view (_train_iteration_sql — see its docstring for the r14
-    adjudication of the r13 1.70x bench regression: per-iteration
-    driver-side py4j plan CONSTRUCTION, not the broadcast join);
-    sized k attaches via with_codebook_cells — Arrow BLAS kernel by
-    default, one-row-broadcast _join_cells for kernel='fold' (the
-    codebook travels as DATA, no O(k*dim) plan text, which is what
-    lets k ∝ n train; the Column-construction constant is noise
-    against the O(n*k) job there).
+    Each iteration is ONE job, the strategy split by k alone, as in
+    with_codebook_cells: at k <= LITERAL_CODEBOOK_MAX the whole pass
+    is ONE SQL string over a temp view (_train_iteration_sql — the
+    per-iteration cost there is driver-side py4j plan construction);
+    sized k attaches the cells with the Arrow BLAS kernel (the
+    codebook travels into the UDF, no O(k*dim) plan text, which is
+    what lets k ∝ n train).
 
     Determinism: seeds are the k lowest-id vectors (TakeOrdered), and
     every subsequent step is deterministic arithmetic — same data,
@@ -567,16 +528,13 @@ def ivf_train_codebook(
     trained codebook bit-stable across layouts."""
     import math
 
-    if kernel not in (None, "arrow", "fold"):
-        raise ValueError(f"kernel must be None, 'arrow' or 'fold': {kernel!r}")
-
     def _q6(x: float) -> float:
         return math.copysign(math.floor(abs(x) * 1e6 + 0.5), x) / 1e6
 
     # Untrainable rows drop under nonzero_vecs' own serving predicate
     # (norm > 0): NULL / element-NULL / empty arrays crash seeding and
     # zero-norm vectors have no direction — an isNotNull-only guard
-    # passed the latter three (r12 ADVICE). Need k usable seeds.
+    # passed the latter three. Need k usable seeds.
     vecs = df.where(_norm(F.col(vec_col)) > 0)
     seeds = (
         vecs.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
@@ -593,7 +551,7 @@ def ivf_train_codebook(
     # Ragged rows (wrong width, positive norm) pass the norm guard but
     # ABORT the training job under ANSI mode: the update step's
     # component sums index __v[i] past a short vector's end
-    # (INVALID_ARRAY_INDEX — measured r14, all three kernels). Serving
+    # (INVALID_ARRAY_INDEX, on either kernel). Serving
     # assigns them a NULL cell; training's equivalent is contributing
     # to no centroid, i.e. exclusion. Mixed-width SEEDS mean the
     # first-seed dim was arbitrary — refuse loudly instead.
@@ -606,7 +564,7 @@ def ivf_train_codebook(
         vecs.where(F.size(F.col(vec_col)) == dim)
         .select(F.col(vec_col).alias("__v")).persist()
     )
-    sql_text = kernel != "arrow" and k <= LITERAL_CODEBOOK_MAX
+    sql_text = k <= LITERAL_CODEBOOK_MAX
     if sql_text:
         view = f"__ivf_train_{id(base)}"
         base.createOrReplaceTempView(view)
@@ -618,7 +576,7 @@ def ivf_train_codebook(
                 ).collect()
             else:
                 stats = (
-                    with_codebook_cells(base, codebook, "__v", "__cell", kernel)
+                    _arrow_cells(base, codebook, "__v", "__cell")
                     .groupBy("__cell")
                     .agg(
                         F.count(F.lit(1)).alias("n"),

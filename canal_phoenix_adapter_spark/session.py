@@ -21,6 +21,17 @@ from pyspark.sql import SparkSession
 logger = logging.getLogger(__name__)
 
 
+def _default_driver_mem() -> str:
+    """spark.driver.memory when SPARK_DRIVER_MEM is unset: 48g, capped
+    at half the host's physical memory so a local-mode JVM never sizes
+    its heap past what the host can back beside its other processes."""
+    try:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):  # no POSIX sysconf
+        return "48g"
+    return f"{min(48 << 10, phys // 2 >> 20)}m"
+
+
 def get_spark(app_name: str = "canal-phoenix-adapter-spark",
               cpus: int | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
@@ -72,7 +83,8 @@ def get_spark(app_name: str = "canal-phoenix-adapter-spark",
         .config("spark.sql.codegen.maxFields", "160")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.files.maxPartitionBytes", "128m")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEM") or _default_driver_mem())
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )

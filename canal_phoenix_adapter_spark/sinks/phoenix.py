@@ -39,7 +39,16 @@ from typing import Any
 from pyspark.sql import DataFrame
 
 from canal_phoenix_adapter_spark.config import MappingConfig
-from canal_phoenix_adapter_spark.operators.merge import _image_cols
+from canal_phoenix_adapter_spark.operators.merge import (
+    OLD_PREFIX,
+    OP,
+    OP_DELETE,
+    OP_INSERT,
+    OP_TRUNCATE,
+    OP_UPDATE,
+    SEQ,
+    _image_cols,
+)
 from canal_phoenix_adapter_spark.operators.transform import mapping_columns
 from canal_phoenix_adapter_spark.sources.jdbc import (
     delete_sql,
@@ -48,7 +57,6 @@ from canal_phoenix_adapter_spark.sources.jdbc import (
     upsert_sql,
 )
 
-OP_INSERT, OP_UPDATE, OP_DELETE, OP_TRUNCATE = "INSERT", "UPDATE", "DELETE", "TRUNCATE"
 
 #: exception class names the reference treats as heal-able
 #: (PhoenixSyncService.java:105-107 endsWith checks)
@@ -183,9 +191,6 @@ def upsert_item(
     cfg: MappingConfig,
     item: dict,
     target_columns: set[str] | None = None,
-    seq_col: str = "seq",
-    op_col: str = "op",
-    old_prefix: str = "old_",
 ) -> None:
     """INSERT/UPDATE apply (PhoenixSyncService.insert, :370-468): build
     the UPSERT column list through the mapping (skipMissing columns
@@ -195,10 +200,7 @@ def upsert_item(
     m = cfg.db_mapping
     # merge._image_cols, not a local copy: a re-implementation here
     # once drifted by the is_ddl exclusion (IS_DDL in every UPSERT)
-    colmap = mapping_columns(
-        m, _image_cols(list(item), m.pk_source_columns(), seq_col, op_col,
-                       old_prefix)
-    )
+    colmap = mapping_columns(m, _image_cols(list(item), m.pk_source_columns()))
     low = _ci_view(item)
     cols: list[str] = []
     vals: list[Any] = []
@@ -212,7 +214,7 @@ def upsert_item(
     del_vals: list[Any] = []
     for tgt, src in m.target_pk.items():
         pk_src = src or tgt
-        old_val = low.get((old_prefix + pk_src).lower())
+        old_val = low.get((OLD_PREFIX + pk_src).lower())
         if old_val is not None and old_val != low.get(pk_src.lower()):
             key_changed = True
         # enum decode applies to PK PREDICATES too (reference runs
@@ -253,17 +255,14 @@ def sync_item(
     cfg: MappingConfig,
     item: dict,
     target_columns: set[str] | None = None,
-    seq_col: str = "seq",
-    op_col: str = "op",
-    old_prefix: str = "old_",
 ) -> None:
     """Per-row dispatch (PhoenixSyncService.java:234-254): INSERT and
     UPDATE both route to upsert (Phoenix UPSERT is idempotent on the
     PK), DELETE/TRUNCATE to their statements; unrecognized types are
     ignored exactly like the reference's else-branch."""
-    op = (item.get(op_col) or "").upper()
+    op = (item.get(OP) or "").upper()
     if op in (OP_INSERT, OP_UPDATE):
-        upsert_item(executor, cfg, item, target_columns, seq_col, op_col, old_prefix)
+        upsert_item(executor, cfg, item, target_columns)
     elif op == OP_DELETE:
         delete_item(executor, cfg, item)
     elif op == OP_TRUNCATE:
@@ -275,9 +274,6 @@ def apply_partition(
     cfg: MappingConfig,
     connection_factory: Callable[[], Any],
     target_columns: set[str] | None = None,
-    seq_col: str = "seq",
-    op_col: str = "op",
-    old_prefix: str = "old_",
     commit_batch: int | None = None,
     heal: Callable[[Any], bool] | None = None,
 ) -> int:
@@ -309,7 +305,7 @@ def apply_partition(
     def apply_all(allow_flush: bool = True) -> int:
         n = 0
         for item in items:
-            sync_item(executor, cfg, item, tcols, seq_col, op_col, old_prefix)
+            sync_item(executor, cfg, item, tcols)
             n += 1
             if allow_flush and commit_batch and executor.idx >= commit_batch:
                 executor.commit()
@@ -329,7 +325,7 @@ def apply_partition(
             # the replay: a mid-replay commit would persist a prefix
             # (including any TRUNCATE in it) past the final
             # rollback-and-raise, silently breaking the documented
-            # second-failure contract (r10 review). A replayed
+            # second-failure contract. A replayed
             # partition is one transaction. Guarding only the commit
             # would also close the
             # connection with an open transaction when a replayed
@@ -352,9 +348,6 @@ def write_changes(
     connection_factory: Callable[[], Any],
     target_columns: set[str] | None = None,
     num_partitions: int | None = None,
-    seq_col: str = "seq",
-    op_col: str = "op",
-    old_prefix: str = "old_",
     commit_batch: int | None = None,
     heal: Callable[[Any], bool] | None = None,
 ) -> None:
@@ -391,10 +384,9 @@ def write_changes(
         parted = df.repartition(n, *pk_src)
     else:
         parted = df.repartition(1)
-    parted = parted.sortWithinPartitions(seq_col)
+    parted = parted.sortWithinPartitions(SEQ)
     parted.foreachPartition(
         lambda rows: apply_partition(
-            rows, cfg, connection_factory, target_columns,
-            seq_col, op_col, old_prefix, commit_batch, heal,
+            rows, cfg, connection_factory, target_columns, commit_batch, heal,
         )
     )

@@ -78,7 +78,7 @@ _SEQ_TS_MAX = (1 << 14) - 1      # 16,383 ms delivery-lag tiebreak window
 _SEQ_POS_MAX = _SEQ_TS_SHIFT - 1
 
 
-def explode_dml(df: DataFrame, seq_col: str = "seq") -> DataFrame:
+def explode_dml(df: DataFrame) -> DataFrame:
     """Dml batch -> SingleDml rows (C1, support/SingleDml.java:67-92).
 
     * data[i] pairs with old[i] (changed-columns previous image).
@@ -127,7 +127,7 @@ def explode_dml(df: DataFrame, seq_col: str = "seq") -> DataFrame:
             es_sec * F.lit(_SEQ_ES_SHIFT)
             + ts_tie * F.lit(_SEQ_TS_SHIFT)
             + F.least(F.col("pos"), F.lit(_SEQ_POS_MAX))
-        ).alias(seq_col),
+        ).alias("seq"),
         F.col("destination"),
         F.col("groupId").alias("group_id"),
         F.col("database"),

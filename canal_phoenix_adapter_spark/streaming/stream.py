@@ -30,6 +30,7 @@ from canal_phoenix_adapter_spark.config import MappingConfig
 from canal_phoenix_adapter_spark.functions.hashing import bq as _bq
 from canal_phoenix_adapter_spark.jvm_shim import fits_one_split
 from canal_phoenix_adapter_spark.operators.merge import (
+    OLD_PREFIX,
     applicable_changes,
     collapse_changes,
     healed_schema,
@@ -309,7 +310,7 @@ class ParquetStateStore:
         contract, like PrunedParquetStateStore._scan_aggs)."""
         row = batch_df.agg(
             F.count(F.lit(1)).alias("n"),
-            truncate_seq_expr("seq", "op").alias("tr"),
+            truncate_seq_expr().alias("tr"),
         ).first()
         if row["n"] == 0:
             return None, None
@@ -335,8 +336,7 @@ class ParquetStateStore:
         every executor."""
         state = self.read()
         prev_cols = None if state is None else {c.lower() for c in state.columns}
-        new_state = merge_cdc(state, batch_df, pk, old_prefix="old_",
-                              trunc_seq=trunc_seq,
+        new_state = merge_cdc(state, batch_df, pk, trunc_seq=trunc_seq,
                               broadcast_changes=broadcast_changes)
         self._write_unlocked(new_state, version, epoch_id=epoch_id)
         return {c.lower() for c in new_state.columns}, prev_cols
@@ -715,11 +715,11 @@ class PrunedParquetStateStore(ParquetStateStore):
             F.collect_set(
                 self._bucket_of([F.col(k) for k in pk])
             ).alias("nb"),
-            truncate_seq_expr("seq", "op").alias("tr"),
+            truncate_seq_expr().alias("tr"),
             F.count(F.lit(1)).alias("n"),
         ]
-        if any(f"old_{k}" in batch_df.columns for k in pk):
-            old_key = old_key_exprs(batch_df.columns, pk, "old_")
+        if any(OLD_PREFIX + k in batch_df.columns for k in pk):
+            old_key = old_key_exprs(batch_df.columns, pk)
             aggs.append(F.collect_set(self._bucket_of(old_key)).alias("ob"))
         return aggs
 

@@ -764,52 +764,30 @@ def test_ivf_k_for_corpus_anchors():
     assert similarity.ivf_k_for_corpus(2_000, max_cell=16) == 250
 
 
-def test_join_cells_bit_identical_to_literal_assign(spark):
-    """The one-row-broadcast codebook attach must produce the SAME
-    cell as the literal fold expressions — same (x-c)^2 left-to-right
-    fold, same first-min argmin — or the LITERAL_CODEBOOK_MAX switch
-    would silently change assignments at the size boundary."""
-    cb = [[float((i * 7 + j * 3) % 11) / 7.0 for j in range(8)]
-          for i in range(6)]
-    df = spark.createDataFrame(
-        [(i, [((i * 31 + j) % 17) / 3.0 for j in range(8)])
-         for i in range(50)],
-        "vec_id long, embedding array<float>",
-    )
-    lit = {r["vec_id"]: r["cell"] for r in df.select(
-        "vec_id", similarity.assign_cells("embedding", cb).alias("cell")
-    ).collect()}
-    joined = {r["vec_id"]: r["cell"] for r in similarity._join_cells(
-        df, cb, "embedding", "cell").select("vec_id", "cell").collect()}
-    assert lit == joined and len(set(lit.values())) > 1
-
-
 def test_ivf_train_small_k_avoids_column_composed_join(spark, monkeypatch):
-    """r13 VERDICT weak item: training routed EVERY iteration through
-    the Column-composed _join_cells attach, costing the k=8 bench gate
-    1.70x — adjudicated r14 to per-iteration driver-side py4j plan
-    construction. At k <= LITERAL_CODEBOOK_MAX training submits the
-    SQL-text iteration and _join_cells must NOT run; and the
-    SQL-trained codebook is bit-identical to the join-form one (repr
-    round-trip literals, same fold, same first-min argmin)."""
+    """Training's per-iteration cost at small k is driver-side py4j
+    plan construction, so at k <= LITERAL_CODEBOOK_MAX training
+    submits the SQL-text iteration and the Arrow kernel must NOT run;
+    and the SQL-trained codebook equals the Arrow-trained one on
+    tie-free data (q6 quantization absorbs the summation order)."""
     rows = [(i, [((i * 31 + j) % 17) / 3.0 + (5.0 if i % 2 else -5.0)
                  for j in range(4)]) for i in range(20)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     monkeypatch.setattr(similarity, "LITERAL_CODEBOOK_MAX", 0)
-    via_join = similarity.ivf_train_codebook(df, k=2, iters=2, kernel="fold")
+    via_arrow = similarity.ivf_train_codebook(df, k=2, iters=2)
 
     def _boom(*a, **kw):  # pragma: no cover - failure path
-        raise AssertionError("small-k training must not join the codebook")
+        raise AssertionError("small-k training must not run the Arrow kernel")
 
     monkeypatch.setattr(similarity, "LITERAL_CODEBOOK_MAX", 64)
-    monkeypatch.setattr(similarity, "_join_cells", _boom)
-    assert similarity.ivf_train_codebook(df, k=2, iters=2) == via_join
+    monkeypatch.setattr(similarity, "_arrow_cells", _boom)
+    assert similarity.ivf_train_codebook(df, k=2, iters=2) == via_arrow
 
 
 def test_arrow_cells_agree_with_fold_kernels(spark, monkeypatch):
-    """The Arrow BLAS assignment must agree with BOTH fold kernels
-    (literal expressions and one-row-broadcast join) away from exact
-    distance ties — same argmin, first-min tie rule; and a NULL
+    """The Arrow BLAS assignment (k past LITERAL_CODEBOOK_MAX) must
+    agree with the literal fold reference assign_cells away from
+    exact distance ties — same argmin, first-min tie rule; and a NULL
     vector maps to a NULL cell instead of crashing the batch."""
     cb = [[float((i * 7 + j * 3) % 11) / 7.0 for j in range(8)]
           for i in range(6)]
@@ -818,26 +796,27 @@ def test_arrow_cells_agree_with_fold_kernels(spark, monkeypatch):
          for i in range(60)] + [(99, None)],
         "vec_id long, embedding array<float>",
     )
+    fold = {r["vec_id"]: r["cell"] for r in df.where(
+        "embedding IS NOT NULL").select(
+        "vec_id", similarity.assign_cells("embedding", cb).alias("cell")
+    ).collect()}
+    vecs = df.where("vec_id < 24 AND embedding IS NOT NULL")
+    fold_trained = similarity.ivf_train_codebook(vecs, k=2, iters=2)
+    monkeypatch.setattr(similarity, "LITERAL_CODEBOOK_MAX", 0)
     arrow = {r["vec_id"]: r["cell"] for r in similarity.with_codebook_cells(
-        df, cb, "embedding", kernel="arrow").select("vec_id", "cell").collect()}
-    fold = {r["vec_id"]: r["cell"] for r in similarity._join_cells(
-        df.where("embedding IS NOT NULL"), cb, "embedding", "cell"
-    ).select("vec_id", "cell").collect()}
+        df, cb, "embedding").select("vec_id", "cell").collect()}
     assert arrow[99] is None
     assert {i: c for i, c in arrow.items() if i != 99} == fold
-    # row-chunked kernel (sized-k memory bound, r14) assigns
+    # the row-chunked kernel (sized-k memory bound) assigns
     # identically: force many chunks per batch and compare
     monkeypatch.setattr(similarity, "ARROW_CELL_CHUNK_ELEMS", 13)
     chunked = {r["vec_id"]: r["cell"]
-               for r in similarity.with_codebook_cells(
-                   df, cb, "embedding", kernel="arrow")
+               for r in similarity.with_codebook_cells(df, cb, "embedding")
                .select("vec_id", "cell").collect()}
     assert chunked == arrow
     # training through the arrow kernel reproduces the fold-trained
     # codebook on tie-free data (q6 quantization absorbs sum order)
-    vecs = df.where("vec_id < 24 AND embedding IS NOT NULL")
-    assert similarity.ivf_train_codebook(vecs, k=2, iters=2, kernel="arrow") \
-        == similarity.ivf_train_codebook(vecs, k=2, iters=2, kernel="fold")
+    assert similarity.ivf_train_codebook(vecs, k=2, iters=2) == fold_trained
 
 
 def test_sized_ivf_codebook_threads_through_consumers(spark, monkeypatch):
@@ -869,16 +848,12 @@ def test_sized_ivf_codebook_threads_through_consumers(spark, monkeypatch):
             .collect()} == knn
 
 
-def test_arrow_cells_ragged_vector_matches_fold_null_cell(spark):
-    """r14 fresh-surface review finding (REPRODUCED then fixed):
-    nonzero_vecs does NOT screen vector width, so a ragged row (wrong
-    dim, positive norm) reaches every kernel. The fold kernels assign
-    it a NULL cell (zip_with pads -> distance folds to NULL); the
-    Arrow kernel CRASHED the whole batch (np object-array matmul).
-    All three kernels must now agree: ragged -> NULL cell. Also pins
-    the new loud refusal of a typo'd kernel name."""
-    import pytest
-
+def test_arrow_cells_ragged_vector_matches_fold_null_cell(spark, monkeypatch):
+    """nonzero_vecs does NOT screen vector width, so a ragged row
+    (wrong dim, positive norm) reaches either kernel. The literal fold
+    assigns it a NULL cell (zip_with pads -> distance folds to NULL);
+    the Arrow kernel once CRASHED the whole batch (np object-array
+    matmul). Both kernels must agree: ragged -> NULL cell."""
     cb = [[0.0] * 4, [9.0] * 4]
     df = spark.createDataFrame(
         [(0, [1.0] * 4), (1, [1.0, 1.0]), (2, [1.0] * 6), (3, None)],
@@ -886,17 +861,11 @@ def test_arrow_cells_ragged_vector_matches_fold_null_cell(spark):
     )
     nz = similarity.nonzero_vecs(df, "vec_id", "embedding")
     want = {0: 0, 1: None, 2: None}
-    for kern in ("fold", "arrow"):
+    for literal_max in (64, 0):  # literal folds, then the Arrow kernel
+        monkeypatch.setattr(similarity, "LITERAL_CODEBOOK_MAX", literal_max)
         got = {r["id"]: r["cell"] for r in similarity.with_codebook_cells(
-            nz, cb, "v", kernel=kern).select("id", "cell").collect()}
-        assert got == want, (kern, got)
-    got = {r["id"]: r["cell"] for r in similarity._join_cells(
-        nz, cb, "v", "cell").select("id", "cell").collect()}
-    assert got == want, got
-    with pytest.raises(ValueError, match="kernel"):
-        similarity.with_codebook_cells(nz, cb, "v", kernel="Arrow")
-    with pytest.raises(ValueError, match="kernel"):
-        similarity.ivf_train_codebook(df, k=2, iters=1, kernel="blas")
+            nz, cb, "v").select("id", "cell").collect()}
+        assert got == want, (literal_max, got)
 
 
 def test_ivf_cell_occupancy_makes_cap_drop_loud(spark):
@@ -958,14 +927,13 @@ def test_ivf_train_codebook_unusable_vector_and_short_corpus_guards(spark):
         similarity.ivf_train_codebook(df, k=3, iters=1)
 
 
-def test_ivf_train_codebook_survives_ragged_vectors(spark):
-    """r14 follow-up review of the resurrected training paths: a
-    ragged row (wrong width, POSITIVE norm) passes the norm guard and
-    ABORTED the training job on every kernel — ANSI INVALID_ARRAY_INDEX
-    from the update step's __v[i] component sums, measured live on all
-    three. Training must instead exclude wrong-width rows (serving's
+def test_ivf_train_codebook_survives_ragged_vectors(spark, monkeypatch):
+    """A ragged row (wrong width, POSITIVE norm) passes the norm guard
+    and once ABORTED the training job on every kernel — ANSI
+    INVALID_ARRAY_INDEX from the update step's __v[i] component sums.
+    Training must instead exclude wrong-width rows (serving's
     equivalent: NULL cell, contributes to no centroid) and yield the
-    codebook the clean corpus yields, on every kernel; mixed-width
+    codebook the clean corpus yields, on both kernels; mixed-width
     SEEDS (the declared dim itself is ambiguous) refuse loudly."""
     import pytest
 
@@ -976,9 +944,10 @@ def test_ivf_train_codebook_survives_ragged_vectors(spark):
         spark.createDataFrame(rows, schema), k=2, iters=2)
     dirty = spark.createDataFrame(
         rows + [(100, [1.0, 2.0]), (101, [1.0] * 6)], schema)
-    for kern in (None, "fold", "arrow"):
+    for literal_max in (64, 0):  # SQL-text iteration, then Arrow
+        monkeypatch.setattr(similarity, "LITERAL_CODEBOOK_MAX", literal_max)
         assert similarity.ivf_train_codebook(
-            dirty, k=2, iters=2, kernel=kern) == ref, kern
+            dirty, k=2, iters=2) == ref, literal_max
     bad_seed = spark.createDataFrame([(0, [1.0, 2.0])] + rows, schema)
     with pytest.raises(ValueError, match="ragged"):
         similarity.ivf_train_codebook(bad_seed, k=2, iters=1)

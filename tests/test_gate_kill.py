@@ -85,23 +85,21 @@ def _collapse_keep_first(orig):
     """merge kernel applies the batch in REVERSED event order (first
     writer wins): seq negated before the collapse."""
 
-    def mutant(changes, pk, seq_col="seq", op_col="op", old_prefix="old_"):
-        return orig(
-            changes.withColumn(seq_col, -F.col(seq_col)),
-            pk, seq_col, op_col, old_prefix,
-        )
+    def mutant(changes, pk):
+        return orig(changes.withColumn("seq", -F.col("seq")), pk)
 
     return mutant
 
 
 def _collapse_wrong_old_prefix(orig):
     """PK-change handling broken: the old_<pk> columns are not
-    recognized, so the death row for the moved-away key is never
-    emitted (reference: delete old key then upsert new,
-    PhoenixSyncService.java:425-456)."""
+    recognized (renamed away before the collapse), so the death row
+    for the moved-away key is never emitted (reference: delete old key
+    then upsert new, PhoenixSyncService.java:425-456)."""
 
-    def mutant(changes, pk, seq_col="seq", op_col="op", old_prefix="old_"):
-        return orig(changes, pk, seq_col, op_col, "zz_")
+    def mutant(changes, pk):
+        return orig(changes.withColumnsRenamed(
+            {f"old_{k}": f"zz_{k}" for k in pk}), pk)
 
     return mutant
 
@@ -110,13 +108,13 @@ def _collapse_deletes_as_updates(orig):
     """DELETE apply broken: delete events land on the upsert path, so
     deleted keys survive in state."""
 
-    def mutant(changes, pk, seq_col="seq", op_col="op", old_prefix="old_"):
+    def mutant(changes, pk):
         rewritten = changes.withColumn(
-            op_col,
-            F.when(F.upper(F.col(op_col)) == "DELETE", F.lit("UPDATE"))
-            .otherwise(F.col(op_col)),
+            "op",
+            F.when(F.upper(F.col("op")) == "DELETE", F.lit("UPDATE"))
+            .otherwise(F.col("op")),
         )
-        return orig(rewritten, pk, seq_col, op_col, old_prefix)
+        return orig(rewritten, pk)
 
     return mutant
 
@@ -172,7 +170,7 @@ _kill("cdc_serial_mode", "operators.merge", "collapse_changes",
       "strict event order broken (first writer wins) — same kernel "
       "mutation as cdc_merge_into_state, witnessed on the coalesce(1) path")
 _kill("cdc_truncate_apply", "operators.merge", "last_truncate_seq",
-      lambda orig: (lambda changes, seq_col="seq", op_col="op": None),
+      lambda orig: (lambda changes: None),
       "TRUNCATE never detected -> state not wiped, pre-truncate rows survive")
 _kill("cdc_envelope_route", "sources.events", "route",
       lambda orig: (lambda df, cfg: df),

@@ -269,6 +269,25 @@ def test_byte_string_parser_fallback_warns(caplog):
     assert not caplog.records  # happy path stays silent
 
 
+def test_default_driver_mem_capped_at_half_physical_ram(monkeypatch):
+    """With SPARK_DRIVER_MEM unset, get_spark asks for 48g of driver
+    heap only on a host with at least 96 GB; a smaller host gets half
+    its physical memory, so a local-mode JVM cannot outgrow the host."""
+    import inspect
+
+    from canal_phoenix_adapter_spark import session
+
+    def host(total_bytes):
+        pages = {"SC_PAGE_SIZE": 4096, "SC_PHYS_PAGES": total_bytes // 4096}
+        monkeypatch.setattr(os, "sysconf", lambda name: pages[name])
+        return session._default_driver_mem()
+
+    assert host(16 << 30) == "8192m"
+    assert host(96 << 30) == "49152m"
+    assert host(512 << 30) == "49152m"  # the 48g ceiling
+    assert "_default_driver_mem()" in inspect.getsource(session.get_spark)
+
+
 def test_get_spark_warns_when_explicit_args_dropped(spark, caplog):
     # r9 ADVICE: explicit tuning args are discarded when an external
     # session already exists — the caller must get a runtime signal.

@@ -34,7 +34,7 @@ def run_merge(spark, state_rows, events):
         else None
     )
     changes = spark.createDataFrame(events, CHANGES_SCHEMA)
-    out = merge_cdc(state, changes, ["id"], old_prefix="old_")
+    out = merge_cdc(state, changes, ["id"])
     return {r["id"]: (r["id"], r["val"]) for r in out.collect()}
 
 
@@ -153,7 +153,7 @@ def test_composite_pk_delete_and_update(spark):
         "seq long, op string, tenant string, id long, "
         "old_tenant string, old_id long, val string",
     )
-    out = merge_cdc(None, changes, ["tenant", "id"], old_prefix="old_")
+    out = merge_cdc(None, changes, ["tenant", "id"])
     got = {(r["tenant"], r["id"]): r["val"] for r in out.collect()}
     assert got == {("t1", 1): "a2", ("t2", 9): "c-moved"}
 
@@ -161,7 +161,7 @@ def test_composite_pk_delete_and_update(spark):
     state = spark.createDataFrame(
         [("t1", 1, "s"), ("t3", 7, "keep")], "tenant string, id long, val string"
     )
-    out2 = merge_cdc(state, changes, ["tenant", "id"], old_prefix="old_")
+    out2 = merge_cdc(state, changes, ["tenant", "id"])
     got2 = {(r["tenant"], r["id"]): r["val"] for r in out2.collect()}
     assert got2 == {("t1", 1): "a2", ("t2", 9): "c-moved", ("t3", 7): "keep"}
 
@@ -175,7 +175,7 @@ def test_old_prefixed_business_column_is_image_data(spark):
         [(1, "INSERT", 1, None, "active", "none")],
         "seq long, op string, id long, old_id long, val string, old_status string",
     )
-    out = merge_cdc(None, changes, ["id"], old_prefix="old_")
+    out = merge_cdc(None, changes, ["id"])
     row = out.collect()[0]
     assert row["old_status"] == "none"
     assert "old_id" not in out.columns  # real PK-change metadata still excluded

@@ -380,19 +380,18 @@ def test_cc_iteration_plan_one_join_one_aggregate(spark):
 
 
 def test_ivf_train_iteration_plan_one_scan_one_aggregate(spark):
-    """Pin ivf_train_codebook's per-iteration cost model (r3 VERDICT
-    #6, reshaped r13/r14). Two strategies by k, mirroring serving:
+    """Pin ivf_train_codebook's per-iteration cost model. Two
+    strategies by k, mirroring serving:
 
-    - small k (the default gate training, r14): the iteration is ONE
-      SQL string (_train_iteration_sql) — ZERO joins, a scan-local
-      argmin projection feeding ONE grouped aggregate / one shuffle of
-      k x (dim+1) partial-combined doubles. Resurrected after r13
-      routed every train through the Column-composed broadcast join
-      and the k=8 gate paid 1.70x at bench — adjudicated r14 to
-      driver-side py4j plan CONSTRUCTION, not the join itself.
-    - sized k (kernel='fold' reference): the codebook attaches as a
-      ONE-ROW broadcast (BroadcastNestedLoopJoin against model
-      parameters, not data — no O(k*dim) plan text, so k ∝ n trains).
+    - small k (the default gate training): the iteration is ONE SQL
+      string (_train_iteration_sql) — ZERO joins, a scan-local argmin
+      projection feeding ONE grouped aggregate / one shuffle of
+      k x (dim+1) partial-combined doubles. A Column-composed
+      iteration costs the k=8 gate driver-side py4j plan construction.
+    - sized k: the Arrow kernel (_arrow_cells) attaches the cell as a
+      scan-local projection — no join of any kind (the codebook rides
+      in the UDF, no O(k*dim) plan text, so k ∝ n trains), one
+      aggregate, at most one shuffle.
 
     A refactor that quadratic-ifies an iteration (second scan of the
     DATA, a data-sized join, posexplode of components) fails here,
@@ -400,7 +399,7 @@ def test_ivf_train_iteration_plan_one_scan_one_aggregate(spark):
     import re
 
     from canal_phoenix_adapter_spark.operators.similarity import (
-        _join_cells, _train_iteration_sql,
+        _arrow_cells, _train_iteration_sql,
     )
     from pyspark.sql import functions as F
     from plan_helpers import explain_str, shuffle_count
@@ -427,13 +426,12 @@ def test_ivf_train_iteration_plan_one_scan_one_aggregate(spark):
     finally:
         spark.catalog.dropTempView("__ivf_plan_pin")
 
-    it = _iter(_join_cells(df, cb, "__v", "__cell"))
+    it = _iter(_arrow_cells(df, cb, "__v", "__cell"))
     text = explain_str(it)
-    joins = re.findall(r"\(\d+\) [A-Za-z]*Join\w*", text)
-    # the one-row codebook broadcast is the ONLY join, and it is the
-    # broadcast form (a shuffled/sort-merge join here would mean the
-    # codebook stopped broadcasting — a data-sized exchange per iter)
-    assert len(joins) == 1 and "BroadcastNestedLoopJoin" in joins[0], joins
+    # the cell is a projection: a join here would ship the codebook or
+    # the data per iteration
+    assert not re.findall(r"\(\d+\) [A-Za-z]*Join\w*", text), text
+    assert "ArrowEvalPython" in text, text
     aggs = re.findall(r"\(\d+\) \w*Aggregate\w*", text)
     assert 1 <= len(aggs) <= 2, aggs
     assert shuffle_count(it) <= 1

@@ -866,9 +866,16 @@ def _pruned_and_full(spark, tmp_path, n_buckets=8):
 
 
 def _state_dict(store):
+    """The store's state keyed by id; a duplicated id fails here, so
+    every comparison of two stores also checks that neither holds a
+    key twice."""
     df = store.read()
-    return {r["id"]: tuple(r[c] for c in sorted(df.columns) if c != "id")
-            for r in df.collect()}
+    rows = df.collect()
+    state = {r["id"]: tuple(r[c] for c in sorted(df.columns) if c != "id")
+             for r in rows}
+    assert len(state) == len(rows), (
+        f"duplicate ids in state: {len(rows)} rows, {len(state)} ids")
+    return state
 
 
 def _bucket_of_ids(spark, ids, n_buckets):

@@ -54,9 +54,6 @@ class DbMapping:
     def pk_source_columns(self) -> list[str]:
         return [src or tgt for tgt, src in self.target_pk.items()]
 
-    def pk_target_columns(self) -> list[str]:
-        return [self.escape(tgt) for tgt in self.target_pk]
-
 
 @dataclass
 class MappingConfig:

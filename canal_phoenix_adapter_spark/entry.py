@@ -31,7 +31,7 @@ def _pin_ws_class(sql: str) -> str:
     regex \\s (what the engine tokenizer text.py::tokens pins as an
     explicit class) includes \\x0B; DuckDB's RE2 \\s does NOT. Left
     as-is, every token-derived oracle silently diverges from the
-    engine on vertical-tab whitespace (r9 oracle-independence review).
+    engine on vertical-tab whitespace.
     Rewriting the two \\s idioms the oracles use keeps each oracle
     readable while making the whitespace class IDENTICAL by
     construction — including in future oracles that keep writing
@@ -273,7 +273,6 @@ def proj_mapping_exclude_rename(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = load_table(spark, sf_dir, "customer")
     # no narrowing select: the gate must SEE every column apply_mapping
     # emits, or an exclude_columns leak hides behind the projection
-    # (r9 oracle-independence review)
     return apply_mapping(df, cfg)
 
 
@@ -300,8 +299,8 @@ def proj_enum_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Adversarial strings for the string->int path: fixture $.k values are
 # all clean digits, so without these the gate can't tell Spark's
 # try_cast (NULL on ALL of them except ' 7 '/'+8') from a lenient
-# parser (DuckDB TRY_CAST reads '12.5'->13, '0x10'->16, '1e3'->1000 —
-# r9 oracle-independence review). Indexed by event_id % 8 on BOTH
+# parser (DuckDB TRY_CAST reads '12.5'->13, '0x10'->16, '1e3'->1000).
+# Indexed by event_id % 8 on BOTH
 # sides; the oracle expresses Spark semantics as a regex-guarded cast.
 _EDGE_STRINGS = ["12.5", "1e3", "0x10", "", "  7 ", "+8",
                  "99999999999999999999", "true"]
@@ -404,7 +403,7 @@ from canal_phoenix_adapter_spark.operators import (  # noqa: E402
 
 # nullif: md5(NULL) is NULL, but DuckDB concat SKIPS NULL args, so
 # without it a NULL input becomes CAST('0x') — a hard error — where
-# Spark's md5/conv propagate NULL (r9 review: NULL-payload mm rows)
+# Spark's md5/conv propagate NULL (NULL-payload mm rows)
 _H = "CAST(nullif(concat('0x', substr(md5({x}),1,15)), '0x') AS BIGINT)"
 
 _SHINGLE_CTE = """
@@ -420,7 +419,7 @@ sh AS (SELECT DISTINCT doc_id, shingle FROM sh0 WHERE shingle <> '')
 
 # The sf fixtures contain ZERO duplicate texts, which made the exact-
 # dedup gates vacuous (any keep-rule — min, max, keep-all — produced
-# identical output; r9 oracle-independence review). Both sides union a
+# identical output). Both sides union a
 # deterministic duplicate shard so n_dups>1 groups and the min-keeper
 # rule are actually witnessed.
 _DUP_SHARD_SQL = """(SELECT doc_id, text FROM documents
@@ -453,8 +452,8 @@ def dedup_exact_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # The fixtures' max shingle doc-freq is 4, so the max_df=5 cap never
 # binds at the gate SF — a skipped cap produced identical output and
-# the gate was blind to it (r10 gate-kill audit; the cap-agreement
-# property tests cover the cap but the driver gate could not). Both
+# the gate was blind to it (the cap-agreement property tests cover
+# the cap but the driver gate could not). Both
 # sides union a hot-shingle witness shard: 8 four-token docs sharing
 # one shingle (df=8 > 5). Capped, the shingle is dropped and the
 # witness docs pair with nothing; uncapped, 28 jaccard-1.0 witness
@@ -805,7 +804,7 @@ def mm_extract_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The oracle does BYTE math via hex pairs (hex() is bytes-true in
     both engines), so parity holds on non-ASCII text and arbitrary
-    binary — closing the r8 ASCII-only caveat."""
+    binary, not only ASCII."""
     media = multimodal.as_media_table(load_table(spark, sf_dir, "documents"))
     return multimodal.extract_features(media)
 
@@ -877,7 +876,7 @@ def text_vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Coverage round 2: truncate apply, envelope routing, serial mode,
+# Truncate apply, envelope routing, serial mode,
 # schema evolution (S3/S4/S8, C2, C7, C9, C11-C13), X1 range split,
 # event-time rollup, SimHash pairs, IVF ANN
 # ---------------------------------------------------------------------------
@@ -906,7 +905,7 @@ SELECT user_id, value, ts_us FROM last WHERE rn = 1 AND is_create = 1
 # Every fixture user has a post-truncate event at the gate SF, so a
 # merge that IGNORED truncate entirely — or cut at the FIRST marker
 # (seq 0) instead of the last — produced identical output: the gate
-# was blind to C7 bugs (r10 gate-kill audit). One witness row, a user
+# was blind to C7 bugs. One witness row, a user
 # whose ONLY event sits between the first and last TRUNCATE, must be
 # wiped; it survives under either bug.
 _TRUNC_WITNESS_SQL = ("SELECT CAST(1 AS BIGINT) AS seq, 'INSERT' AS op, "
@@ -979,7 +978,7 @@ def cdc_serial_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition and applies in strict event order — final state must be
     identical to the PK-hash-parallel path (the reference's guarantee:
     partitioning only changes interleaving across DIFFERENT keys).
-    Measured cost of the contract (SCALE_SMOKE decade-2, r12): this
+    Measured cost of the contract (SCALE_SMOKE decade-2): this
     coalesce(1) path rides 4.17x wall per data decade where the
     parallel twin (cdc_merge_full, same kernel) measures 1.20x —
     knowingly-serial semantics, quantified, not a plan defect."""
@@ -1233,7 +1232,7 @@ def sim_ann_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Round-2 extensions: as-of join, PII scrub, chunk-level cross-doc
+# As-of join, PII scrub, chunk-level cross-doc
 # dedup / boilerplate strip, sequence packing, stratified sampling,
 # IVF-cell semantic dedup
 # ---------------------------------------------------------------------------
@@ -1541,7 +1540,7 @@ def pipeline_corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     # `carry` threads lang/n_kept_chunks through the stages instead of
     # join-backing them from `clean` and `docs` — two data-scale
     # shuffles a 100 TB nightly run would pay for columns the pipeline
-    # already held (r6; plan-pinned single-join in test_plans.py).
+    # already held (plan-pinned single-join in test_plans.py).
     clean = text_ops.boilerplate_strip(
         docs, "doc_id", "text", size=8, max_df=2, carry=("lang",)
     )
@@ -1554,7 +1553,7 @@ def pipeline_corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     # whole tokenize+regex quality expression into the filter, which
     # then runs once in the (non-codegen) Filter above the chunk
     # aggregate and AGAIN in the output projection — the same
-    # double-eval shape the r13 twin measurement exposed on
+    # double-eval shape a twin measurement exposed on
     # text_adaptive_filter (guide §4.4 applied to built-ins; the fix
     # is the same persisted narrow table, 5 scalar columns per doc,
     # no text). Cache is caller-owned per the module convention.
@@ -1624,8 +1623,8 @@ def dedup_minhash_lsh_incremental(spark: SparkSession, sf_dir: str) -> DataFrame
     where only new-vs-index candidates are generated. NOTE: odd/even
     means no id appears on both sides, so the oracle's `nb.id <>
     ib.id` is vacuous — the same-id self-pair drop is witnessed solely
-    by test_minhash_lsh_incremental_drops_same_id_self_pair (r12
-    ADVICE), not by this gate."""
+    by test_minhash_lsh_incremental_drops_same_id_self_pair, not by
+    this gate."""
     docs = load_table(spark, sf_dir, "documents")
     new_df = docs.where(F.col("doc_id") % 2 == 1)
     index_df = docs.where(F.col("doc_id") % 2 == 0)
@@ -1703,7 +1702,7 @@ def analytics_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     The big side is projected to the four columns the query touches
     and the salt is the documented row-unique form (xxhash64 of the
     lineitem PK) rather than default_salt's all-non-key-columns hash
-    (guide §2.3/§6, r14): the default pulled SEVEN extra columns —
+    (guide §2.3/§6): the default pulled SEVEN extra columns —
     three strings and a timestamp — through the scan solely to feed
     the salt hash (ReadSchema 11 -> 4 columns), and the join's
     null-key guard evaluates the salt expression a second time per
@@ -1735,10 +1734,10 @@ def analytics_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Round-4 folded gates: text_features, mm_geometry, sampling_assembly
-# (each joins the operators its r2/r3 predecessor gates covered
-# separately, so one driver row witnesses all of them), plus the
-# analytics_asof_tiebreak determinism gate (r3 VERDICT #3).
+# Folded gates: text_features, mm_geometry, sampling_assembly (each
+# joins operators that would otherwise need a gate apiece, so one
+# driver row witnesses all of them), plus the analytics_asof_tiebreak
+# determinism gate.
 # ---------------------------------------------------------------------------
 
 
@@ -1795,8 +1794,8 @@ def analytics_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def text_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc text-feature bundle: whitespace + BPE-ish token counts,
     winnowing-lite fingerprint, and Gopher-style repetition signals —
-    the r2 text_token_counts / text_fingerprint / text_repetition
-    gates joined into one driver row (r4 registry fold). The counting
+    token counts, fingerprint and repetition joined into one driver
+    row. The counting
     projections are shuffle-free; the repetition aggregations are the
     only exchanges, and the final join is id-keyed."""
     docs = load_table(spark, sf_dir, "documents")
@@ -1846,9 +1845,8 @@ def text_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 def mm_geometry(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal geometry + payload-stat bundle: aspect-preserving
     thumbnail plan for every image row, annotated with the image
-    type's payload byte statistics — the r2 mm_thumbnail and
-    mm_payload_stats gates joined into one driver row (r4 registry
-    fold). The stats side is a 3-row aggregate, broadcast."""
+    type's payload byte statistics, joined into one driver row. The
+    stats side is a 3-row aggregate, broadcast."""
     media = multimodal.as_media_table(load_table(spark, sf_dir, "documents"))
     thumb = multimodal.thumbnail_plan(media, max_side=64)
     stats = multimodal.payload_stats(media).where(
@@ -1891,10 +1889,8 @@ def mm_geometry(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sampling_assembly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dataset-assembly bundle: per-doc deterministic 80/10/10 split
     assignment annotated with the language's exact length quantiles —
-    the r2 sampling_hash_split and sampling_group_quantiles gates
-    joined into one driver row (r4 registry fold), and stronger than
-    the old split gate: the assignment is now verified PER DOCUMENT,
-    not as three aggregate rows. The quantile table is one row per
+    split and quantiles joined into one driver row, with the
+    assignment verified PER DOCUMENT, not as three aggregate rows. The quantile table is one row per
     language, broadcast. NULL-lang docs have no quantile row and drop
     out of the inner join — identical on the oracle side (JOIN USING
     excludes NULL keys), pinned by a unit test."""
@@ -1938,8 +1934,8 @@ def sampling_assembly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def analytics_asof_tiebreak(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """asof_join right_order determinism under the oracle gate (r3
-    VERDICT #3): every click is deliberately DUPLICATED at its (user,
+    """asof_join right_order determinism under the oracle gate:
+    every click is deliberately DUPLICATED at its (user,
     ts) with two candidate ids (2*event_id and 2*event_id+1), and
     ``right_order=["click_event"]`` must pick the greatest tuple on
     any partitioning. The oracle collapses duplicates to max-by-tuple
@@ -1974,10 +1970,9 @@ def analytics_asof_tiebreak(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 # The driver's t2 gate records at most the first ~50 queries()
-# entries; since round 4 the registry holds EXACTLY 50 (surplus folded
-# into stronger twins or tests/parity_registry.py, still
-# oracle-verified every pytest run), so one round's artifact witnesses
-# every gate. Ordering stays defensive: newest-first,
+# entries; the registry holds EXACTLY 50 (surplus folded into
+# stronger twins or tests/parity_registry.py, still oracle-verified
+# every pytest run), so one artifact witnesses every gate. Ordering stays defensive: newest-first,
 # sim_ann_ivf_trained last (slowest — a time-based cutoff must not
 # starve anything).
 _DRIVER_ARTIFACT_PRIORITY = [

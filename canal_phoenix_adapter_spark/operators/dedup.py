@@ -39,11 +39,11 @@ from canal_phoenix_adapter_spark.functions.hashing import (
 )
 from canal_phoenix_adapter_spark.jvm_shim import persistent_rdd_ids, release_rdds
 
-# Skew caps default ON across the WHOLE LSH family (r11 verdict task
-# 1): an unbounded bucket of d docs emits d^2 candidate-join rows and
-# AQE splits partitions, not single hot keys — uncapped is the
-# explicit None opt-in (the r11 octave measured the uncapped defaults
-# at 12.25x wall for 10x input with ZERO output). Per-family values:
+# Skew caps default ON across the WHOLE LSH family: an unbounded
+# bucket of d docs emits d^2 candidate-join rows and AQE splits
+# partitions, not single hot keys — uncapped is the explicit None
+# opt-in (a scale octave measured the uncapped defaults at 12.25x
+# wall for 10x input with ZERO output). Per-family values:
 # band buckets cap at 16 (>16 docs on one band value is boilerplate;
 # a drop costs recall on boilerplate only); IVF cells are coarse BY
 # DESIGN (expected size n/k), so 256 is a degenerate-collapse guard;
@@ -165,7 +165,7 @@ def ngram_jaccard_pairs(
     # PAIRS table twice — at 100 TB the pairs table is the largest
     # intermediate in the plan, and those two joins re-shuffled it by
     # id_a and id_b after it was already shuffled by (id_a, id_b) for
-    # the count; r14 measured the rewrite at -19% bench wall (isolated
+    # the count; the rewrite measured -19% bench wall (isolated
     # min-of-7: 4.40 -> 3.57 s) for one extra long on the pair
     # exchange. sizes itself still scales
     # with the corpus, so no forced broadcast (AQE broadcasts it at
@@ -174,14 +174,13 @@ def ngram_jaccard_pairs(
     # old plan shuffled twice).
     sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("sz"))
     # Persist the size-attached table too: it feeds BOTH self-join
-    # sides, and unpersisted the id-keyed attach join ran twice (r14
-    # plan audit: two SMJs on id in the executed plan, one per side —
-    # one extra cached long per shingle row buys the join once).
-    # Re-adjudicated r15 (the r14 driver run read 0.872x): same-JVM
-    # interleaved A/B, 8-10 alternations per variant — all-3-persists
-    # min 2.05s/med 2.31s vs no-sh_sz-persist 2.43/2.54 vs
-    # pre+sh_sz-only 2.38/2.78 vs pre+cap-only 2.28/2.41. The persist
-    # PAYS at bench scale; the driver reading was host noise.
+    # sides, and unpersisted the id-keyed attach join ran twice (two
+    # SMJs on id in the executed plan, one per side — one extra cached
+    # long per shingle row buys the join once). Same-JVM interleaved
+    # A/B, 8-10 alternations per variant — all-3-persists min
+    # 2.05s/med 2.31s vs no-sh_sz-persist 2.43/2.54 vs pre+sh_sz-only
+    # 2.38/2.78 vs pre+cap-only 2.28/2.41: the persist PAYS at bench
+    # scale.
     sh_sz = sh.join(sizes, on="id").persist()
     pairs = (
         sh_sz.alias("a")
@@ -253,7 +252,7 @@ def minhash_signatures(
     # compile + per-row eval) with bit-identical results. hm < 2^31 and
     # a < 2^31, so hm*a+b stays inside signed-64 — no overflow.
     # SQL text for the per-permutation families (functions.hashing.bq):
-    # the Column form cost ~0.8 s of py4j round-trips per call (r14).
+    # the Column form cost ~0.8 s of py4j round-trips per call.
     sh = sh.selectExpr(bq(id_col), *[
         f"((hm * {a} + {b}) % {MINHASH_PRIME}) AS p{i}"
         for i, (a, b) in enumerate(minhash_perm_params(num_perm))
@@ -310,7 +309,7 @@ def _pair_join(
     ``persist_buckets=False`` skips the PRE-cap persist for callers
     whose bucket table is a cheap explode of an already-persisted
     sketch (simhash persists ``sk`` upstream; caching the explode too
-    just grows caller-owned memory — r13 ADVICE).
+    just grows caller-owned memory).
 
     ``carry`` names narrow per-id columns already present on
     ``buckets`` to ride through the join as ``<c>_a``/``<c>_b``
@@ -323,7 +322,7 @@ def _pair_join(
         buckets = buckets.persist()
     if max_bucket is not None:
         buckets = _cap_bucket_size(buckets, keys, max_bucket).persist()
-    # Distinct on the EXPLICIT pair key, not all columns (r14 ADVICE):
+    # Distinct on the EXPLICIT pair key, not all columns:
     # pair cardinality is then invariant regardless of what rides in
     # ``carry`` (an all-column distinct silently emitted duplicate
     # pairs if a carried column ever violated the id-dependence
@@ -415,8 +414,8 @@ def _simhash(df: DataFrame, id_col: str, text_col: str, width: int) -> DataFrame
     plain bigint usable for bucketing / hamming candidate search.
     width=32 reads bits 0-31 of md5_long; width=64 extends to bits
     0-59 of md5_long plus md5 hex digit 16 for bits 60-63; width=128
-    (r11 verdict task 4 — the step past simhash64's ~10^6-10^7-doc
-    band saturation) adds a second long from md5 hex digits 17-31
+    (the step past simhash64's ~10^6-10^7-doc band saturation) adds
+    a second long from md5 hex digits 17-31
     (bits 64-123) and digit 32 (bits 124-127), returned as
     (simhash_lo, simhash_hi) — every construction ports verbatim to
     the DuckDB oracle via substr(md5).
@@ -450,7 +449,7 @@ def _simhash(df: DataFrame, id_col: str, text_col: str, width: int) -> DataFrame
     # SQL text, not composed Columns, for the width-sized expression
     # families (see functions.hashing.bq): the Column form of the
     # width=32 sketch alone cost ~1.2 s of py4j round-trips per CALL
-    # (cProfile r14, 90% of the capped gate's bench wall); the text
+    # (cProfile: 90% of the capped gate's bench wall); the text
     # form builds the identical analyzed plan in a few calls.
     def _src(i: int) -> str:
         for name, lo, hi in (("h", 0, 60), ("hx", 60, 64), ("h2", 64, 124), ("hx2", 124, 128)):
@@ -485,12 +484,12 @@ def _simhash(df: DataFrame, id_col: str, text_col: str, width: int) -> DataFrame
 
 def simhash32(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """32-bit SimHash. Fine below ~10^4 docs; beyond that its 8-bit
-    bands saturate (measured: SCALE.md r10) — prefer simhash64."""
+    bands saturate (measured: SCALE.md) — prefer simhash64."""
     return _simhash(df, id_col, text_col, 32)
 
 
 def simhash64(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """64-bit SimHash (r10 verdict task 1): same construction with
+    """64-bit SimHash: same construction with
     bits 60-63 sourced from md5 hex digit 16 (md5_long carries 60).
     16-bit bands stay discriminative at corpus sizes where simhash32's
     8-bit bands saturate and pairs collapse (measured ~50k docs)."""
@@ -498,9 +497,9 @@ def simhash64(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
 
 def simhash128(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """128-bit SimHash as (simhash_lo, simhash_hi) bigints (r11 task
-    4): simhash64's 4x16-bit bands saturate ~10^6-10^7 docs (measured,
-    SCALE.md r11); 4x32-bit bands (~4x10^9 values) carry past 10^9."""
+    """128-bit SimHash as (simhash_lo, simhash_hi) bigints:
+    simhash64's 4x16-bit bands saturate ~10^6-10^7 docs (measured,
+    SCALE.md); 4x32-bit bands (~4x10^9 values) carry past 10^9."""
     return _simhash(df, id_col, text_col, 128)
 
 
@@ -531,8 +530,8 @@ def simhash_hamming_pairs(
     only, while an uncapped one costs d^2 join rows (see
     _cap_bucket_size). Band selectivity is 2^(width/bands): 8-bit
     bands (width=32, 4 bands) saturate around 10^4 docs — every
-    bucket overflows the cap and pairs COLLAPSE (measured, SCALE.md
-    r10) — so at scale use width=64 (16-bit bands, ~65k values), and
+    bucket overflows the cap and pairs COLLAPSE (measured, SCALE.md)
+    — so at scale use width=64 (16-bit bands, ~65k values), and
     past simhash64's own ~10^6-10^7-doc saturation, width=128
     (32-bit bands at bands=4 — see simhash128).
     """
@@ -578,8 +577,8 @@ def simhash_hamming_pairs(
     # instead of being attached afterwards by two id-keyed joins —
     # those joins re-shuffled the pairs table (the plan's largest
     # intermediate) by id_a and then id_b; carrying costs 16 bytes ×
-    # bands per doc in the band shuffle and nothing else (r14,
-    # guide §2.4 — same move as ngram's sizes-on-shingles).
+    # bands per doc in the band shuffle and nothing else (guide §2.4 —
+    # same move as ngram's sizes-on-shingles).
     sk = sk.persist()
     banded = sk.selectExpr(
         "id", "lo", "hi", f"explode(array({band_vals})) AS bb"
@@ -612,8 +611,8 @@ def _ab_cosine_pairs(pairs: DataFrame, threshold: float) -> DataFrame:
     pushed that through both join sides substituting each side's
     whole norm fold back into the scan Filter: every vector paid the
     64-element fold twice despite nonzero_vecs' single-eval rewrite
-    (r15, plan-verified: SQRT-bearing Filter conditions 2 -> 0, norm
-    fold once per side, results identical)."""
+    (plan-verified: SQRT-bearing Filter conditions 2 -> 0, norm fold
+    once per side, results identical)."""
     from canal_phoenix_adapter_spark.operators.similarity import _dot
 
     return pairs.select(
@@ -704,8 +703,8 @@ def embedding_near_dup_pairs_lsh(
     via lsh_planes_for_corpus (planes ∝ log2(n)); a FIXED
     ``num_planes`` is the explicit opt-in for callers who sized it
     themselves, and calling with neither is refused — there is no safe
-    universal constant (r11 verdict task 1; the measured cost of fixed
-    planes is in lsh_planes_for_corpus's docstring). ``expected_count``
+    universal constant (the measured cost of fixed planes is in
+    lsh_planes_for_corpus's docstring). ``expected_count``
     is caller config, like ``dim``: no Spark action at construction.
     """
     from canal_phoenix_adapter_spark.operators.similarity import lsh_bucket_expr
@@ -851,7 +850,7 @@ def dup_clusters(
     # node count. The sum rides the checkpoint job as an observed
     # metric (CollectMetrics — computed in-flow, no shuffle, no plan
     # change downstream of the checkpoint): a separate agg-on-cache
-    # job per iteration cost 2 AQE jobs × iterations (r14, guide §1.2).
+    # job per iteration cost 2 AQE jobs × iterations (guide §1.2).
     _lbl_sum = F.sum(F.col("lbl").cast("decimal(38,0)")).alias("s")
     prev_sum = labels.agg(_lbl_sum).first()[0]
     # max_iters + 1: convergence is only ever CONFIRMED by an extra
@@ -1002,7 +1001,7 @@ def ivf_cell_occupancy(
     max_bucket: int | None = DEFAULT_IVF_MAX_CELL,
     codebook: list[list[float]] | None = None,
 ) -> dict:
-    """Make the IVF cap's silent recall decay LOUD (r13 VERDICT #2):
+    """Make the IVF cap's silent recall decay LOUD:
     one aggregate pass over the SAME cells semantic_dup_pairs_ivf /
     knn_join_ivf route through (ivf_cells_base — same quantizer, same
     cap key), reporting how much of the corpus the over-cap drop is
@@ -1159,7 +1158,6 @@ def minhash_lsh_incremental(
         # a doc present on BOTH sides under the same id (a re-crawl of
         # an already-indexed url) is trivially near-dup of itself —
         # noise downstream cluster/keep logic would then carry
-        # (r11 review)
         .where(F.col("x.id") != F.col("y.id"))
         .select(F.col("x.id").alias("new_id"), F.col("y.id").alias("index_id"))
         .dropDuplicates()

@@ -97,10 +97,6 @@ class SchemaDiff:
     drop: list[str] = field(default_factory=list)
     changed: list[tuple[str, T.DataType, T.DataType]] = field(default_factory=list)
 
-    @property
-    def is_noop(self) -> bool:
-        return not (self.create or self.add or self.drop or self.changed)
-
 
 def diff_schemas(source: T.StructType, target: T.StructType | None) -> SchemaDiff:
     """Case-insensitive name diff, like the reference's column compare

@@ -101,16 +101,6 @@ class BatchExecutor:
         finally:
             cur.close()
 
-    def execute_update(self, sql: str) -> int:
-        """Un-parameterized statement (java executeUpdate, :52-58) —
-        the DDL/TRUNCATE path."""
-        cur = self.conn().cursor()
-        try:
-            cur.execute(sql)
-            return getattr(cur, "rowcount", -1)
-        finally:
-            cur.close()
-
     def commit(self) -> None:
         self.conn().commit()
         self.idx = 0

@@ -110,9 +110,12 @@ class ParquetStateStore:
     bumps only the version and carries the epoch watermark forward —
     so it can neither shadow a future epoch in the replay check nor
     collide with a future epoch's snapshot dir (apply_cdc_epoch writes
-    version max(cur+1, epoch_id)). Old-layout pointers without the
-    "epoch" key fall back to epoch == version (those stores were only
-    ever written by apply_cdc_epoch, where the two coincided)."""
+    version max(cur+1, epoch_id))."""
+
+    # The plain store assumes micro-batch-sized changes (its operating
+    # envelope), so its merge always broadcasts them; the pruned store
+    # sets its own threshold per handle.
+    broadcast_threshold_rows = float("inf")
 
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
@@ -153,14 +156,12 @@ class ParquetStateStore:
 
     def last_epoch(self) -> int | None:
         """Last CDC epoch id committed via apply_cdc_epoch — the replay
-        skip watermark. Falls back to the version for old-layout
-        pointers (written before the two counters were separated)."""
+        skip watermark."""
         try:
             with open(self._pointer(), encoding="utf-8") as f:
-                p = json.load(f)
+                e = json.load(f)["epoch"]
         except (FileNotFoundError, ValueError):
             return None
-        e = p.get("epoch", p.get("version"))
         return None if e is None else int(e)
 
     def _repoint(self, version: int, epoch_id: int | None) -> None:
@@ -298,16 +299,16 @@ class ParquetStateStore:
         apply_cdc_epoch UNDER the commit lock; owns the basis READ as
         well as the write (the pruned store must never pay a
         full-state read for a delta or fold epoch). Default:
-        full-snapshot read-merge-rewrite. Returns the lowercase column
-        sets (committed state, prior state or None) for the
+        full-snapshot read-merge-rewrite, which the pruned store also
+        runs for its bootstrap and heal epochs. Returns the lowercase
+        column sets (committed state, prior state or None) for the
         schema-change hook — or (None, None) for an empty batch: the
         store owns the emptiness check because the pruned store learns
-        it for free from its pre-scan.
+        it for free from its delta write.
 
-        The plain store's pre-scan mirrors the pruned one at smaller
-        width: ONE aggregation job yields both the emptiness check and
-        the TRUNCATE seq (assumes apply_cdc_epoch's seq/op column
-        contract, like PrunedParquetStateStore._scan_aggs)."""
+        The pre-scan is ONE aggregation job yielding both the row count
+        and the TRUNCATE seq (assumes apply_cdc_epoch's seq/op column
+        contract)."""
         row = batch_df.agg(
             F.count(F.lit(1)).alias("n"),
             truncate_seq_expr().alias("tr"),
@@ -315,29 +316,26 @@ class ParquetStateStore:
         if row["n"] == 0:
             return None, None
         return self._merge_commit_nonempty(
-            batch_df, pk, version, epoch_id, trunc_seq=row["tr"]
+            batch_df, pk, version, epoch_id, trunc_seq=row["tr"],
+            n_rows=row["n"],
         )
 
     def _merge_commit_nonempty(
         self, batch_df: DataFrame, pk: list[str], version: int, epoch_id: int,
-        trunc_seq: object, broadcast_changes: bool = True,
+        trunc_seq: object, n_rows: int,
     ) -> tuple[set[str] | None, set[str] | None]:
-        """Full-snapshot read-merge-rewrite for a batch the caller has
-        PROVEN non-empty — the pruned store's TRUNCATE and heal/DDL
-        fallbacks enter here so neither the pre-scan's count nor its
-        truncate seq is re-derived with extra jobs per fallback epoch
-        (``trunc_seq`` forwards the pre-scan result to merge_cdc).
-
-        ``broadcast_changes`` default True: the PLAIN store has no
-        pre-scan row count and assumes micro-batch-sized changes (its
-        documented operating envelope); the pruned store's fallback
-        paths forward their measured heuristic so a backfill-sized
-        TRUNCATE/heal epoch does not pin millions of touched keys in
-        every executor."""
+        """Full-snapshot read-merge-rewrite for a batch of ``n_rows``
+        rows (> 0) whose last TRUNCATE seq is ``trunc_seq``, both from
+        the caller's pre-scan, so neither is re-derived with extra
+        jobs. The pruned store's TRUNCATE epoch enters here after its
+        delta write. Batches above ``broadcast_threshold_rows`` merge
+        broadcast-free, so a backfill-sized epoch does not pin millions
+        of touched keys in every executor."""
         state = self.read()
         prev_cols = None if state is None else {c.lower() for c in state.columns}
-        new_state = merge_cdc(state, batch_df, pk, trunc_seq=trunc_seq,
-                              broadcast_changes=broadcast_changes)
+        new_state = merge_cdc(
+            state, batch_df, pk, trunc_seq=trunc_seq,
+            broadcast_changes=n_rows <= self.broadcast_threshold_rows)
         self._write_unlocked(new_state, version, epoch_id=epoch_id)
         return {c.lower() for c in new_state.columns}, prev_cols
 
@@ -374,25 +372,29 @@ class PrunedParquetStateStore(ParquetStateStore):
     (no shuffle; every path comes from the manifest, so no partition
     discovery or footer inference).
 
-    Epoch paths, picked by a pre-scan of the batch (touched buckets,
-    TRUNCATE seq, row count). Every epoch that keeps the schema first
-    writes the new delta, and the pre-scan is observed on that write.
-    When (previous delta ∪ batch) fits one scan task the write is one
-    single-task job, so a normal epoch is ONE Spark job. A heal epoch
-    runs the pre-scan as its own job.
-      * normal: collapse (previous delta ∪ batch) into a new delta,
-        write it, then the manifest, then repoint. No bucket dir is
-        read or written.
+    Epoch paths. Bootstrap and schema-changing heal/DDL epochs (one
+    schema per manifest, and a delta is aligned to it) run the base
+    store's epoch: its pre-scan (row count, TRUNCATE seq), merge_cdc
+    over read(), and a full rewrite. Every other epoch first writes
+    the new delta, with the pre-scan of the batch (touched buckets,
+    TRUNCATE seq, row count) observed on that write; when (previous
+    delta ∪ batch) fits one scan task the write is one single-task
+    job, so a normal epoch is ONE Spark job. Then:
+      * normal: publish a manifest naming the new delta, then repoint.
+        No bucket dir is read or written.
       * fold: once the new delta's rows pass _fold_bound (this also
         catches backfill-sized batches), commit the merge-on-read of
-        that delta over only the buckets it touches: write those,
-        remove the delta, and publish a manifest without one. There is
-        one delta-apply rule (_with_delta) for reads, folds and
-        erasures, and it picks the broadcast route too.
-      * TRUNCATE and schema-changing heal/DDL epochs: full rewrite of
-        base plus delta (one schema per manifest).
-    ``erase_keys`` commits through the fold path, so an erased key can
-    survive in neither the base nor the delta.
+        that delta over only the buckets it touches. There is one
+        delta-apply rule (_with_delta) for reads, folds and erasures,
+        and it picks the broadcast route too.
+      * TRUNCATE: the base store's merge and full rewrite, fed the
+        observed pre-scan.
+    Every bucket write commits through ONE body, _commit_touched:
+    write the touched buckets, count their rows, publish a manifest
+    without a delta, repoint. A full rewrite (bootstrap, rebucket,
+    TRUNCATE, heal) touches every bucket of an empty manifest; a fold
+    and ``erase_keys`` touch the buckets of their keys and the delta,
+    so an erased key can survive in neither the base nor the delta.
 
     Crash safety is the inherited pointer contract: an epoch writes
     only into its own version dir, above _CURRENT, and every commit
@@ -419,18 +421,11 @@ class PrunedParquetStateStore(ParquetStateStore):
         # epoch does not pin its key set in every executor. Rows, not
         # distinct keys: the pre-scan and the manifest yield them free.
         self.broadcast_threshold_rows = broadcast_threshold_rows
-        self._manifest_cache: dict[int, dict] = {}
 
     def _bucket_of(self, key_cols: list) -> F.Column:
         # hash() is seed-stable Murmur3 and NULL-accepting, so a key's
         # bucket is identical across epochs and versions by construction
         return F.pmod(F.hash(*key_cols), F.lit(self.n_buckets))
-
-    def _repoint(self, version: int, epoch_id: int | None) -> None:
-        # a replayed orphan overwrite rewrites THIS version's manifest
-        # in place — drop any cached copy before publishing
-        self._manifest_cache.pop(version, None)
-        super()._repoint(version, epoch_id)
 
     # -- manifest bookkeeping ------------------------------------------------
 
@@ -440,47 +435,38 @@ class PrunedParquetStateStore(ParquetStateStore):
     def _manifest(self, version: int) -> dict:
         """{"schema", "n_buckets", "buckets": {bucket: owner version},
         "rows": {bucket: row count}, "delta": None or {"owner",
-        "schema", "rows", "buckets"}} for a COMMITTED version.
-        Memoized: committed manifests are immutable (orphan overwrite
-        only targets versions above _CURRENT)."""
-        m = self._manifest_cache.get(version)
-        if m is None:
-            try:
-                with open(self._manifest_path(version), encoding="utf-8") as f:
-                    raw = json.load(f)
-            except FileNotFoundError:
-                # the layout-mismatch twin of _refuse_pruned_layout: a
-                # pruned handle opened over a plain ParquetStateStore
-                # path (e.g. state_buckets flipped on on an existing
-                # deployment) must fail with a migration message, not a
-                # raw FileNotFoundError mid-epoch
-                raise ValueError(
-                    f"{self.path} v{version} has no _manifest.json: this "
-                    "is a plain ParquetStateStore layout; open it with "
-                    "ParquetStateStore, or migrate by reading the plain "
-                    "store and bootstrap-writing a fresh "
-                    "PrunedParquetStateStore path"
-                ) from None
-            m = {
-                "schema": raw["schema"],
-                "n_buckets": int(raw.get("n_buckets", self.n_buckets)),
-                "buckets": {int(k): int(v) for k, v in raw["buckets"].items()},
-                # a manifest without counts reads as an empty base: its
-                # epochs fold, and each fold records the counts it wrote
-                "rows": {int(k): int(v) for k, v in raw.get("rows", {}).items()},
-                "delta": raw.get("delta"),
-            }
-            if len(self._manifest_cache) > 8:
-                self._manifest_cache.clear()
-            self._manifest_cache[version] = m
-        return m
+        "schema", "rows", "buckets"}} for a COMMITTED version, read
+        from its file."""
+        try:
+            with open(self._manifest_path(version), encoding="utf-8") as f:
+                raw = json.load(f)
+        except FileNotFoundError:
+            # the layout-mismatch twin of _refuse_pruned_layout: a
+            # pruned handle opened over a plain ParquetStateStore path
+            # (e.g. state_buckets flipped on on an existing deployment)
+            # must fail with a migration message, not a raw
+            # FileNotFoundError mid-epoch
+            raise ValueError(
+                f"{self.path} v{version} has no _manifest.json: this "
+                "is a plain ParquetStateStore layout; open it with "
+                "ParquetStateStore, or migrate by reading the plain "
+                "store and bootstrap-writing a fresh "
+                "PrunedParquetStateStore path"
+            ) from None
+        return {
+            "schema": raw["schema"],
+            "n_buckets": int(raw["n_buckets"]),
+            "buckets": {int(k): int(v) for k, v in raw["buckets"].items()},
+            "rows": {int(k): int(v) for k, v in raw["rows"].items()},
+            "delta": raw.get("delta"),
+        }
 
     def _check_modulus(self, manifest: dict) -> None:
         """Guard for BUCKET-LOCAL operations (delta, fold, erasure): a
         handle whose n_buckets differs from the manifest's would
         compute touched-bucket ids that miss the on-disk dirs entirely
         — keys would read as absent and epochs would silently
-        duplicate them. Reads and full-rewrite fallbacks are
+        duplicate them. Reads and full rewrites are
         modulus-agnostic (dirs come from the manifest; a full rewrite
         re-buckets consistently and records its own modulus), so the
         check lives only on the dangerous paths. ``rebucket`` migrates
@@ -634,9 +620,10 @@ class PrunedParquetStateStore(ParquetStateStore):
     def _write_unlocked(
         self, df: DataFrame, version: int, epoch_id: int | None = None
     ) -> None:
-        """Full rewrite — bootstrap, rebucket, and the TRUNCATE/
-        schema-change fallbacks land here: the new version owns every
-        surviving bucket and carries no delta."""
+        """Full rewrite — bootstrap, rebucket, TRUNCATE and heal/DDL
+        epochs land here: a bucket commit of every bucket over an empty
+        manifest, so the new version owns every surviving bucket and
+        carries no delta."""
         cur = self.current_version()
         if cur is not None:
             # publish-direction twin of the plain store's guard: over a
@@ -649,11 +636,9 @@ class PrunedParquetStateStore(ParquetStateStore):
         if self.BUCKET in df.columns:
             raise ValueError(f"state may not carry a {self.BUCKET} column")
         self._clear_version(version)
-        self._write_bucket_dirs(df, version)
-        rows = self._owned_rows(version)
-        self._write_manifest(version, df.schema, dict.fromkeys(rows, version),
-                             rows)
-        self._repoint(version, epoch_id)
+        empty = {"schema": df.schema.jsonValue(), "buckets": {}, "rows": {}}
+        self._commit_touched(df, version, empty, set(range(self.n_buckets)),
+                             epoch_id)
 
     def _clear_version(self, version: int) -> None:
         """Remove ``v{version}`` before a commit path writes into it: a
@@ -669,7 +654,7 @@ class PrunedParquetStateStore(ParquetStateStore):
                 for b in self._owned_buckets(version)}
 
     def _write_bucket_dirs(
-        self, df: DataFrame, version: int, n_parts: int | None = None
+        self, df: DataFrame, version: int, n_parts: int
     ) -> None:
         """Append ``df`` hash-clustered into ``__bucket=K`` dirs under
         the version dir, which may hold the delta a fold reads; the
@@ -677,7 +662,7 @@ class PrunedParquetStateStore(ParquetStateStore):
         repartition is load-bearing: without it every write task emits
         a file into every bucket dir it holds rows for — O(tasks x
         buckets) tiny files per version.
-        ``n_parts`` sizes that shuffle (a fold passes |touched|). The
+        ``n_parts`` sizes that shuffle (|touched| buckets). The
         count stays pinned (REPARTITION_BY_NUM): the AQE-coalescible
         column-only form measured slower per drive."""
         target = os.path.join(self.path, f"v{version}")
@@ -691,7 +676,7 @@ class PrunedParquetStateStore(ParquetStateStore):
         # row-group skipping on key lookups — actually materialize.
         (
             df.withColumn(self.BUCKET, self._bucket_of([F.col(k) for k in self.pk]))
-            .repartition(n_parts or self.n_buckets, F.col(self.BUCKET))
+            .repartition(n_parts, F.col(self.BUCKET))
             .sortWithinPartitions(self.BUCKET, *self.pk)
             .write.mode("append")
             .partitionBy(self.BUCKET)
@@ -700,13 +685,12 @@ class PrunedParquetStateStore(ParquetStateStore):
         _crashpoint("buckets_written")
 
     def _scan_aggs(self, batch_df: DataFrame, pk: list[str]) -> list[F.Column]:
-        """The pre-scan's aggregates over the change batch, one list
-        for both ways of running it (an ``agg`` job, or ``observe`` on
-        the delta write): touched buckets — every row's NEW key bucket
-        (``nb``) plus PK-change rows' OLD key bucket (``ob``, where the
-        death row lands: same coalesce(old, new) key as
-        collapse_changes) — the last TRUNCATE seq (``tr``) and the row
-        count (``n``). Assumes apply_cdc_epoch's seq/op column
+        """The pre-scan's aggregates over the change batch, observed on
+        the delta write (_write_delta): touched buckets — every row's
+        NEW key bucket (``nb``) plus PK-change rows' OLD key bucket
+        (``ob``, where the death row lands: same coalesce(old, new) key
+        as collapse_changes) — the last TRUNCATE seq (``tr``) and the
+        row count (``n``). Assumes apply_cdc_epoch's seq/op column
         contract. truncate_seq_expr and old_key_exprs come from
         merge.py: the pre-scan is AUTHORITATIVE (its truncate seq is
         forwarded to merge_cdc), so a copy drifting from the merge's
@@ -722,21 +706,6 @@ class PrunedParquetStateStore(ParquetStateStore):
             old_key = old_key_exprs(batch_df.columns, pk)
             aggs.append(F.collect_set(self._bucket_of(old_key)).alias("ob"))
         return aggs
-
-    @staticmethod
-    def _scan_result(row: dict) -> tuple[list[int], object, int]:
-        """(touched buckets, last TRUNCATE seq or None, batch row
-        count) from the values of _scan_aggs."""
-        touched = set(row["nb"]) | set(row.get("ob") or ())
-        return sorted(touched), row["tr"], row["n"]
-
-    def _scan_batch(
-        self, batch_df: DataFrame, pk: list[str]
-    ) -> tuple[list[int], object, int]:
-        """The pre-scan as its own aggregation job, for heal epochs,
-        which write no delta (see _merge_commit_unlocked)."""
-        row = batch_df.agg(*self._scan_aggs(batch_df, pk)).first()
-        return self._scan_result(row.asDict())
 
     @staticmethod
     def _heals(batch_df: DataFrame, pk: list[str], schema: T.StructType) -> bool:
@@ -761,40 +730,32 @@ class PrunedParquetStateStore(ParquetStateStore):
                 f"epoch pk {pk} != store bucketing pk {self.pk}: a "
                 "mismatched key would scatter rows across wrong buckets"
             )
+        # v{version} sits above _CURRENT: an orphan (a crashed
+        # attempt's, or the delta written below), never a committed
+        # version, so it is cleared before an empty epoch returns
         cur = self.current_version()
-        if cur is None:  # bootstrap: full write owns every bucket
-            return super()._merge_commit_unlocked(
-                batch_df, pk, version, epoch_id
-            )
-        manifest = self._manifest(cur)
-        schema = self._schema_of(manifest)
-        heals = self._heals(batch_df, pk, schema)
-        if heals:
-            # the pre-scan as its own job: a delta is aligned to the
+        manifest = None if cur is None else self._manifest(cur)
+        if manifest is None or self._heals(batch_df, pk,
+                                           self._schema_of(manifest)):
+            # bootstrap, or heal/DDL: a delta is aligned to the
             # manifest schema, which this batch changes
-            delta, scan = None, self._scan_batch(batch_df, pk)
-        else:
-            delta, scan = self._write_delta(
-                batch_df, pk, version, manifest, epoch_id)
-        touched, trunc_seq, n_rows = scan
-        if n_rows == 0:  # empty epoch: nothing to commit
-            # v{version} sits above _CURRENT: an orphan (the delta just
-            # written, or a crashed attempt's), never a committed version
+            self._clear_version(version)
+            return super()._merge_commit_unlocked(
+                batch_df, pk, version, epoch_id)
+        delta, (touched, trunc_seq, n_rows) = self._write_delta(
+            batch_df, pk, version, manifest, epoch_id)
+        if n_rows == 0:
             self._clear_version(version)
             return None, None
-        if trunc_seq is not None or heals:
-            # TRUNCATE / heal / DDL: full rewrite (one schema per
-            # manifest), which clears v{version} and the delta in it.
-            # The pre-scan already proved the batch non-empty and found
-            # the truncate seq.
+        if trunc_seq is not None:
+            # full rewrite, which clears v{version} and the delta in it
             return super()._merge_commit_nonempty(
-                batch_df, pk, version, epoch_id, trunc_seq=trunc_seq,
-                broadcast_changes=n_rows <= self.broadcast_threshold_rows,
-            )
+                batch_df, pk, version, epoch_id, trunc_seq, n_rows)
         self._check_modulus(manifest)
+        schema = self._schema_of(manifest)
         cols = {f.name.lower() for f in schema.fields}
         d = manifest["delta"]
-        touched = set(touched) | set(d["buckets"] if d else ())
+        touched |= set(d["buckets"] if d else ())
         if delta is not None:
             delta["buckets"] = sorted(touched)
         if delta is not None and delta["rows"] > self._fold_bound(manifest):
@@ -820,7 +781,7 @@ class PrunedParquetStateStore(ParquetStateStore):
     def _write_delta(
         self, batch_df: DataFrame, pk: list[str], version: int,
         manifest: dict, epoch_id: int,
-    ) -> tuple[dict | None, tuple[list[int], object, int]]:
+    ) -> tuple[dict | None, tuple[set[int], object, int]]:
         """Collapse the change set (previous delta ∪ batch) into
         ``v{version}/_delta``, aligned to the manifest schema, in the
         job that also observes the pre-scan (_scan_aggs) on the batch.
@@ -882,17 +843,20 @@ class PrunedParquetStateStore(ParquetStateStore):
         entry = {"owner": version,
                  "schema": _as_nullable(delta.schema).jsonValue(),
                  "rows": rows} if rows else None
-        return entry, self._scan_result(scan.get)
+        row = scan.get
+        touched = set(row["nb"]) | set(row.get("ob") or ())
+        return entry, (touched, row["tr"], row["n"])
 
     def _commit_touched(self, df: DataFrame, version: int, manifest: dict,
                         touched: set, epoch_id) -> None:
-        """Fold commit shared by the fold epoch and the erasure: ``df``
-        is the new content of the ``touched`` buckets (delta applied).
-        Write only those buckets (write tasks sized to |touched|),
-        remove this version's delta (a fold's input), publish a
-        manifest without a delta where touched buckets that survived
-        point at this version, touched buckets with no survivors drop
-        out, and untouched buckets keep their owner; then repoint."""
+        """The one bucket commit, shared by full rewrites, folds and
+        erasures: ``df`` is the new content of the ``touched`` buckets
+        (delta applied). Write only those buckets (write tasks sized to
+        |touched|), remove this version's delta (a fold's input),
+        publish a manifest without a delta where touched buckets that
+        survived point at this version, touched buckets with no
+        survivors drop out, and untouched buckets keep their owner;
+        then repoint."""
         self._write_bucket_dirs(
             df, version, n_parts=min(self.n_buckets, max(1, len(touched)))
         )
@@ -965,7 +929,6 @@ class PrunedParquetStateStore(ParquetStateStore):
                 doomed.append(v)
             if not self._owned_buckets(v) and v not in deltas:
                 shutil.rmtree(vdir, ignore_errors=True)
-        self._manifest_cache.clear()
         return doomed
 
 
@@ -1095,7 +1058,6 @@ def run_cdc_stream(
     retain_versions: int | None = None,
     max_files_per_trigger: int | None = None,
     state_buckets: int | None = None,
-    state_broadcast_threshold_rows: int = 2_000_000,
 ):
     """Wire the full pipeline: file stream -> typed changes ->
     foreachBatch(merge into versioned parquet state). Returns the
@@ -1126,12 +1088,8 @@ def run_cdc_stream(
 
     pk = cfg.db_mapping.pk_source_columns()
     if state_buckets:
-        # state_broadcast_threshold_rows: batches above it merge
-        # broadcast-free (SCALE.md "Store selection rule")
         store: ParquetStateStore = PrunedParquetStateStore(
-            spark, state_path, pk, n_buckets=state_buckets,
-            broadcast_threshold_rows=state_broadcast_threshold_rows,
-        )
+            spark, state_path, pk, n_buckets=state_buckets)
     else:
         store = ParquetStateStore(spark, state_path)
     hook = notify_hook if notify_hook is not None else make_notifier(cfg)

@@ -231,10 +231,10 @@ def test_merge_cdc_nobroadcast_agrees_with_broadcast(spark):
 
 
 def test_merge_cdc_forwarded_trunc_seq_matches_rescan(spark):
-    """A caller that already pre-scanned the batch (the pruned store's
-    _scan_batch) forwards its truncate seq via trunc_seq; the result
+    """A caller that already pre-scanned the batch (either state
+    store's epoch) forwards its truncate seq via trunc_seq; the result
     must be identical to letting merge_cdc re-scan — same semantics,
-    one fewer job (r8 review)."""
+    one fewer job."""
     state = spark.createDataFrame([(1, "old"), (2, "old")], "id long, v string")
     batch = spark.createDataFrame(
         [(1, "UPDATE", 1, "pre"), (5, "TRUNCATE", 0, None),

@@ -487,7 +487,6 @@ def test_pruned_store_epochs_equal_full_store(spark, evts, data, tmp_path_factor
         if len(epochs) >= 2 and pruned.current_version() == len(epochs) - 1:
             prev = len(epochs) - 2
             pruned._repoint(prev, prev)
-            pruned._manifest_cache.clear()
             assert apply_cdc_epoch(pruned, frames[-1], len(epochs) - 1, ["id"])
             assert _store_state(pruned) == _store_state(full)
 

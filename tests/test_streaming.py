@@ -262,8 +262,7 @@ def test_epoch_replay_after_crash_converges(spark, tmp_path):
     assert snapshot() == expected and store.current_version() == 1
 
     # crash before commit: pointer back to v0, orphan v1 left behind
-    with open(os.path.join(str(tmp_path / "state"), "_CURRENT"), "w", encoding="utf-8") as f:
-        json.dump({"version": 0}, f)
+    store._repoint(0, 0)
     assert apply_cdc_epoch(store, batch1, 1, ["id"]) is True
     assert snapshot() == expected and store.current_version() == 1
 
@@ -899,8 +898,9 @@ def test_pruned_store_matches_full_and_rewrites_only_touched(
     state the full-rewrite store produces and (b) write ONLY a delta:
     its version dir holds `_delta` and the manifest, no bucket dir is
     read, and the manifest serves every bucket from the previous
-    version — in ONE Spark job whose delta write plans no Exchange (the
-    pre-scan is observed on that write). A fold epoch materializes ONLY
+    version — and its delta write plans no Exchange (the pre-scan is
+    observed on that write; test_pruned_epoch_path_jobs_and_manifest
+    pins its one job). A fold epoch materializes ONLY
     the buckets the delta and the batch touch, reading exactly those,
     with every other bucket served from the older version: it commits
     the merge-on-read of the delta it wrote, so its one collapse is the
@@ -941,16 +941,9 @@ def test_pruned_store_matches_full_and_rewrites_only_touched(
     orig_collapse = stream_mod.collapse_changes
     monkeypatch.setattr(stream_mod, "collapse_changes", lambda *a, **kw: (
         collapsed.append(orig_collapse(*a, **kw)), collapsed[-1])[1])
-    sc = spark.sparkContext
     for store in (pruned, full):
         assert apply_cdc_epoch(store, b0, 0, ["id"])
-        if store is pruned:
-            sc.setJobGroup("one-job-epoch", "pruned delta epoch")
-        try:
-            assert apply_cdc_epoch(store, b1, 1, ["id"])
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-    assert len(sc.statusTracker().getJobIdsForGroup("one-job-epoch")) == 1
+        assert apply_cdc_epoch(store, b1, 1, ["id"])
     assert len(collapsed) == 1 and "Exchange" not in explain_str(collapsed[0])
     # delta path: no bucket dir read, none written
     assert reads == []
@@ -1003,6 +996,95 @@ def test_pruned_store_matches_full_and_rewrites_only_touched(
     assert _state_dict(pruned) == _state_dict(full)
 
 
+# Spark jobs of each pruned-store epoch path over a 200-key, 8-bucket
+# store and a small cached batch, counted by job group through
+# statusTracker. A delta epoch is one job (the delta write, which
+# observes the pre-scan); bootstrap and heal run the pre-scan as its own
+# job before the full rewrite; TRUNCATE and fold write the delta first.
+@pytest.mark.parametrize("path,jobs", [
+    ("bootstrap", 5), ("delta", 1), ("fold", 4), ("truncate", 4),
+    ("heal", 6), ("empty", 1),
+])
+def test_pruned_epoch_path_jobs_and_manifest(spark, tmp_path, monkeypatch,
+                                             path, jobs):
+    """Every pruned-store epoch path runs a fixed number of Spark jobs,
+    lands the full-rewrite store's state, and publishes its manifest:
+    a full rewrite (bootstrap, TRUNCATE, heal) and a fold carry no
+    delta; a rewrite's version owns every bucket, a fold's only the
+    touched ones, a delta epoch's none; the row counts are the base
+    buckets' own; an empty epoch publishes nothing."""
+    from plan_helpers import sized
+    from pyspark.sql import functions as F
+
+    from canal_phoenix_adapter_spark.streaming import stream as stream_mod
+    from canal_phoenix_adapter_spark.streaming.stream import apply_cdc_epoch
+
+    pruned, full = _pruned_and_full(spark, tmp_path)
+    b0 = _batch(spark, [(i, "INSERT", i, f"n{i}", float(i), None)
+                        for i in range(1, 201)])
+    changed = [(300, "UPDATE", 5, "five", 5.5, None),
+               (301, "DELETE", 9, None, None, None),
+               (302, "UPDATE", 901, "moved", 17.0, 17)]
+    if path == "bootstrap":
+        batch = b0
+    elif path == "heal":
+        batch = sized(spark.createDataFrame(
+            [(500, "UPDATE", 1, "uno", 1.5, None, "gold")],
+            BASE_SCHEMA + ", tier string"))
+    else:
+        batch = _batch(spark, {
+            "delta": changed, "fold": changed, "empty": [],
+            "truncate": [(400, "TRUNCATE", None, None, None, None),
+                         (401, "INSERT", 3, "three", 3.0, None)],
+        }[path])
+    if path != "bootstrap":
+        for store in (pruned, full):
+            assert apply_cdc_epoch(store, b0, 0, ["id"])
+    if path == "fold":
+        monkeypatch.setattr(stream_mod, "DELTA_FOLD_FRACTION", 0.0)
+    pointer = pathlib.Path(pruned._pointer()).read_bytes() \
+        if path == "empty" else None
+    sc = spark.sparkContext
+    group = f"pruned-epoch-{tmp_path.name}"  # job groups outlive a test
+    sc.setJobGroup(group, path)
+    try:
+        committed = apply_cdc_epoch(pruned, batch, 1, ["id"])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == jobs
+    assert committed is (path != "empty")
+    assert apply_cdc_epoch(full, batch, 1, ["id"]) is committed
+    assert _state_dict(pruned) == _state_dict(full)
+    if path == "empty":
+        assert pathlib.Path(pruned._pointer()).read_bytes() == pointer
+        assert not os.path.exists(os.path.join(pruned.path, "v1"))
+        return
+
+    m = pruned._manifest(1)
+    assert m["n_buckets"] == 8
+    if path == "delta":
+        m0 = pruned._manifest(0)
+        assert m["buckets"] == m0["buckets"] and m["rows"] == m0["rows"]
+        assert m["delta"]["owner"] == 1 and m["delta"]["rows"] == 4
+        assert set(m["delta"]["buckets"]) == _bucket_of_ids(
+            spark, [5, 9, 901, 17], 8)
+        return
+    assert m["delta"] is None
+    assert not os.path.exists(os.path.join(pruned.path, "v1", "_delta"))
+    per_bucket = {
+        r["b"]: r["n"] for r in pruned.read()
+        .groupBy(F.pmod(F.hash("id"), F.lit(8)).alias("b"))
+        .agg(F.count(F.lit(1)).alias("n")).collect()
+    }
+    assert m["rows"] == per_bucket and set(m["buckets"]) == set(per_bucket)
+    if path == "fold":
+        touched = _bucket_of_ids(spark, [5, 9, 901, 17], 8)
+        assert {b for b, o in m["buckets"].items() if o == 1} == touched
+        assert {o for b, o in m["buckets"].items() if b not in touched} == {0}
+    else:
+        assert set(m["buckets"].values()) == {1}
+
+
 def test_pruned_store_crash_replay_converges_with_full(spark, tmp_path):
     """After a crashed-then-replayed epoch the pruned store equals the
     full-rewrite store, whichever side of the commit marker the crash
@@ -1026,7 +1108,6 @@ def test_pruned_store_crash_replay_converges_with_full(spark, tmp_path):
     # crash BEFORE commit: pointer back at v0, v1 left as a half-
     # written orphan (stale manifest included); replay must rebuild v1
     pruned._repoint(0, 0)
-    pruned._manifest_cache.clear()
     orphan = os.path.join(pruned.path, "v1")
     assert os.path.isdir(orphan)
     assert apply_cdc_epoch(pruned, b1, 1, ["id"])
@@ -1331,13 +1412,12 @@ def test_pruned_store_schema_heal_rewrites_all_buckets(spark, tmp_path):
 
 def test_pruned_fallback_epochs_skip_isempty_recheck(spark, tmp_path,
                                                      monkeypatch):
-    """The pruned store's TRUNCATE and heal/DDL fallbacks delegate to
-    the base full-rewrite path, whose entry once re-ran
-    batch_df.isEmpty() — one redundant Spark job on a batch the
-    pre-scan already counted as non-empty. The fallbacks must enter
-    via _merge_commit_nonempty (zero isEmpty calls); results are
-    unchanged. An empty batch over a store holding a delta commits
-    nothing and leaves no version dir behind."""
+    """The pruned store's TRUNCATE and heal/DDL epochs run the base
+    full-rewrite path, whose entry once re-ran batch_df.isEmpty() —
+    one redundant Spark job on a batch the pre-scan already counted as
+    non-empty. Neither may call isEmpty; results are unchanged. An
+    empty batch over a store holding a delta commits nothing and
+    leaves no version dir behind."""
     from pyspark.sql import DataFrame
 
     from canal_phoenix_adapter_spark.streaming import stream as stream_mod
@@ -1497,10 +1577,9 @@ def test_pruned_store_prune_keeps_shared_buckets_readable(spark, tmp_path):
     assert 7 not in _state_dict(pruned)
 
 
-def test_run_cdc_stream_with_pruned_store(spark, tmp_path, monkeypatch):
+def test_run_cdc_stream_with_pruned_store(spark, tmp_path):
     """The golden scenario through run_cdc_stream(state_buckets=...)
     must land the exact same final state as the default store."""
-    from canal_phoenix_adapter_spark.streaming import stream as stream_mod
     from canal_phoenix_adapter_spark.streaming.stream import (
         PrunedParquetStateStore,
     )
@@ -1520,28 +1599,6 @@ def test_run_cdc_stream_with_pruned_store(spark, tmp_path, monkeypatch):
     # epochs (split source): one readable snapshot left
     assert store.current_version() >= 1
     assert store.versions() == [store.current_version()]
-
-    # the broadcast threshold is reachable from the production
-    # entrypoint (SCALE.md store-selection rule): 0 routes every epoch
-    # through the no-broadcast merge, same final state
-    built = []
-
-    class Recording(PrunedParquetStateStore):
-        def __init__(self, *a, **kw):
-            built.append(kw)
-            super().__init__(*a, **kw)
-
-    monkeypatch.setattr(stream_mod, "PrunedParquetStateStore", Recording)
-    q2 = run_cdc_stream(
-        spark, src, str(tmp_path / "state2"), str(tmp_path / "ckpt2"),
-        CFG, VALUE_SCHEMA, state_buckets=8,
-        state_broadcast_threshold_rows=0,
-    )
-    assert q2.awaitTermination(120)
-    assert built and built[0]["broadcast_threshold_rows"] == 0
-    s2 = PrunedParquetStateStore(spark, str(tmp_path / "state2"), ["id"], 8)
-    got2 = {r["id"]: (r["name"], r["balance"]) for r in s2.read().collect()}
-    assert got2 == EXPECTED
 
 
 def test_pruned_store_modulus_guard_and_rebucket(spark, tmp_path):

@@ -13,7 +13,7 @@ Layout (SURVEY.md §7.0; scale design ledger in SCALE.md):
     sources/      table loaders, Canal event envelope/explode, JDBC options
     operators/    transform, merge (CDC apply), etl, schema_sync, asof,
                   dedup, similarity, text, sampling, multimodal, analytics
-    sinks/        executor-side Phoenix write loop, lake-layout parquet sink
+    sinks/        executor-side Phoenix write loop
     streaming/    Structured Streaming glue, versioned state store
                   (time travel, erasure)
 """

@@ -627,8 +627,6 @@ def _ab_cosine_pairs(pairs: DataFrame, threshold: float) -> DataFrame:
 
 def embedding_near_dup_pairs(
     df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     threshold: float = 0.9,
     max_id: int | None = None,
 ) -> DataFrame:
@@ -644,7 +642,7 @@ def embedding_near_dup_pairs(
     """
     from canal_phoenix_adapter_spark.operators.similarity import nonzero_vecs
 
-    v = nonzero_vecs(df, id_col, vec_col)
+    v = nonzero_vecs(df)
     if max_id is not None:
         v = v.where(F.col("id") < max_id)
     return _ab_cosine_pairs(
@@ -666,8 +664,6 @@ def lsh_planes_for_corpus(expected_count: int, bands: int = 4) -> int:
 
 def embedding_near_dup_pairs_lsh(
     df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     threshold: float = 0.9,
     num_planes: int | None = None,
     bands: int = 4,
@@ -707,7 +703,12 @@ def embedding_near_dup_pairs_lsh(
     lsh_planes_for_corpus's docstring). ``expected_count``
     is caller config, like ``dim``: no Spark action at construction.
     """
-    from canal_phoenix_adapter_spark.operators.similarity import lsh_bucket_expr
+    from canal_phoenix_adapter_spark.operators.similarity import (
+        EMBEDDING,
+        VEC_ID,
+        lsh_bucket_expr,
+        nonzero_vecs,
+    )
 
     if dim is None:
         raise ValueError("embedding_near_dup_pairs_lsh requires dim")
@@ -726,7 +727,7 @@ def embedding_near_dup_pairs_lsh(
         *[
             F.struct(
                 F.lit(b).alias("band"),
-                lsh_bucket_expr(vec_col, rpb, dim, first_plane=b * rpb).alias(
+                lsh_bucket_expr(EMBEDDING, rpb, dim, first_plane=b * rpb).alias(
                     "bucket"
                 ),
             )
@@ -734,16 +735,14 @@ def embedding_near_dup_pairs_lsh(
         ]
     )
     banded = df.select(
-        F.col(id_col).alias("id"), F.explode(band_structs).alias("bb")
+        F.col(VEC_ID).alias("id"), F.explode(band_structs).alias("bb")
     ).select("id", "bb.band", "bb.bucket")
     # _pair_join persists the (id, band, bucket) longs, so the dim-wide
     # sign dot-products run once; vectors are never in that table.
     cand = _pair_join(banded, ["band", "bucket"], max_bucket)
-    from canal_phoenix_adapter_spark.operators.similarity import nonzero_vecs
-
     # norms once per VECTOR in the scan projection, not per candidate
     # pair — bit-identical value (same fold), ~1/3 of the pair math
-    vecs = nonzero_vecs(df, id_col, vec_col)
+    vecs = nonzero_vecs(df)
     return _ab_cosine_pairs(
         cand.join(vecs.alias("a"), F.col("id_a") == F.col("a.id"))
         .join(vecs.alias("b"), F.col("id_b") == F.col("b.id")),
@@ -951,8 +950,6 @@ def chunk_crossdoc_stats(
 
 def semantic_dup_pairs_ivf(
     df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     threshold: float = 0.4,
     max_bucket: int | None = DEFAULT_IVF_MAX_CELL,
     codebook: list[list[float]] | None = None,
@@ -978,7 +975,7 @@ def semantic_dup_pairs_ivf(
     recall-decay signal the LSH family gets from its sizing refusal."""
     from canal_phoenix_adapter_spark.operators.similarity import ivf_cells_base
 
-    v = ivf_cells_base(df, id_col, vec_col, codebook)
+    v = ivf_cells_base(df, codebook)
     if max_bucket is not None:
         # broadcast_hot: the over-cap key set is bounded by n/max_bucket
         # (static quantizer: <= 2*dim cells; sized codebook: k grows with
@@ -996,8 +993,6 @@ def semantic_dup_pairs_ivf(
 
 def ivf_cell_occupancy(
     df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     max_bucket: int | None = DEFAULT_IVF_MAX_CELL,
     codebook: list[list[float]] | None = None,
 ) -> dict:
@@ -1019,7 +1014,7 @@ def ivf_cell_occupancy(
     from canal_phoenix_adapter_spark.operators.similarity import ivf_cells_base
 
     per = (
-        ivf_cells_base(df, id_col, vec_col, codebook)
+        ivf_cells_base(df, codebook)
         .groupBy("cell").agg(F.count(F.lit(1)).alias("__bs"))
     )
     over = F.lit(False) if max_bucket is None else F.col("__bs") > max_bucket

@@ -1,4 +1,10 @@
-"""Similarity search over an embedding column (array<float>).
+"""Similarity search over an embedding frame.
+
+The frame contract, shared with dedup's embedding operators: one row
+per vector with the id in ``vec_id`` (bigint) and the vector in
+``embedding`` (array<float>) — the ``embeddings`` table of
+FIXTURES.md. Every operator here reads those two columns by name
+(VEC_ID, EMBEDDING); a frame with other names is renamed by the caller.
 
 Extension operators (SURVEY.md §7.4):
   * brute-force cosine top-k — the exact baseline: broadcast the query
@@ -46,8 +52,7 @@ def _norm(v) -> F.Column:
     )
 
 
-def nonzero_vecs(df: DataFrame, id_col: str, vec_col: str,
-                 *extra) -> DataFrame:
+def nonzero_vecs(df: DataFrame, *extra) -> DataFrame:
     """(id, v, nrm, *extra) scan projection over POSITIVE-norm vectors
     — the one vector base every pairing/top-k variant (and dedup's
     embedding variants) builds on. Zero-norm rows drop HERE: their
@@ -78,18 +83,15 @@ def nonzero_vecs(df: DataFrame, id_col: str, vec_col: str,
     short-circuits on the first hit, so the predicate costs ~one
     multiply per row against the fold's 64. SQL text, not composed
     lambda Columns, for the predicate (the repo's standard py4j
-    discipline — functions.hashing.bq): ``vec_col`` callers pass
-    plain SQL-safe names (same contract as lsh_bucket_expr)."""
-    from canal_phoenix_adapter_spark.functions.hashing import bq
-
-    v = bq(vec_col)
+    discipline)."""
+    v = EMBEDDING
     has_mass = F.expr(
         f"{v} IS NOT NULL AND NOT exists({v}, x -> x IS NULL) "
         f"AND exists({v}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE) > 0D)"
     )
     return df.where(has_mass).select(
-        F.col(id_col).alias("id"), F.col(vec_col).alias("v"),
-        _norm(F.col(vec_col)).alias("nrm"), *extra,
+        F.col(VEC_ID).alias("id"), F.col(v).alias("v"),
+        _norm(F.col(v)).alias("nrm"), *extra,
     )
 
 
@@ -109,28 +111,12 @@ def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
     )
 
 
-def _keyed_ann_topk(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    key_expr: F.Column,
-    num_queries: int,
-    k: int,
-) -> DataFrame:
-    """Shared body of the bucketed ANN variants (LSH bucket / static
-    IVF cell / trained IVF cell — only the quantizer key differs):
-    one scan projection computing (id, vector, norm, key), the tiny
-    query side broadcast, candidates restricted by an equi-join on
-    the key, exact cosine ranking via _rank_topk."""
-    base = nonzero_vecs(df, id_col, vec_col, key_expr.alias("__key"))
-    return _ann_from_base(base, num_queries, k)
-
-
 def _ann_from_base(base: DataFrame, num_queries: int, k: int) -> DataFrame:
-    """_keyed_ann_topk from a prepared (id, v, nrm, __key) base — the
-    entry point for quantizers that attach the key as a column
-    (with_codebook_cells' Arrow kernel at large k) instead of a key
-    expression."""
+    """Shared body of every top-k variant (one universal key, LSH
+    bucket, static IVF cell, trained IVF cell — only the quantizer
+    key differs) over a (id, v, nrm, __key) base from nonzero_vecs:
+    the tiny query side broadcast, candidates restricted by an
+    equi-join on the key, exact cosine ranking via _rank_topk."""
     queries = base.where(F.col("id") < num_queries).select(
         F.col("id").alias("query_id"), F.col("v").alias("qv"),
         F.col("nrm").alias("qn"), F.col("__key"),
@@ -146,13 +132,7 @@ def _ann_from_base(base: DataFrame, num_queries: int, k: int) -> DataFrame:
     return _rank_topk(scored, k)
 
 
-def cosine_topk(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    num_queries: int = 8,
-    k: int = 5,
-) -> DataFrame:
+def cosine_topk(df: DataFrame, num_queries: int = 8, k: int = 5) -> DataFrame:
     """Exact cosine top-k: ids BELOW ``num_queries`` (the oracle's cut;
     on 0-based ids, "the first num_queries vectors") against every
     other vector. Negative ids are full candidates but also land below
@@ -164,9 +144,8 @@ def cosine_topk(
     folds it away and plans the same allowed O(q*n) broadcast nested
     loop as the previous explicit form, q constant): one body for all
     top-k variants."""
-    return _keyed_ann_topk(
-        df, id_col, vec_col, F.lit(0).cast("long"), num_queries, k
-    )
+    base = nonzero_vecs(df, F.lit(0).cast("long").alias("__key"))
+    return _ann_from_base(base, num_queries, k)
 
 
 def plane_sign(plane: int, dim: int) -> int:
@@ -218,31 +197,6 @@ def lsh_bucket_expr(
     return F.expr(f"CAST({' + '.join(bits)} AS BIGINT)")
 
 
-def lsh_hyperplane_buckets(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    num_planes: int = 8,
-    dim: int | None = None,
-) -> DataFrame:
-    """Random-hyperplane LSH: bucket = bit-string of sign(v . plane_j).
-    Output (id, bucket bigint). Vectors in the same bucket are ANN
-    candidates; expected collision rate falls with angle.
-
-    ``dim`` is required: the caller knows the embedding width (it is
-    pipeline config, like the model that produced the vectors), and an
-    automatic probe would run a Spark action during plan construction."""
-    if dim is None:
-        raise ValueError(
-            "lsh_hyperplane_buckets requires dim (embedding width); "
-            "pass it from pipeline config instead of probing the data"
-        )
-    return df.select(
-        F.col(id_col).alias("id"),
-        lsh_bucket_expr(vec_col, num_planes, dim).alias("bucket"),
-    )
-
-
 def ivf_cell_expr(vec_col: str) -> F.Column:
     """Column expression for the IVF-style coarse cell id:
     (argmax-|component| dimension, its sign) — 2*dim inverted lists.
@@ -260,22 +214,7 @@ def ivf_cell_expr(vec_col: str) -> F.Column:
     return (idx * 2 + signed).cast("long")
 
 
-def ivf_cells(
-    df: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> DataFrame:
-    """IVF coarse quantizer as a standalone (id, cell) table."""
-    return df.select(
-        F.col(id_col).alias("id"), ivf_cell_expr(vec_col).alias("cell")
-    )
-
-
-def ann_topk_ivf(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    num_queries: int = 8,
-    k: int = 5,
-) -> DataFrame:
+def ann_topk_ivf(df: DataFrame, num_queries: int = 8, k: int = 5) -> DataFrame:
     """Approximate top-k via IVF inverted lists: exact cosine ranking
     restricted to the query's cell. Same scale shape as ann_topk_lsh —
     the candidate join is keyed on the cell, so a query only meets its
@@ -285,15 +224,12 @@ def ann_topk_ivf(
     over the corpus, zero extra shuffles); the tiny query side
     recomputes it for num_queries rows, which is cheaper than the
     join-back-on-id + persist it replaces."""
-    return _keyed_ann_topk(
-        df, id_col, vec_col, ivf_cell_expr(vec_col), num_queries, k
-    )
+    base = nonzero_vecs(df, ivf_cell_expr(EMBEDDING).alias("__key"))
+    return _ann_from_base(base, num_queries, k)
 
 
 def ann_topk_lsh(
     df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     num_queries: int = 8,
     k: int = 5,
     num_planes: int = 8,
@@ -309,11 +245,9 @@ def ann_topk_lsh(
     ``dim`` is required pipeline config — see lsh_bucket_expr."""
     if dim is None:
         raise ValueError("ann_topk_lsh requires dim (embedding width)")
-    return _keyed_ann_topk(
-        df, id_col, vec_col,
-        lsh_bucket_expr(vec_col, num_planes, dim),
-        num_queries, k,
-    )
+    base = nonzero_vecs(
+        df, lsh_bucket_expr(EMBEDDING, num_planes, dim).alias("__key"))
+    return _ann_from_base(base, num_queries, k)
 
 
 def _dist2_sql(vec_sql: str, centroid: list[float]) -> str:
@@ -362,6 +296,9 @@ def assign_cells(vec_col: str, codebook: list[list[float]]) -> F.Column:
         f"CAST(array_position({dists}, array_min({dists})) - 1 AS BIGINT)"
     )
 
+
+VEC_ID = "vec_id"  # the embedding frame's columns (module docstring)
+EMBEDDING = "embedding"
 
 LITERAL_CODEBOOK_MAX = 64  # measured: F.lit-array construction 2.2 s
 # at k=64 but 7.8 s at k=256 and 37 s at k=1024 (driver-side literal
@@ -484,11 +421,7 @@ def _train_iteration_sql(view: str, codebook: list[list[float]], dim: int) -> st
 
 
 def ivf_train_codebook(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 8,
-    iters: int = 3,
+    df: DataFrame, k: int = 8, iters: int = 3
 ) -> list[list[float]]:
     """Deterministic Lloyd's k-means for the IVF coarse quantizer.
 
@@ -535,9 +468,9 @@ def ivf_train_codebook(
     # (norm > 0): NULL / element-NULL / empty arrays crash seeding and
     # zero-norm vectors have no direction — an isNotNull-only guard
     # passed the latter three. Need k usable seeds.
-    vecs = df.where(_norm(F.col(vec_col)) > 0)
+    vecs = df.where(_norm(F.col(EMBEDDING)) > 0)
     seeds = (
-        vecs.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
+        vecs.select(F.col(VEC_ID).alias("id"), F.col(EMBEDDING).alias("v"))
         .orderBy("id")
         .limit(k)
         .collect()
@@ -561,8 +494,8 @@ def ivf_train_codebook(
             f"({sorted({len(c) for c in codebook})}); one width required"
         )
     base = (
-        vecs.where(F.size(F.col(vec_col)) == dim)
-        .select(F.col(vec_col).alias("__v")).persist()
+        vecs.where(F.size(F.col(EMBEDDING)) == dim)
+        .select(F.col(EMBEDDING).alias("__v")).persist()
     )
     sql_text = k <= LITERAL_CODEBOOK_MAX
     if sql_text:
@@ -598,8 +531,7 @@ def ivf_train_codebook(
 
 
 def ivf_cells_base(
-    df: DataFrame, id_col: str, vec_col: str,
-    codebook: list[list[float]] | None = None, cell_col: str = "cell",
+    df: DataFrame, codebook: list[list[float]] | None = None
 ) -> DataFrame:
     """The (id, v, nrm, cell) scan base shared by every IVF consumer
     (semantic_dup_pairs_ivf / knn_join_ivf / ivf_cell_occupancy):
@@ -608,20 +540,12 @@ def ivf_cells_base(
     occupancy witness measures EXACTLY the cells the pair/knn joins
     route through."""
     if codebook is None:
-        return nonzero_vecs(df, id_col, vec_col,
-                            ivf_cell_expr(vec_col).alias(cell_col))
-    return with_codebook_cells(
-        nonzero_vecs(df, id_col, vec_col), codebook, "v", cell_col
-    )
+        return nonzero_vecs(df, ivf_cell_expr(EMBEDDING).alias("cell"))
+    return with_codebook_cells(nonzero_vecs(df), codebook, "v", "cell")
 
 
 def ann_topk_ivf_trained(
-    df: DataFrame,
-    codebook: list[list[float]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    num_queries: int = 8,
-    k: int = 5,
+    df: DataFrame, codebook: list[list[float]], num_queries: int = 8, k: int = 5
 ) -> DataFrame:
     """ann_topk_ivf with a TRAINED codebook: identical topology (cell
     computed inline with the scan, candidate join keyed on the cell,
@@ -630,16 +554,12 @@ def ann_topk_ivf_trained(
     attaches via with_codebook_cells' k-split (literal folds small,
     Arrow kernel sized — the sized path's k ∝ n must not hit the
     literal plan-size wall)."""
-    base = with_codebook_cells(
-        nonzero_vecs(df, id_col, vec_col), codebook, "v", "__key"
-    )
+    base = with_codebook_cells(nonzero_vecs(df), codebook, "v", "__key")
     return _ann_from_base(base, num_queries, k)
 
 
 def knn_join_ivf(
     df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 5,
     max_bucket: int | None = None,
     codebook: list[list[float]] | None = None,
@@ -664,7 +584,7 @@ def knn_join_ivf(
     ivf_k_for_corpus) replaces the static 2*dim cell, keeping mean
     cell size bounded as the corpus grows. dedup.ivf_cell_occupancy
     reports what the cap is dropping (the loud recall-decay signal)."""
-    base = ivf_cells_base(df, id_col, vec_col, codebook)
+    base = ivf_cells_base(df, codebook)
     if max_bucket is not None:
         from canal_phoenix_adapter_spark.operators.dedup import _cap_bucket_size
 

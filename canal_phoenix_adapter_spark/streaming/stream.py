@@ -116,6 +116,8 @@ class ParquetStateStore:
     # envelope), so its merge always broadcasts them; the pruned store
     # sets its own threshold per handle.
     broadcast_threshold_rows = float("inf")
+    # prune renames a doomed v{N} to this prefix + N before deleting it
+    UNPUBLISHED = "_pruned_v"
 
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
@@ -247,23 +249,30 @@ class ParquetStateStore:
         self._schema_memo = (version, schema)
         self._repoint(version, epoch_id)
 
+    def _listing(self) -> list[str]:
+        try:
+            return os.listdir(self.path)
+        except FileNotFoundError:
+            return []
+
+    @staticmethod
+    def _versions_in(names: list[str]) -> list[int]:
+        out = []
+        for name in names:
+            if name.startswith("v"):
+                try:
+                    out.append(int(name[1:]))
+                except ValueError:
+                    continue
+        return sorted(out)
+
     def versions(self) -> list[int]:
         """Snapshot versions on disk, ascending. Negative versions are
         legal (the etl-then-sync bootstrap commits the backfill as a
         version below any streaming epoch id, e.g. -1) and must be
         visible here or prune() would retain the full-backfill
         snapshot — the largest in the store — forever."""
-        out = []
-        try:
-            for name in os.listdir(self.path):
-                if name.startswith("v"):
-                    try:
-                        out.append(int(name[1:]))
-                    except ValueError:
-                        continue
-        except FileNotFoundError:
-            pass
-        return sorted(out)
+        return self._versions_in(self._listing())
 
     def prune(self, keep_last: int = 2) -> list[int]:
         """Retention GC: drop snapshot dirs older than the newest
@@ -274,7 +283,13 @@ class ParquetStateStore:
         the replay's write target; see the class docstring). Returns
         the pruned versions. Call it from foreachBatch cadence or a
         janitor cron; it only touches strictly-older snapshot dirs, so
-        it is safe concurrent with readers of _CURRENT."""
+        it is safe concurrent with readers of _CURRENT.
+
+        A doomed version is unpublished before its files go: one rename
+        moves ``v{N}`` out of the ``v*`` namespace, so a crash part-way
+        through the delete leaves no partial dir that versions() lists
+        and read_version() would read as a snapshot. The next prune
+        deletes what such a crash left, from the same listing."""
         cur = self.current_version()
         if cur is None:
             return []
@@ -282,10 +297,21 @@ class ParquetStateStore:
         # rmtree'ing those would destroy live state — refuse like read()
         self._refuse_pruned_layout(cur)
         keep_last = max(1, keep_last)
-        committed = [v for v in self.versions() if v <= cur]
+        names = self._listing()
+        committed = [v for v in self._versions_in(names) if v <= cur]
         doomed = committed[:-keep_last] if len(committed) > keep_last else []
+        gone = [n for n in names if n.startswith(self.UNPUBLISHED)]
         for v in doomed:
-            shutil.rmtree(os.path.join(self.path, f"v{v}"), ignore_errors=True)
+            name = f"{self.UNPUBLISHED}{v}"
+            try:
+                os.rename(os.path.join(self.path, f"v{v}"),
+                          os.path.join(self.path, name))
+            except FileNotFoundError:  # a concurrent prune took it
+                continue
+            gone.append(name)
+        _crashpoint("prune_unpublished")
+        for name in gone:
+            shutil.rmtree(os.path.join(self.path, name), ignore_errors=True)
         return doomed
 
     def _merge_commit_unlocked(
@@ -341,10 +367,12 @@ class ParquetStateStore:
 
 
 def _crashpoint(name: str) -> None:
-    """Fault-injection seam at a durable step of a pruned-store commit
-    (``delta_written``, ``buckets_written``, ``manifest_written``). A
-    no-op in production; tests replace it with a function that raises
-    at a chosen step, then replay the epoch."""
+    """Fault-injection seam at a durable step: of a pruned-store commit
+    (``delta_written``, ``buckets_written``, ``manifest_written``), and
+    of either store's prune between unpublishing the doomed versions
+    and deleting their data (``prune_unpublished``). A no-op in
+    production; tests replace it with a function that raises at a
+    chosen step, then replay the epoch or prune again."""
 
 
 # A normal epoch folds its delta into the base buckets once (delta rows
@@ -891,7 +919,9 @@ class PrunedParquetStateStore(ParquetStateStore):
         the base store) and its data dirs as soon as the last
         referencing manifest is itself pruned — possibly on a LATER
         call, which is why GC candidates come from the disk listing,
-        not from versions()."""
+        not from versions(). Every doomed manifest goes before any data
+        dir, so a crash part-way leaves no listed version whose read
+        fails; the next prune deletes the leftovers the same way."""
         cur = self.current_version()
         if cur is None:
             return []
@@ -911,7 +941,13 @@ class PrunedParquetStateStore(ParquetStateStore):
             referenced.update((o, b) for b, o in m["buckets"].items())
             if m["delta"] is not None:
                 deltas.add(m["delta"]["owner"])
-        doomed = []
+        doomed = [v for v in committed if v not in retained]
+        for v in doomed:
+            try:
+                os.remove(self._manifest_path(v))
+            except FileNotFoundError:
+                pass
+        _crashpoint("prune_unpublished")
         for v in (x for x in super().versions() if x <= cur):
             if v in retained:
                 continue
@@ -921,12 +957,6 @@ class PrunedParquetStateStore(ParquetStateStore):
                     shutil.rmtree(self._bucket_dir(v, b), ignore_errors=True)
             if v not in deltas:
                 shutil.rmtree(self._delta_dir(v), ignore_errors=True)
-            if v in committed:
-                try:
-                    os.remove(self._manifest_path(v))
-                except FileNotFoundError:
-                    pass
-                doomed.append(v)
             if not self._owned_buckets(v) and v not in deltas:
                 shutil.rmtree(vdir, ignore_errors=True)
         return doomed

@@ -4,6 +4,8 @@ Usage:
     python tests/explain_dump.py <tag> [suffix] [only,names]
 
 Writes plans/<tag>/<query>_<suffix>.txt (suffix defaults to "before").
+Without ``only`` it dumps the bench.py HEADLINE names; ``only`` may
+name any registered driver or parity query.
 Streaming SPECIAL workloads have no single DataFrame plan and are
 skipped. Queries whose construction itself runs jobs (trained IVF's
 Lloyd iterations) still produce the final serving plan.
@@ -30,7 +32,6 @@ def main() -> None:
         os.path.abspath(__file__))), "plans", tag)
     os.makedirs(out_dir, exist_ok=True)
 
-    spark = get_spark("explain-dump")
     qs = E.queries()
     try:
         from tests.parity_registry import PARITY_QUERIES
@@ -38,9 +39,14 @@ def main() -> None:
     except Exception as e:  # noqa: BLE001
         print(f"WARNING: parity registry unavailable: {e!r}", file=sys.stderr)
 
-    names = [n for n in bench.HEADLINE if n in qs]
     if only:
-        names = [n for n in names if n in only]
+        unknown = sorted(only - qs.keys())
+        if unknown:
+            sys.exit(f"not a registered driver or parity query: {unknown}")
+        names = sorted(only)
+    else:
+        names = [n for n in bench.HEADLINE if n in qs]
+    spark = get_spark("explain-dump")
     for name in names:
         spark.catalog.clearCache()
         try:

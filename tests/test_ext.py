@@ -102,8 +102,10 @@ def test_embedding_near_dup_pairs(spark):
 
 
 def test_lsh_buckets_collide_for_identical(spark):
-    b = {r["id"]: r["bucket"] for r in
-         similarity.lsh_hyperplane_buckets(vec_df(spark), num_planes=4, dim=4).collect()}
+    b = {r["id"]: r["bucket"] for r in vec_df(spark).select(
+        F.col("vec_id").alias("id"),
+        similarity.lsh_bucket_expr("embedding", 4, 4).alias("bucket"),
+    ).collect()}
     assert b[0] == b[1]
 
 
@@ -112,8 +114,6 @@ def test_lsh_buckets_require_dim():
     the operator must refuse rather than run a job."""
     import pytest
 
-    with pytest.raises(ValueError, match="dim"):
-        similarity.lsh_hyperplane_buckets(None, num_planes=4)
     with pytest.raises(ValueError, match="dim"):
         similarity.ann_topk_lsh(None)
     with pytest.raises(ValueError, match="dim"):
@@ -560,13 +560,14 @@ def test_simhash_hamming_pairs_rejects_bad_bands():
 
 
 def test_ivf_cells_deterministic_and_signed(spark):
-    from canal_phoenix_adapter_spark.operators.similarity import ivf_cells
+    from canal_phoenix_adapter_spark.operators.similarity import ivf_cell_expr
 
     df = spark.createDataFrame(
         [(0, [0.1, -0.9, 0.2]), (1, [0.1, 0.9, 0.2]), (2, [0.95, 0.1, 0.0])],
         "vec_id bigint, embedding array<float>",
     )
-    cells = {r["id"]: r["cell"] for r in ivf_cells(df).collect()}
+    cells = {r["vec_id"]: r["cell"] for r in df.select(
+        "vec_id", ivf_cell_expr("embedding").alias("cell")).collect()}
     # dim index is 1-based; cell = idx*2 + (1 if negative else 0)
     assert cells == {0: 5, 1: 4, 2: 2}
 
@@ -859,7 +860,7 @@ def test_arrow_cells_ragged_vector_matches_fold_null_cell(spark, monkeypatch):
         [(0, [1.0] * 4), (1, [1.0, 1.0]), (2, [1.0] * 6), (3, None)],
         "vec_id long, embedding array<float>",
     )
-    nz = similarity.nonzero_vecs(df, "vec_id", "embedding")
+    nz = similarity.nonzero_vecs(df)
     want = {0: 0, 1: None, 2: None}
     for literal_max in (64, 0):  # literal folds, then the Arrow kernel
         monkeypatch.setattr(similarity, "LITERAL_CODEBOOK_MAX", literal_max)
@@ -1050,7 +1051,7 @@ def test_nonzero_vecs_cheap_predicate_matches_norm_filter(spark):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     got = sorted(
         r["id"] for r in
-        similarity.nonzero_vecs(df, "vec_id", "embedding").collect()
+        similarity.nonzero_vecs(df).collect()
     )
     ref = sorted(
         r["vec_id"] for r in
@@ -1064,7 +1065,7 @@ def test_nonzero_vecs_cheap_predicate_matches_norm_filter(spark):
 
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
-        similarity.nonzero_vecs(df, "vec_id", "embedding").explain(mode="formatted")
+        similarity.nonzero_vecs(df).explain(mode="formatted")
     assert buf.getvalue().count("aggregate(") == 1, buf.getvalue()
 
 

@@ -1,62 +1,9 @@
-"""Lake sink layout tests: partition dirs, file counts, in-file order,
-record caps — the physical properties later scans depend on."""
+"""Source sizing and session tests: dataset_size, fan_out, load_table's
+conf scoping, the byte-string parser and get_spark's defaults."""
 
 from __future__ import annotations
 
-import glob
 import os
-
-from pyspark.sql import functions as F
-
-from canal_phoenix_adapter_spark.sinks.lake import write_lake
-
-
-def _files(path: str) -> list[str]:
-    return sorted(
-        glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
-    )
-
-
-def test_partition_dirs_and_file_count(spark, tmp_path):
-    df = spark.createDataFrame(
-        [(i, ["en", "de"][i % 2], f"t{i}") for i in range(100)],
-        "doc_id long, lang string, text string",
-    )
-    out = str(tmp_path / "lake1")
-    write_lake(
-        df, out, partition_by=["lang"], target_files=4,
-        repartition_keys=["doc_id"],
-    )
-    dirs = sorted(
-        d for d in os.listdir(out) if d.startswith("lang=")
-    )
-    assert dirs == ["lang=de", "lang=en"]
-    # 4 writer tasks x up to 2 partition values -> at most 8 files,
-    # at least one per partition dir
-    for d in dirs:
-        n = len(_files(os.path.join(out, d)))
-        assert 1 <= n <= 4, (d, n)
-    back = spark.read.parquet(out)
-    assert back.count() == 100
-    assert set(back.columns) == {"doc_id", "lang", "text"}
-
-
-def test_partitioned_write_without_keys_keeps_file_count_bounded(spark, tmp_path):
-    """partition_by + target_files with NO repartition_keys used to
-    round-robin, putting every partition value in every writer task —
-    tasks x values small files (r10 review). Hashing on the partition
-    columns bounds total files near target_files."""
-    df = spark.createDataFrame(
-        [(i, f"d{i % 20}") for i in range(400)], "doc_id long, date string"
-    )
-    out = str(tmp_path / "lake_np")
-    write_lake(df, out, partition_by=["date"], target_files=4)
-    n = len(_files(out))
-    # round-robin would emit up to 4 x 20 = 80 files; hashing on date
-    # emits at most one file per distinct value (each value lives in
-    # exactly one task)
-    assert n <= 20, n
-    assert spark.read.parquet(out).count() == 400
 
 
 def test_dataset_size_survives_dangling_symlink(tmp_path):
@@ -87,31 +34,6 @@ def test_load_table_events_restores_nanos_conf(spark):
     load_table(spark, "/root/testdata/sf0.001", "events")
     assert spark.conf.get(key) == "false"     # prior explicit value restored
     spark.conf.unset(key)
-
-
-def test_sort_within_orders_rows_in_each_file(spark, tmp_path):
-    df = spark.createDataFrame(
-        [(i * 37 % 100, f"t{i}") for i in range(100)], "k long, text string"
-    )
-    out = str(tmp_path / "lake2")
-    write_lake(df, out, target_files=2, repartition_keys=["k"], sort_within=["k"])
-    import pyarrow.parquet as pq
-
-    for f in _files(out):
-        ks = pq.read_table(f, columns=["k"]).column("k").to_pylist()
-        assert ks == sorted(ks), f
-
-
-def test_max_records_per_file_caps(spark, tmp_path):
-    df = spark.range(100).select(F.col("id").alias("k"))
-    out = str(tmp_path / "lake3")
-    write_lake(df, out, target_files=1, max_records_per_file=30)
-    import pyarrow.parquet as pq
-
-    files = _files(out)
-    assert len(files) >= 4  # 100 rows / 30 cap
-    for f in files:
-        assert pq.read_metadata(f).num_rows <= 30
 
 
 def test_fan_out_never_shuffles_unknown_or_big_inputs(spark, tmp_path):
@@ -172,52 +94,6 @@ def test_dataset_size_sums_nested_partitions(spark, tmp_path):
     assert dataset_size(d) == true_sum
     assert dataset_size(d) != inode_sum
     assert dataset_size("s3://bucket/nope.parquet") is None
-
-
-def test_sort_within_survives_partition_by(spark, tmp_path):
-    """partitionBy imposes a required ordering on the partition
-    columns; if sort_within doesn't satisfy it the file writer adds
-    its own sort and the promised in-file ordering silently vanishes.
-    write_lake leads the sort with the partition columns so the
-    caller's ordering reaches the files."""
-    import pyarrow.parquet as pq
-
-    df = spark.createDataFrame(
-        [(i % 3, 999 - i) for i in range(300)], "part int, doc_id int"
-    )
-    out = str(tmp_path / "lake_po")
-    write_lake(df, out, partition_by=["part"], target_files=1,
-               sort_within=["doc_id"])
-    files = []
-    for root, _d, fs in os.walk(out):
-        files += [os.path.join(root, f) for f in fs if f.endswith(".parquet")]
-    assert files
-    for f in files:
-        ids = pq.read_table(f, columns=["doc_id"]).column("doc_id").to_pylist()
-        assert ids == sorted(ids), f
-
-
-def test_sort_within_with_partition_col_midlist(spark, tmp_path):
-    """A partition column listed MID-sort_within must not void the
-    in-file ordering: write_lake hoists every partition column to the
-    front of the local sort (within one file the partition value is
-    constant, so hoisting never changes the caller's intended order;
-    r3 ADVICE)."""
-    import pyarrow.parquet as pq
-
-    df = spark.createDataFrame(
-        [(i % 3, 999 - i) for i in range(300)], "part int, doc_id int"
-    )
-    out = str(tmp_path / "lake_mid")
-    write_lake(df, out, partition_by=["part"], target_files=1,
-               sort_within=["doc_id", "part"])
-    files = []
-    for root, _d, fs in os.walk(out):
-        files += [os.path.join(root, f) for f in fs if f.endswith(".parquet")]
-    assert files
-    for f in files:
-        ids = pq.read_table(f, columns=["doc_id"]).column("doc_id").to_pylist()
-        assert ids == sorted(ids), f
 
 
 def test_fan_out_parses_size_suffixed_split_conf(spark):

@@ -392,26 +392,6 @@ def test_ngram_overlap_counts_distinct_ngrams_not_join_rows(spark):
     assert row["n_eval_docs_hit"] == 2
 
 
-def test_lake_repartition_keys_without_target_files(spark, tmp_path):
-    from canal_phoenix_adapter_spark.sinks.lake import write_lake
-
-    df = spark.createDataFrame(
-        [(i % 3, i) for i in range(60)], "k long, v long"
-    )
-    out = str(tmp_path / "lakek")
-    write_lake(df, out, repartition_keys=["k"], sort_within=["k"])
-    import glob
-    import pyarrow.parquet as pq
-
-    # each key's rows are co-located: no key appears in 2+ files
-    seen = {}
-    for f in glob.glob(f"{out}/*.parquet"):
-        for k in set(pq.read_table(f, columns=["k"]).column("k").to_pylist()):
-            assert k not in seen, (k, f, seen[k])
-            seen[k] = f
-    assert set(seen) == {0, 1, 2}
-
-
 def test_minhash_lsh_incremental_only_cross_pairs(spark):
     # docs 1 & 2 near-identical (new batch), doc 10 identical to 1
     # (index): incremental emits (1,10) but never the new-vs-new (1,2)

@@ -1577,6 +1577,74 @@ def test_pruned_store_prune_keeps_shared_buckets_readable(spark, tmp_path):
     assert 7 not in _state_dict(pruned)
 
 
+def _tree(path):
+    """Every file and dir under ``path``, relative to it."""
+    return {os.path.relpath(os.path.join(root, n), path)
+            for root, dirs, files in os.walk(path) for n in dirs + files}
+
+
+def _rows(df):
+    return sorted(map(tuple, df.collect()), key=repr)
+
+
+@pytest.mark.parametrize("pruned_store", [False, True], ids=["plain", "pruned"])
+def test_prune_crash_after_unpublish_leaves_listed_versions_whole(
+    spark, tmp_path, monkeypatch, pruned_store
+):
+    """A prune that crashes after unpublishing its doomed versions and
+    before deleting their data: every version versions() still lists
+    reads back in full, a doomed one raises the not-retained error
+    (never a partial read), and the next prune leaves exactly the tree
+    a prune without the crash leaves, with the state unchanged. On the
+    pruned store epoch 1 folds, so v0 holds bucket dirs nothing
+    retained references."""
+    from canal_phoenix_adapter_spark.streaming import stream as stream_mod
+    from canal_phoenix_adapter_spark.streaming.stream import (
+        PrunedParquetStateStore,
+        apply_cdc_epoch,
+    )
+
+    pruned, full = _pruned_and_full(spark, tmp_path)
+    store = pruned if pruned_store else full
+    epochs = [
+        [(i, "INSERT", i, f"n{i}", float(i), None) for i in range(1, 41)],
+        [(100, "UPDATE", 3, "three", 3.3, None),
+         (101, "DELETE", 4, None, None, None)],
+        [(200, "UPDATE", 5, "five", 5.5, None)],
+        [(300, "INSERT", 77, "new", 7.7, None)],
+    ]
+    for e, rows in enumerate(epochs):
+        with monkeypatch.context() as m:
+            if e == 1:
+                m.setattr(stream_mod, "DELTA_FOLD_FRACTION", 0.0)
+            assert apply_cdc_epoch(store, _batch(spark, rows), e, ["id"])
+    snap = {v: _rows(store.read_version(v)) for v in store.versions()}
+    assert sorted(snap) == [0, 1, 2, 3]
+
+    ref = str(tmp_path / "ref")
+    shutil.copytree(store.path, ref)
+    ref_store = (PrunedParquetStateStore(spark, ref, ["id"], n_buckets=8)
+                 if pruned_store else ParquetStateStore(spark, ref))
+    assert ref_store.prune(keep_last=2) == [0, 1]
+
+    monkeypatch.setattr(stream_mod, "_crashpoint",
+                        _crash_at("prune_unpublished"))
+    with pytest.raises(RuntimeError, match="crash at prune_unpublished"):
+        store.prune(keep_last=2)
+    assert store.versions() == [2, 3]
+    for v in store.versions():
+        assert _rows(store.read_version(v)) == snap[v]
+    for v in (0, 1):
+        with pytest.raises(FileNotFoundError, match="not committed"):
+            store.read_version(v)
+    assert _tree(store.path) > _tree(ref)  # the crash left data to delete
+
+    monkeypatch.setattr(stream_mod, "_crashpoint", lambda name: None)
+    assert store.prune(keep_last=2) == []
+    assert _tree(store.path) == _tree(ref)
+    assert _rows(store.read()) == snap[3]
+
+
 def test_run_cdc_stream_with_pruned_store(spark, tmp_path):
     """The golden scenario through run_cdc_stream(state_buckets=...)
     must land the exact same final state as the default store."""
